@@ -10,6 +10,12 @@ Design rule (SURVEY.md §2.9): every streaming operator is a pure
 ``spark.read`` (batch → exact DuckDB oracle) and ``spark.readStream``
 (micro-batch execution, exercised both by registered queries running
 ``availableNow`` jobs and by the replay harness in tests/).
+
+Streams execute in one place: ``queries._run_available_now`` runs every
+streaming-executed registered query to completion — checkpoint and sink
+temp dirs, backlog-sized state partitions, ``Trigger.AvailableNow``,
+cleanup on success and on failure.  Query bodies never start a stream or
+write session conf themselves.
 """
 
 from . import queries  # noqa: F401

@@ -6,7 +6,8 @@ Two execution shapes:
    transforms.py applied to the batch events table — the DuckDB oracle
    validates the streaming semantics exactly (SURVEY.md §5.2.4).
 2. **Streaming-executed** (rows 61, 65-66): a real ``readStream`` job run
-   with ``Trigger.AvailableNow`` inside the query function — micro-batch
+   with ``Trigger.AvailableNow`` inside the query function, always by the
+   one runner ``_run_available_now`` — micro-batch
    planning, state stores, and sink commit protocol all engaged.  Where the
    final state is deterministic (complete-mode agg, idempotent foreachBatch
    sink) the oracle still checks it exactly; the watermark query is
@@ -28,7 +29,6 @@ import os
 import shutil
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -216,12 +216,13 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.sum(measure(F.col("value")).cast("decimal(27,6)"))
              .cast("double").alias("sum_value"))
     )
-    return _run_to_memory(agg, "complete",
-                          _events_backlog_bytes(sf_dir))
+    return _run_available_now(agg, f"{sf_dir}/events.parquet",
+                              output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
-# Streaming-executed queries: real micro-batch jobs inside the query fn.
+# Streaming-executed queries: real micro-batch jobs inside the query fn,
+# every one run by _run_available_now.
 # ---------------------------------------------------------------------------
 
 def _parse_bytes(v: str) -> int:
@@ -236,108 +237,132 @@ def _parse_bytes(v: str) -> int:
     return int(s)
 
 
-def _events_backlog_bytes(sf_dir: str) -> int:
-    """On-disk size of the staged AvailableNow source (events.parquet) —
-    the KNOWN total backlog of a replay run, used to size state
-    partitions (see _state_shuffle_scope)."""
-    return os.stat(os.path.join(sf_dir, "events.parquet")).st_size
+def _backlog_bytes(path: str) -> int:
+    """On-disk size of a stream source, a single file or a directory
+    tree: the KNOWN total backlog of an AvailableNow replay run."""
+    if os.path.isfile(path):
+        return os.stat(path).st_size
+    return sum(os.stat(os.path.join(d, f)).st_size
+               for d, _dirs, files in os.walk(path) for f in files)
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for dirpath, _dirs, files in os.walk(path):
-        for fn in files:
-            total += os.stat(os.path.join(dirpath, fn)).st_size
-    return total
+def _state_partitions(spark: SparkSession, backlog_bytes: int | None) -> int:
+    """State-store partition count for a stream over ``backlog_bytes``:
+    ``clamp(backlog / advisoryPartitionSizeInBytes, 1,
+    defaultParallelism)``; an unknown backlog gets defaultParallelism
+    (rationale in _run_available_now)."""
+    n_par = spark.sparkContext.defaultParallelism
+    if backlog_bytes is None:
+        return n_par
+    advisory = _parse_bytes(spark.conf.get(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
+    return max(1, min(n_par, -(-backlog_bytes // advisory)))
 
 
-@contextmanager
-def _state_shuffle_scope(spark: SparkSession, backlog_bytes: int | None = None):
-    """Scope ``spark.sql.shuffle.partitions`` to the lifetime of ONE
-    stream run (r12, guide §2.2).
+def _run_available_now(stream: DataFrame, backlog: str | None, *,
+                       output_mode: str = "append",
+                       write_batch=None, read_back=None,
+                       name: str = "stream") -> DataFrame:
+    """Run ``stream`` to completion with ``Trigger.AvailableNow`` and
+    return its result as a checkpointed batch DataFrame: the ONE place a
+    registered query executes a stream.
 
-    Streaming stages have no AQE (Spark disables it for stateful
-    workloads), so a stateful stream mints exactly
-    ``spark.sql.shuffle.partitions`` state-store partitions at checkpoint
-    birth and schedules that many tasks — each a state-store open +
-    delta-file commit (and, for the pandas folds, an Arrow worker
+    Sink: with ``write_batch=None`` the stream lands in a memory sink and
+    the result is that table; its uniquely named temp view is dropped
+    afterwards (r13, guide §5: each leaked view pinned the sink's
+    collected rows for the session's lifetime — the checkpoint owns the
+    data now).  Otherwise ``write_batch(bdf, batch_id, sink)`` is the
+    ``foreachBatch`` body, ``sink`` an empty temp directory, and the
+    result is ``read_back(sink)``.  The checkpoint and sink live under one
+    temp dir named after ``name`` (a state-schema version rides it, see
+    stateful.BURST_STATE_VERSION) and are removed in ``finally`` — a
+    failed stream leaks nothing.
+
+    State partitions (r12/r13, guide §2.2): streaming stages have no AQE
+    (Spark disables it for stateful workloads), so a stateful stream
+    mints exactly ``spark.sql.shuffle.partitions`` state-store partitions
+    at checkpoint birth and schedules that many tasks — each a state-store
+    open + delta-file commit (and, for the pandas folds, an Arrow worker
     round-trip) — EVERY micro-batch.  Inheriting the session's batch
     constant is the wrong number at both ends (Spark's default 200 on an
     untuned session: measured 14.4 s for the heavy-hitters stream at
     sf0.01 vs 3.5 s at 32 vs 1.8 s at 8 — pure task scheduling on a toy
-    batch; a fixed small number would starve a real cluster).
+    batch; a fixed small number would starve a real cluster).  These are
+    REPLAY runs, so the total backlog is known up front: ``backlog`` is
+    the source's path (file or directory) and its on-disk size sets the
+    count via _state_partitions — exactly the coalescing AQE would do for
+    a batch shuffle of the same bytes, applied by hand.  At 100 TB the
+    clamp binds at defaultParallelism; at audit scale it stops minting 32
+    state stores for a 2 MB backlog (measured: addBatch is ~linear in the
+    partition count, ~60-80 ms of pure per-partition overhead).  A
+    genuinely unbounded stream passes None.  Applies only to NEW
+    checkpoints — Spark pins the count inside an existing lineage (every
+    checkpoint here is fresh).  The prior value is restored in
+    ``finally``, before the read-back runs.
 
-    Sizing (r13, guide §2.2 "derive partitioning from input size"): these
-    are ``Trigger.AvailableNow`` REPLAY runs, so the total backlog is
-    known up front — callers pass its on-disk size and the partition
-    count becomes ``clamp(backlog / advisoryPartitionSizeInBytes, 1,
-    defaultParallelism)``: exactly the coalescing AQE would do for a
-    batch shuffle of the same bytes, applied by hand because streaming
-    has no AQE.  At 100 TB the clamp binds at defaultParallelism (the r12
-    behavior, growing with the cluster); at audit scale it stops minting
-    32 state stores for a 2 MB backlog (measured: addBatch is ~linear in
-    the partition count, ~60-80 ms of pure per-partition overhead).
-    Callers with no known backlog (a genuinely unbounded stream) pass
-    None and get defaultParallelism; deployments with hotter key
-    cardinality set ``spark.mu_swarm.stream.statePartitions`` explicitly
-    — the explicit conf always wins.
-    Applies only to NEW checkpoints — Spark pins the count inside an
-    existing checkpoint lineage (all checkpoints here are fresh mkdtemp).
-    Conf restored in ``finally`` — the rollup partition-overwrite-mode
-    leak (fixed earlier this round) is the cautionary tale for scoped
-    session conf.
-
-    SERIAL-EXECUTION ASSUMPTION (r12 ADVICE): this mutates the
-    session-global ``spark.sql.shuffle.partitions`` for the stream run's
+    SERIAL-EXECUTION ASSUMPTION (r12 ADVICE): the count is set on the
+    session-global ``spark.sql.shuffle.partitions`` for the stream's
     lifetime — safe under the serial grading driver and the serial
     bench/test harnesses, but a BATCH query planned concurrently in the
-    same session would pick up the streaming value.  If concurrent use
-    ever becomes a supported mode, scope via a cloned session
-    (``spark.newSession()``) instead."""
+    same session would pick up the streaming value.  A child session
+    (``spark.newSession()``) is not a way out: it does not inherit the
+    parent's runtime SQL conf, and the parent's listeners and catalog
+    never see its streams."""
+    spark = stream.sparkSession
+    root = tempfile.mkdtemp(prefix=f"spark_graft_{name}_")
+    sink = os.path.join(root, "sink")
+    os.makedirs(sink)
+    writer = (stream.writeStream.outputMode(output_mode)
+              .option("checkpointLocation", os.path.join(root, "ckpt")))
+    table = None
+    if write_batch is None:
+        table = f"t_{uuid.uuid4().hex[:12]}"
+        writer = writer.format("memory").queryName(table)
+    else:
+        writer = writer.foreachBatch(
+            lambda bdf, batch_id: write_batch(bdf, batch_id, sink))
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    explicit = spark.conf.get("spark.mu_swarm.stream.statePartitions", None)
-    if explicit is not None:
-        target = explicit
-    elif backlog_bytes is not None:
-        advisory = _parse_bytes(spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-        n_par = spark.sparkContext.defaultParallelism
-        target = str(max(1, min(n_par, -(-backlog_bytes // advisory))))
-    else:
-        target = str(spark.sparkContext.defaultParallelism)
-    spark.conf.set(key, target)
     try:
-        yield
+        spark.conf.set(key, str(_state_partitions(
+            spark, None if backlog is None else _backlog_bytes(backlog))))
+        try:
+            writer.trigger(availableNow=True).start().awaitTermination()
+        finally:
+            spark.conf.set(key, prev)
+        out = spark.table(table) if table else read_back(sink)
+        return out.localCheckpoint(eager=True)
     finally:
-        spark.conf.set(key, prev)
+        if table is not None:
+            spark.catalog.dropTempView(table)
+        shutil.rmtree(root, ignore_errors=True)
 
 
-def _run_to_memory(df: DataFrame, output_mode: str,
-                   backlog_bytes: int | None = None) -> DataFrame:
-    """Run a streaming DF to a memory sink with AvailableNow; return the
-    final table as a batch DataFrame."""
-    name = f"t_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    with _state_shuffle_scope(df.sparkSession, backlog_bytes):
-        q = (
-            df.writeStream.format("memory").queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    spark = df.sparkSession
-    out = spark.table(name).localCheckpoint(eager=True)  # detach from sink
-    # Drop the sink's temp view (r13, guide §5): each run minted a
-    # uniquely-named memory-sink table that stayed registered for the
-    # session's lifetime, pinning the sink's collected rows — a marathon
-    # session leaked one result-sized block per stream run.  The
-    # checkpoint above owns the data now.
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+def _run_snapshots(stream: DataFrame, backlog: str, key: str, finish,
+                   name: str = "snapshots") -> DataFrame:
+    """Run a stateful update-mode fold whose output rows are per-``key``
+    state snapshots.  Each batch lands idempotently in its own
+    batchId-addressed directory, tagged with ``batch_id``; the read-back
+    keeps each key's LATEST snapshot (update semantics — only touched keys
+    emit per batch) and returns ``finish`` of it."""
+    from pyspark.sql import Window as W
+
+    spark = stream.sparkSession
+
+    def write_batch(bdf: DataFrame, batch_id: int, sink: str) -> None:
+        bdf.withColumn("batch_id", F.lit(batch_id)) \
+           .write.mode("overwrite").parquet(
+               os.path.join(sink, f"batch={batch_id}"))
+
+    def read_back(sink: str) -> DataFrame:
+        snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
+        return finish(
+            snaps.withColumn("mx", F.max("batch_id").over(W.partitionBy(key)))
+            .filter(F.col("batch_id") == F.col("mx")))
+
+    return _run_available_now(stream, backlog, output_mode="update",
+                              write_batch=write_batch, read_back=read_back,
+                              name=name)
 
 
 @query("q_stream_output_modes", oracle=_TUMBLING_SQL)
@@ -349,8 +374,9 @@ def q_stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Append/update-mode emission sequences are asserted in
     tests/test_streaming.py (they depend on batch boundaries)."""
     stream = X.stream_events(spark, sf_dir)
-    return _run_to_memory(X.tumbling_counts(stream), "complete",
-                          _events_backlog_bytes(sf_dir))
+    return _run_available_now(X.tumbling_counts(stream),
+                              f"{sf_dir}/events.parquet",
+                              output_mode="complete")
 
 
 @query("q_stream_watermark")
@@ -365,7 +391,7 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    return _run_to_memory(agg, "append", _events_backlog_bytes(sf_dir))
+    return _run_available_now(agg, f"{sf_dir}/events.parquet")
 
 
 @query("q_stream_foreachbatch", oracle=f"""
@@ -382,32 +408,22 @@ def q_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mode=overwrite → idempotent under retries); reading the sink back and
     re-aggregating must reproduce the batch answer exactly.
     """
-    sink = tempfile.mkdtemp(prefix="spark_graft_febsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, batch_id: int, sink: str) -> None:
         bdf.write.mode("overwrite").parquet(os.path.join(sink, f"batch={batch_id}"))
 
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            X.stream_events(spark, sf_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def read_back(sink: str) -> DataFrame:
+        return (
+            spark.read.parquet(os.path.join(sink, "batch=*"))
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum(measure(F.col("value")).cast("decimal(27,6)"))
+                 .cast("double").alias("sum_value"))
         )
-        q.awaitTermination()
-    back = spark.read.parquet(os.path.join(sink, "batch=*"))
-    out = (
-        back.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(measure(F.col("value")).cast("decimal(27,6)"))
-             .cast("double").alias("sum_value"))
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+
+    return _run_available_now(
+        X.stream_events(spark, sf_dir, max_files_per_trigger=1),
+        f"{sf_dir}/events.parquet",
+        write_batch=write_batch, read_back=read_back)
 
 
 # The rollup store's declared layout (class K: an all-empty-batch run
@@ -425,27 +441,12 @@ def rollup_upsert(spark: SparkSession, store: str):
     so a retried batch converges instead of double-counting (directly
     exercised by tests/test_streaming.py's replay-retry test).
 
-    HARD REQUIREMENT enforced here, not at the call site: the session must
-    have ``spark.sql.sources.partitionOverwriteMode=dynamic``.  Under the
-    default (static) mode the ``mode("overwrite")`` below would wipe EVERY
-    ``event_date`` partition of the store, not just the days in the batch —
-    silently deleting untouched days.  Each upsert call re-checks the conf
-    (it is session-mutable) and refuses to write rather than corrupt."""
-
-    def _require_dynamic_overwrite() -> None:
-        mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        if mode.lower() != "dynamic":
-            raise RuntimeError(
-                "rollup_upsert requires "
-                "spark.sql.sources.partitionOverwriteMode=dynamic "
-                f"(got {mode!r}); refusing to overwrite the rollup store — "
-                "static mode would delete day-partitions the batch didn't "
-                "touch."
-            )
+    The write pins ``partitionOverwriteMode=dynamic`` on itself, so it
+    rewrites only the days in the batch whatever the session's mode: a
+    static overwrite would wipe EVERY ``event_date`` partition of the
+    store, silently deleting untouched days."""
 
     def upsert(bdf: DataFrame, batch_id: int) -> None:
-        _require_dynamic_overwrite()
         # Eager-checkpoint the sketch-sized partial: it is consumed TWICE
         # per batch (the touched-days collect and the merged write) and
         # would otherwise re-aggregate the whole batch for each (r13,
@@ -476,8 +477,9 @@ def rollup_upsert(spark: SparkSession, store: str):
             except Exception:  # first batch: store doesn't exist yet
                 merged = part
             (merged.repartition("event_date")
-             .write.mode("overwrite").partitionBy("event_date")
-             .parquet(store))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("event_date").parquet(store))
         finally:
             unpersist_cp(part)
 
@@ -506,12 +508,6 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-exact.  At 100 TB the store stays one row per
     (day, hour, type, batch) and each trigger touches only the days in
     that batch — never a full-store rewrite."""
-    run = uuid.uuid4().hex[:8]
-    src = tempfile.mkdtemp(prefix=f"spark_graft_rollup_src_{run}_")
-    store = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_rollup_store_{run}")
-    ckpt = tempfile.mkdtemp(prefix=f"spark_graft_rollup_ckpt_{run}_")
-
     # Stage the source as TWO file groups so the rollup genuinely
     # increments across micro-batches (maxFilesPerTrigger=1 → ≥2
     # triggers).  ONE pass (r13, guide §1.2 "don't compute things
@@ -523,52 +519,28 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..core.tables import observed_time
     ev = observed_time(load(spark, sf_dir, "events"))  # class I: the
     # store is day-partitioned — an unstamped row has no partition
-    (ev.withColumn("half", F.col("event_id") % 2)
-     .write.mode("overwrite")  # mkdtemp pre-created (empty) src
-     .option("partitionOverwriteMode", "static")
-     .partitionBy("half").parquet(src))
-
-    # Session-mutable conf: set dynamic for the upsert's partition-scoped
-    # overwrites, but RESTORE the prior value afterwards — leaking
-    # dynamic mode into the shared session makes every later fixed-path
-    # ``mode("overwrite").partitionBy(...)`` of an EMPTY source rewrite
-    # zero partitions and silently serve stale data (found r12: flaky
-    # q_sink_triples empty-facts parity).
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    src = tempfile.mkdtemp(prefix="spark_graft_rollup_src_")
     try:
-        schema = ev.schema
-        upsert = rollup_upsert(spark, store)
-        # class K: pre-seed the store so it exists (with zero partitions)
-        # even when every micro-batch is empty and the upsert never writes.
-        (spark.createDataFrame([], ROLLUP_STORE_SCHEMA)
-         .write.mode("overwrite").partitionBy("event_date").parquet(store))
-
-        with _state_shuffle_scope(spark, _dir_bytes(src)):
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(os.path.join(src, "half=*"))
-                .writeStream.foreachBatch(upsert)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        out = (
-            spark.read.schema(ROLLUP_STORE_SCHEMA).parquet(store)
-            .groupBy("event_date", "hour", "event_type")
-            .agg(F.sum("n").cast("long").alias("n"))
-            .localCheckpoint(eager=True)
-        )
+        (ev.withColumn("half", F.col("event_id") % 2)
+         .write.mode("overwrite")  # mkdtemp pre-created (empty) src
+         .option("partitionOverwriteMode", "static")
+         .partitionBy("half").parquet(src))
+        stream = (spark.readStream.schema(ev.schema)
+                  .option("maxFilesPerTrigger", 1)
+                  .parquet(os.path.join(src, "half=*")))
+        # The store is the runner's (empty) sink dir, so it exists even
+        # when every micro-batch is empty and the upsert never writes
+        # (class K); every read carries ROLLUP_STORE_SCHEMA.
+        return _run_available_now(
+            stream, src, name="rollup",
+            write_batch=lambda bdf, batch_id, store:
+                rollup_upsert(spark, store)(bdf, batch_id),
+            read_back=lambda store: (
+                spark.read.schema(ROLLUP_STORE_SCHEMA).parquet(store)
+                .groupBy("event_date", "hour", "event_type")
+                .agg(F.sum("n").cast("long").alias("n"))))
     finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode)
-    for d in (src, store, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return out
-
+        shutil.rmtree(src, ignore_errors=True)
 
 
 from ..operators.analytics import EVENT_FINGERPRINT_ORACLE_SQL
@@ -592,10 +564,7 @@ def q_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.analytics import event_row_fingerprint
 
-    sink = tempfile.mkdtemp(prefix="spark_graft_fpsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_fpckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, batch_id: int, sink: str) -> None:
         part = (
             bdf.select(F.date_format("ts", "yyyy-MM-dd").alias("day"),
                        event_row_fingerprint().alias("rh"))
@@ -606,26 +575,19 @@ def q_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         part.write.mode("overwrite").parquet(
             os.path.join(sink, f"batch={batch_id}"))
 
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            X.stream_events(spark, sf_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def read_back(sink: str) -> DataFrame:
+        return (
+            spark.read.parquet(os.path.join(sink, "batch=*"))
+            .groupBy("day")
+            .agg(F.sum("n_part").cast("long").alias("n_rows"),
+                 F.sum("fp_part").cast("decimal(38,0)").cast("string")
+                 .alias("fingerprint"))
         )
-        q.awaitTermination()
-    back = spark.read.parquet(os.path.join(sink, "batch=*"))
-    out = (
-        back.groupBy("day")
-        .agg(F.sum("n_part").cast("long").alias("n_rows"),
-             F.sum("fp_part").cast("decimal(38,0)").cast("string")
-             .alias("fingerprint"))
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+
+    return _run_available_now(
+        X.stream_events(spark, sf_dir, max_files_per_trigger=1),
+        f"{sf_dir}/events.parquet",
+        write_batch=write_batch, read_back=read_back)
 
 
 @query("q_stream_heavy_hitters")
@@ -646,45 +608,16 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     MG has no DuckDB twin); tests/test_streaming.py replays multi-batch
     and asserts the final state equals the batch sketch EXACTLY (same
     per-shard fold order), plus the MG guarantee against exact counts."""
-    from .stateful import mg_sketch_stateful
-
-    sink = tempfile.mkdtemp(prefix="spark_graft_mgsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_mgckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            mg_sketch_stateful(X.stream_events(spark, sf_dir,
-                                               max_files_per_trigger=1))
-            .writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from pyspark.sql import Window as W
-
     from ..operators.sketches import mg_merge
+    from .stateful import MG_SNAPSHOT_SENTINEL, mg_sketch_stateful
 
-    from .stateful import MG_SNAPSHOT_SENTINEL
-
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (
-        snaps.withColumn(
-            "mx", F.max("batch_id").over(W.partitionBy("shard")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        .filter(F.col("item") != MG_SNAPSHOT_SENTINEL)
-        .select("shard", "item", "est")
-    )
-    out = mg_merge(latest).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _run_snapshots(
+        mg_sketch_stateful(X.stream_events(spark, sf_dir,
+                                           max_files_per_trigger=1)),
+        f"{sf_dir}/events.parquet", "shard",
+        lambda latest: mg_merge(
+            latest.filter(F.col("item") != MG_SNAPSHOT_SENTINEL)
+            .select("shard", "item", "est")))
 
 
 from ..operators.timeseries import HOLT_ORACLE_SQL  # noqa: E402
@@ -712,34 +645,6 @@ def q_stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.timeseries import _HOLT_ALPHA, _HOLT_BETA
     from .stateful import holt_stateful
 
-    sink = tempfile.mkdtemp(prefix="spark_graft_holtsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_holtckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            holt_stateful(X.stream_events(spark, sf_dir,
-                                          max_files_per_trigger=1)
-                          .filter(F.col('event_type').isNotNull()))
-            .writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from pyspark.sql import Window as W
-
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (
-        snaps.withColumn(
-            "mx", F.max("batch_id").over(W.partitionBy("event_type")))
-        .filter(F.col("batch_id") == F.col("mx"))
-    )
     a, bb = _HOLT_ALPHA, _HOLT_BETA
     y = F.col("pending_n").cast("double")
     first = F.col("n_complete") == 0
@@ -747,16 +652,17 @@ def q_stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
         a * y + (1 - a) * (F.col("l") + F.col("b")))
     trend = F.when(first, F.lit(0.0)).otherwise(
         bb * (level - F.col("l")) + (1 - bb) * F.col("b"))
-    out = latest.select(
-        "event_type",
-        (F.col("n_complete") + 1).cast("long").alias("n_hours"),
-        level.alias("level"),
-        trend.alias("trend"),
-        (level + trend).alias("forecast_next"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _run_snapshots(
+        holt_stateful(X.stream_events(spark, sf_dir, max_files_per_trigger=1)
+                      .filter(F.col('event_type').isNotNull())),
+        f"{sf_dir}/events.parquet", "event_type",
+        lambda latest: latest.select(
+            "event_type",
+            (F.col("n_complete") + 1).cast("long").alias("n_hours"),
+            level.alias("level"),
+            trend.alias("trend"),
+            (level + trend).alias("forecast_next"),
+        ))
 
 
 from ..operators.sketches import _KMV_SQL  # noqa: E402
@@ -785,10 +691,7 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches and asserts merge ≡ one-shot exactly."""
     from ..operators.sketches import kmv_bottomk, kmv_finalize, kmv_priority
 
-    sink = tempfile.mkdtemp(prefix="spark_graft_kmvsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_kmvckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
+    def write_batch(bdf: DataFrame, batch_id: int, sink: str) -> None:
         b = bdf.select("event_type", "event_id").persist()
         kmv_bottomk(
             b.select("event_type", kmv_priority().alias("pri")),
@@ -808,31 +711,24 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         b.unpersist()
 
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            X.stream_events(spark, sf_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def read_back(sink: str) -> DataFrame:
+        merged = kmv_bottomk(
+            spark.read.parquet(os.path.join(sink, "kmv/batch=*")),
+            ["event_type"],
         )
-        q.awaitTermination()
+        ex = (
+            spark.read.parquet(os.path.join(sink, "bitmap/batch=*"))
+            .groupBy("event_type", "word")
+            .agg(F.bit_or("bits").alias("bits"))
+            .groupBy("event_type")
+            .agg(F.sum(F.bit_count("bits")).alias("n_distinct_exact"))
+        )
+        return kmv_finalize(merged, ex)
 
-    merged = kmv_bottomk(
-        spark.read.parquet(os.path.join(sink, "kmv/batch=*")),
-        ["event_type"],
-    )
-    ex = (
-        spark.read.parquet(os.path.join(sink, "bitmap/batch=*"))
-        .groupBy("event_type", "word")
-        .agg(F.bit_or("bits").alias("bits"))
-        .groupBy("event_type")
-        .agg(F.sum(F.bit_count("bits")).alias("n_distinct_exact"))
-    )
-    out = kmv_finalize(merged, ex).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _run_available_now(
+        X.stream_events(spark, sf_dir, max_files_per_trigger=1),
+        f"{sf_dir}/events.parquet",
+        write_batch=write_batch, read_back=read_back)
 
 
 @query("q_stream_cdc_apply", oracle="""
@@ -871,35 +767,26 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full changelog each batch).  tests/test_streaming.py replays
     ordered micro-batches and asserts the incremental result matches
     the one-shot application exactly."""
-    state_dir = tempfile.mkdtemp(prefix="spark_graft_cdcstate_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_cdcckpt_")
     # class G: CDC is keyed — a NULL-key change has no identity to
     # merge on (the full-outer MERGE would never match it and each
     # batch would accrete a fresh null row).
-    result = _run_cdc_apply(
-        spark,
+    return _run_cdc_apply(
         X.stream_events(spark, sf_dir).filter(F.col('user_id').isNotNull()),
-        state_dir, ckpt,
-        backlog_bytes=_events_backlog_bytes(sf_dir))
-    out = result.localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(state_dir, ignore_errors=True)
-    return out
+        f"{sf_dir}/events.parquet")
 
 
-def _run_cdc_apply(spark: SparkSession, stream: DataFrame,
-                   state_dir: str, ckpt: str,
-                   batch_ids: list | None = None,
-                   backlog_bytes: int | None = None) -> DataFrame:
-    """Run the CDC-apply loop on ``stream``; returns the final live view.
-    Split out so the replay test can drive it with its own multi-batch
+def _run_cdc_apply(stream: DataFrame, backlog: str | None = None,
+                   batch_ids: list | None = None) -> DataFrame:
+    """Run the CDC-apply loop on ``stream``; returns the final live view,
+    checkpointed (the snapshot directories are gone on return).  Split out so the replay test can drive it with its own multi-batch
     file source (``batch_ids`` collects observed batch ids so the test
     can assert the run was genuinely incremental)."""
     from pyspark.sql import Window
 
+    spark = stream.sparkSession
     version = [0]  # ping-pong snapshot pointer (driver-side, per query)
 
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
+    def apply_batch(bdf: DataFrame, batch_id: int, state_dir: str) -> None:
         if batch_ids is not None:
             batch_ids.append(batch_id)
         w = (Window.partitionBy("user_id")
@@ -937,20 +824,16 @@ def _run_cdc_apply(spark: SparkSession, stream: DataFrame,
             os.path.join(state_dir, f"v{1 - version[0]}"))
         version[0] = 1 - version[0]
 
-    with _state_shuffle_scope(spark, backlog_bytes):
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def read_back(state_dir: str) -> DataFrame:
+        final = spark.read.parquet(os.path.join(state_dir, f"v{version[0]}"))
+        return final.filter(F.col("op") != "delete").select(
+            "user_id",
+            F.col("event_id").alias("last_event_id"),
+            F.col("value").alias("latest_value"),
         )
-        q.awaitTermination()
-    final = spark.read.parquet(os.path.join(state_dir, f"v{version[0]}"))
-    return final.filter(F.col("op") != "delete").select(
-        "user_id",
-        F.col("event_id").alias("last_event_id"),
-        F.col("value").alias("latest_value"),
-    )
+
+    return _run_available_now(stream, backlog, write_batch=apply_batch,
+                              read_back=read_back)
 
 
 from ..operators.timeseries import HW_ORACLE_SQL  # noqa: E402
@@ -980,38 +863,6 @@ def q_stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _HW_ALPHA, _HW_BETA, _HW_GAMMA, _HW_M)
     from .stateful import hw_stateful
 
-    sink = tempfile.mkdtemp(prefix="spark_graft_hwsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_hwckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            hw_stateful(X.stream_events(spark, sf_dir,
-                                        max_files_per_trigger=1)
-                        .filter(F.col('event_type').isNotNull()))
-            .writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from pyspark.sql import Window as W
-
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (
-        snaps.withColumn(
-            "mx", F.max("batch_id").over(W.partitionBy("event_type")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        # Series below 2m complete days never leave the init buffer and
-        # would close at n <= 2m < 2m+1 — the batch HAVING bound.
-        .filter((F.col("n_complete") >= 2 * _HW_M)
-                & (F.col("pending_day") >= 0))
-    )
     a, bb, g = _HW_ALPHA, _HW_BETA, _HW_GAMMA
     y = F.col("pending_n").cast("double")
     s1 = F.element_at("s", 1)
@@ -1020,17 +871,22 @@ def q_stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = g * (y - lt) + (1 - g) * s1
     s_next = F.element_at(
         F.concat(F.slice("s", 2, _HW_M - 1), F.array(st)), 1)
-    out = latest.select(
-        "event_type",
-        (F.col("n_complete") + 1).cast("long").alias("n_days"),
-        lt.alias("level"),
-        bt.alias("trend"),
-        s_next.alias("season_next"),
-        (lt + bt + s_next).alias("forecast_next"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _run_snapshots(
+        hw_stateful(X.stream_events(spark, sf_dir, max_files_per_trigger=1)
+                    .filter(F.col('event_type').isNotNull())),
+        f"{sf_dir}/events.parquet", "event_type",
+        # Series below 2m complete days never leave the init buffer and
+        # would close at n <= 2m < 2m+1 — the batch HAVING bound.
+        lambda latest: latest.filter((F.col("n_complete") >= 2 * _HW_M)
+                                     & (F.col("pending_day") >= 0))
+        .select(
+            "event_type",
+            (F.col("n_complete") + 1).cast("long").alias("n_days"),
+            lt.alias("level"),
+            bt.alias("trend"),
+            s_next.alias("season_next"),
+            (lt + bt + s_next).alias("forecast_next"),
+        ))
 
 
 from ..operators.timeseries import q_ts_pattern_match as _pat_batch  # noqa: E402,F401
@@ -1055,42 +911,15 @@ def q_stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest batch id."""
     from .stateful import pattern_stateful
 
-    sink = tempfile.mkdtemp(prefix="spark_graft_patsink_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_patckpt_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            pattern_stateful(
-                X.stream_events(spark, sf_dir, max_files_per_trigger=1)
-                .filter(F.col("user_id").isNotNull()))
-            .writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from pyspark.sql import Window as W
-
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (
-        snaps.withColumn(
-            "mx", F.max("batch_id").over(W.partitionBy("user_id")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        .filter(F.col("n_purchases") > 0)
-    )
-    out = latest.select(
-        "user_id", "n_purchases", "n_matched",
-        (F.col("n_matched") > 0).alias("converted"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    return _run_snapshots(
+        pattern_stateful(
+            X.stream_events(spark, sf_dir, max_files_per_trigger=1)
+            .filter(F.col("user_id").isNotNull())),
+        f"{sf_dir}/events.parquet", "user_id",
+        lambda latest: latest.filter(F.col("n_purchases") > 0).select(
+            "user_id", "n_purchases", "n_matched",
+            (F.col("n_matched") > 0).alias("converted"),
+        ))
 
 
 @query("q_stream_burstiness", oracle=_ORACLE["q_ts_burstiness"])
@@ -1109,49 +938,22 @@ def q_stream_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     user, each batch shuffles only its own rows on the user key."""
     from .stateful import BURST_STATE_VERSION, burstiness_stateful
 
-    # The state version rides the checkpoint path (stateful.py's
-    # BURST_STATE_VERSION note): a schema-widening upgrade starts a fresh
-    # checkpoint lineage instead of dying at state restore.
-    sink = tempfile.mkdtemp(prefix="spark_graft_burstsink_")
-    ckpt = tempfile.mkdtemp(
-        prefix=f"spark_graft_burstckpt_v{BURST_STATE_VERSION}_")
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.withColumn("batch_id", F.lit(batch_id)) \
-           .write.mode("overwrite").parquet(
-               os.path.join(sink, f"batch={batch_id}"))
-
-    with _state_shuffle_scope(spark, _events_backlog_bytes(sf_dir)):
-        q = (
-            burstiness_stateful(
-                X.stream_events(spark, sf_dir, max_files_per_trigger=1))
-            .writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from pyspark.sql import Window as W
-
-    snaps = spark.read.parquet(os.path.join(sink, "batch=*"))
-    latest = (
-        snaps.withColumn(
-            "mx", F.max("batch_id").over(W.partitionBy("user_id")))
-        .filter(F.col("batch_id") == F.col("mx"))
-        .filter(F.col("n_gaps") >= 2)
-    )
     # Mirror the batch query's final expressions EXACTLY (same double
     # ops in the same shape on the same exact inputs).
     s1d = F.col("s1").cast("double")
     s2d = F.col("s2").cast("decimal(38,0)").cast("double")
     mu = s1d / F.col("n_gaps")
     sigma = F.sqrt(s2d / F.col("n_gaps") - mu * mu)
-    out = latest.select(
-        "user_id", "n_gaps", mu.alias("mean_gap_us"),
-        (F.round((sigma - mu) / (sigma + mu), 9) + 0.0)
-        .alias("burstiness"),
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sink, ignore_errors=True)
-    return out
+    # The state version rides the checkpoint path (stateful.py's
+    # BURST_STATE_VERSION note): a schema-widening upgrade starts a fresh
+    # checkpoint lineage instead of dying at state restore.
+    return _run_snapshots(
+        burstiness_stateful(
+            X.stream_events(spark, sf_dir, max_files_per_trigger=1)),
+        f"{sf_dir}/events.parquet", "user_id",
+        lambda latest: latest.filter(F.col("n_gaps") >= 2).select(
+            "user_id", "n_gaps", mu.alias("mean_gap_us"),
+            (F.round((sigma - mu) / (sigma + mu), 9) + 0.0)
+            .alias("burstiness"),
+        ),
+        name=f"burst_v{BURST_STATE_VERSION}")

@@ -50,20 +50,26 @@ def stream_events(spark: SparkSession, sf_dir: str,
     # from a foreign cwd: ModuleNotFoundError inside the state fold.
     _ship_package(spark)
     schema = _read_events(spark, sf_dir).schema
-    # File stream sources need a DIRECTORY; stage one with a symlink to the
-    # (read-only) testdata file.
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream_src_" + sf_dir.strip("/").replace("/", "_"),
-    )
-    os.makedirs(staged, exist_ok=True)
-    link = os.path.join(staged, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(f"{sf_dir}/events.parquet", link)
+    # File stream sources need a DIRECTORY.  A directory-shaped
+    # events.parquet streams as is; a single file is staged in a directory
+    # holding a symlink to the (read-only) testdata file.  Never symlink a
+    # directory: the file source does not descend into the link and
+    # streams 0 rows.
+    src = f"{sf_dir}/events.parquet"
+    if not os.path.isdir(src):
+        staged = os.path.join(
+            tempfile.gettempdir(),
+            "spark_graft_stream_src_" + sf_dir.strip("/").replace("/", "_"),
+        )
+        os.makedirs(staged, exist_ok=True)
+        link = os.path.join(staged, "events.parquet")
+        if not os.path.exists(link):
+            os.symlink(src, link)
+        src = staged
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = _normalize_events_ts(reader.parquet(staged))
+    out = _normalize_events_ts(reader.parquet(src))
     if repartition_to is not None:
         out = out.repartition(repartition_to)
     return out

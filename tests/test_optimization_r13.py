@@ -1,7 +1,8 @@
 """Focused pins for the r13 optimization internals.
 
 Each test pins ONE mechanism this round changed:
-- backlog-sized streaming state partitions (_state_shuffle_scope),
+- backlog-sized streaming state partitions (_state_partitions, applied
+  by the stream runner _run_available_now),
 - the per-session, freshness-keyed base-table plan cache (load),
 - the one-SQL-string cosine fast path's bit-identity with the Column path,
 - deterministic checkpoint unpersist (pagerank loop, memory-sink views).
@@ -18,34 +19,34 @@ from pyspark.sql import functions as F
 from mu_swarm_logger_service_spark.core import tables as T
 from mu_swarm_logger_service_spark.core.registry import QUERIES
 from mu_swarm_logger_service_spark.streaming.queries import (
-    _parse_bytes, _state_shuffle_scope)
+    _parse_bytes, _run_available_now, _state_partitions)
 
 
-def test_state_scope_sizes_partitions_from_backlog(spark):
-    """clamp(backlog/advisory, 1, defaultParallelism); explicit conf wins;
-    None backlog falls back to defaultParallelism; prior value restored."""
+def test_state_scope_sizes_partitions_from_backlog(spark, tmp_path):
+    """clamp(backlog/advisory, 1, defaultParallelism); None backlog falls
+    back to defaultParallelism; the runner applies the count while the
+    stream runs and restores the prior value."""
     key = "spark.sql.shuffle.partitions"
     n_par = spark.sparkContext.defaultParallelism
     advisory = _parse_bytes(spark.conf.get(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
     prev = spark.conf.get(key)
 
-    with _state_shuffle_scope(spark, 1):  # 1-byte backlog -> 1 partition
-        assert spark.conf.get(key) == "1"
-    assert spark.conf.get(key) == prev
+    assert _state_partitions(spark, 1) == 1  # 1-byte backlog
+    assert _state_partitions(spark, advisory * n_par * 100) == n_par  # clamp
+    assert _state_partitions(spark, None) == n_par  # unknown backlog
 
-    with _state_shuffle_scope(spark, advisory * n_par * 100):  # clamp
-        assert spark.conf.get(key) == str(n_par)
-
-    with _state_shuffle_scope(spark, None):  # unknown backlog
-        assert spark.conf.get(key) == str(n_par)
-
-    spark.conf.set("spark.mu_swarm.stream.statePartitions", "7")
-    try:
-        with _state_shuffle_scope(spark, 1):  # explicit conf beats backlog
-            assert spark.conf.get(key) == "7"
-    finally:
-        spark.conf.unset("spark.mu_swarm.stream.statePartitions")
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    seen = []
+    out = _run_available_now(
+        spark.readStream.schema("id long").parquet(src),
+        src,  # a few-KB backlog -> 1 partition
+        write_batch=lambda bdf, batch_id, sink: seen.append(
+            spark.conf.get(key)),
+        read_back=lambda sink: spark.range(1))
+    assert out.count() == 1
+    assert seen and set(seen) == {"1"}
     assert spark.conf.get(key) == prev
 
 
@@ -130,10 +131,15 @@ def test_pagerank_unpersists_loop_checkpoints(spark, sf_dir):
 
 
 def test_memory_sink_view_dropped(spark, sf_dir):
-    """_run_to_memory must not leave its uniquely-named memory-sink temp
-    view registered (each leaked view pins the sink's collected rows)."""
-    before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
-    assert QUERIES["q_stream_output_modes"](spark, sf_dir).count() > 0
-    after = {t.name for t in spark.catalog.listTables() if t.isTemporary}
-    new_views = {v for v in after - before if v.startswith("t_")}
-    assert not new_views, f"leaked memory-sink views: {new_views}"
+    """The stream runner must not leave its uniquely-named memory-sink
+    temp view registered (each leaked view pins the sink's collected rows)
+    — for every query that streams into a memory sink."""
+    for name in ("q_stream_output_modes", "q_stream_static_join",
+                 "q_stream_watermark"):
+        before = {t.name for t in spark.catalog.listTables()
+                  if t.isTemporary}
+        assert QUERIES[name](spark, sf_dir).count() > 0, name
+        after = {t.name for t in spark.catalog.listTables()
+                 if t.isTemporary}
+        new_views = {v for v in after - before if v.startswith("t_")}
+        assert not new_views, f"{name} leaked memory-sink views: {new_views}"

@@ -362,7 +362,6 @@ def test_rollup_upsert_is_idempotent_under_retry(spark, sf_dir):
 
     store = os.path.join(
         tempfile.gettempdir(), f"rollup_retry_{uuid.uuid4().hex[:8]}")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ev = load(spark, sf_dir, "events")
     b0 = ev.filter(F.col("event_id") % 2 == 0)
     b1 = ev.filter(F.col("event_id") % 2 == 1)
@@ -385,22 +384,33 @@ def test_rollup_upsert_is_idempotent_under_retry(spark, sf_dir):
     assert got == want
 
 
-def test_rollup_upsert_refuses_static_overwrite_mode(spark, sf_dir):
-    """Without partitionOverwriteMode=dynamic the upsert's
-    mode("overwrite") would wipe untouched day-partitions; the upsert
-    must detect the misconfigured session and refuse instead of writing."""
-    from mu_swarm_logger_service_spark.streaming.queries import rollup_upsert
+def test_rollup_upsert_keeps_untouched_days_under_static_mode(spark, sf_dir):
+    """The upsert pins dynamic partition overwrite on its own write: under
+    a session-wide static mode, a day-partition the batch does not touch
+    must survive (a static overwrite would wipe it)."""
+    import datetime as dt
+
+    from mu_swarm_logger_service_spark.streaming.queries import (
+        ROLLUP_STORE_SCHEMA, rollup_upsert)
 
     store = os.path.join(
         tempfile.gettempdir(), f"rollup_static_{uuid.uuid4().hex[:8]}")
     key = "spark.sql.sources.partitionOverwriteMode"
     prior = spark.conf.get(key, "static")
+    (spark.createDataFrame(
+        [(dt.datetime(1999, 1, 1, 5), "seed", 7, 99, "1999-01-01")],
+        ROLLUP_STORE_SCHEMA)
+     .write.partitionBy("event_date").parquet(store))
     spark.conf.set(key, "static")
     try:
-        up = rollup_upsert(spark, store)
-        with pytest.raises(RuntimeError, match="partitionOverwriteMode"):
-            up(load(spark, sf_dir, "events").limit(10), 0)
-        assert not os.path.exists(store), "refusal must not create the store"
+        batch = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+        rollup_upsert(spark, store)(batch, 0)
+        got = spark.read.schema(ROLLUP_STORE_SCHEMA).parquet(store)
+        seeded = got.filter(F.col("event_date") == "1999-01-01").collect()
+        assert [(r.event_type, r.n, r.batch_id) for r in seeded] == [
+            ("seed", 7, 99)]
+        assert got.filter(F.col("batch_id") == 0) \
+            .agg(F.sum("n")).first()[0] == batch.count()
     finally:
         spark.conf.set(key, prior)
         shutil.rmtree(store, ignore_errors=True)
@@ -679,12 +689,9 @@ def test_cdc_apply_across_batches_equals_batch(spark, sf_dir, replay):
     from pyspark.sql import Window
 
     src, schema = replay
-    state = tempfile.mkdtemp(prefix="cdc_apply_state_")
-    ckpt = tempfile.mkdtemp(prefix="cdc_apply_ckpt_")
     batch_ids = []
-    got = _run_cdc_apply(
-        spark, _read_replay(spark, src, schema), state, ckpt, batch_ids
-    ).localCheckpoint(eager=True)
+    got = _run_cdc_apply(_read_replay(spark, src, schema),
+                         batch_ids=batch_ids)
     assert len(set(batch_ids)) >= 4   # genuinely incremental
 
     ev = load(spark, sf_dir, "events")
@@ -698,8 +705,6 @@ def test_cdc_apply_across_batches_equals_batch(spark, sf_dir, replay):
                 F.col("value").alias("latest_value"))
     )
     assert _canon(got) == _canon(want)
-    shutil.rmtree(state, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_holt_winters_state_across_batches_equals_batch(
@@ -857,3 +862,98 @@ def test_burstiness_state_across_batches_equals_batch(spark, sf_dir, replay):
     assert streamed.count() > 0
     shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(sink, ignore_errors=True)
+
+
+def test_stream_runner_cleans_up_when_batch_raises(spark, tmp_path):
+    """The stream runner removes its checkpoint and sink temp dirs and
+    restores spark.sql.shuffle.partitions even when a foreachBatch body
+    raises."""
+    import glob
+
+    from mu_swarm_logger_service_spark.streaming.queries import (
+        _run_available_now)
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    name = f"raise_{uuid.uuid4().hex[:8]}"
+    sinks = []
+
+    def boom(bdf, batch_id, sink):
+        sinks.append(sink)
+        bdf.write.parquet(os.path.join(sink, f"batch={batch_id}"))
+        raise RuntimeError("batch body failed")
+
+    with pytest.raises(Exception, match="batch body failed"):
+        _run_available_now(
+            spark.readStream.schema("id long").parquet(src), src,
+            write_batch=boom, read_back=lambda sink: spark.range(1),
+            name=name)
+    assert sinks, "the body must have run inside the stream"
+    assert not os.path.exists(sinks[0])
+    assert not glob.glob(
+        os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_*"))
+    assert spark.conf.get(key) == prev
+
+
+def test_streams_run_only_through_the_runner():
+    """Structural lock: streaming/queries.py starts a stream in exactly
+    one place, only that runner writes session conf, and nothing in the
+    package sets partitionOverwriteMode session-wide."""
+    import ast
+    import inspect
+    import pathlib
+
+    import mu_swarm_logger_service_spark as pkg
+    from mu_swarm_logger_service_spark.streaming import queries
+
+    def conf_sets(tree):
+        return [n for n in ast.walk(tree)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "set"
+                and isinstance(n.func.value, ast.Attribute)
+                and n.func.value.attr == "conf"]
+
+    src = inspect.getsource(queries)
+    assert src.count("trigger(availableNow=True)") == 1
+    tree = ast.parse(src)
+    runner = next(n for n in ast.walk(tree)
+                  if isinstance(n, ast.FunctionDef)
+                  and n.name == "_run_available_now")
+    assert len(conf_sets(tree)) == len(conf_sets(runner)) > 0
+
+    for path in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
+        for call in conf_sets(ast.parse(path.read_text())):
+            key = call.args[0] if call.args else None
+            assert not (isinstance(key, ast.Constant)
+                        and "partitionOverwriteMode" in str(key.value)), (
+                f"{path}:{call.lineno} sets partitionOverwriteMode "
+                "session-wide; pin it on the write instead")
+
+
+def test_stream_events_directory_source(spark, sf_dir, tmp_path):
+    """A directory-shaped events.parquet streams the same rows as the
+    single file: a streaming-executed query with an oracle returns
+    identical results on both fixtures, and the backlog size counts the
+    directory's files."""
+    from mu_swarm_logger_service_spark.core.registry import QUERIES
+    from mu_swarm_logger_service_spark.core.tables import TABLES
+    from mu_swarm_logger_service_spark.streaming.queries import _backlog_bytes
+
+    dir_sf = tmp_path / "sf_dir_events"
+    (dir_sf / "events.parquet").mkdir(parents=True)
+    for t in TABLES:
+        if t != "events":
+            os.symlink(os.path.join(sf_dir, f"{t}.parquet"),
+                       dir_sf / f"{t}.parquet")
+    shutil.copy(os.path.join(sf_dir, "events.parquet"),
+                dir_sf / "events.parquet" / "part-0.parquet")
+
+    assert _backlog_bytes(str(dir_sf / "events.parquet")) == \
+        _backlog_bytes(os.path.join(sf_dir, "events.parquet"))
+    q = QUERIES["q_stream_foreachbatch"]
+    on_file = _canon(q(spark, sf_dir))
+    assert on_file
+    assert _canon(q(spark, str(dir_sf))) == on_file

@@ -363,23 +363,18 @@ def test_hostile_cdc_apply_equals_batch(spark, adv_dir, hostile_replay):
     where version comparison must still be deterministic.  Feed policy
     mirrors the registered q_stream_cdc_apply (class G: a NULL-key
     change has no identity to merge on)."""
-    import tempfile as _tf
-
     from pyspark.sql import Window as _W
 
     from mu_swarm_logger_service_spark.streaming.queries import (
         _run_cdc_apply)
 
     src, schema = hostile_replay
-    state = _tf.mkdtemp(prefix="cdc_hostile_state_")
-    ckpt = _tf.mkdtemp(prefix="cdc_hostile_ckpt_")
     batch_ids = []
     got = _run_cdc_apply(
-        spark,
         _read_replay(spark, src, schema).filter(
             F.col("user_id").isNotNull()),
-        state, ckpt, batch_ids,
-    ).localCheckpoint(eager=True)
+        batch_ids=batch_ids,
+    )
     assert len(set(batch_ids)) >= 4
 
     ev = load(spark, adv_dir, "events").filter(F.col("user_id").isNotNull())
@@ -402,8 +397,6 @@ def test_hostile_cdc_apply_equals_batch(spark, adv_dir, hostile_replay):
     # the tie-storm must actually stress the version tiebreak
     ties = (ev.groupBy("ts").count().filter(F.col("count") > 1).count())
     assert ties > 0
-    shutil.rmtree(state, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_hostile_holt_winters_equals_batch(spark, adv_dir, hostile_replay):
