@@ -141,8 +141,8 @@ def observed_time(df: DataFrame) -> DataFrame:
 
 
 def unpersist_cp(df: DataFrame) -> None:
-    """Deterministically free the block-store memory behind an EAGER
-    ``localCheckpoint``'ed DataFrame (r13, guide §5).
+    """Deterministically free the block-store memory behind a
+    materialized ``localCheckpoint``'ed DataFrame (r13, guide §5).
 
     A local checkpoint TRUNCATES lineage: the persisted blocks are the
     only copy of the data, so this must run only after the LAST consumer
@@ -158,6 +158,49 @@ def unpersist_cp(df: DataFrame) -> None:
         df._jdf.logicalPlan().rdd().unpersist(False)
     except Exception:
         pass  # best-effort hygiene: not a LogicalRDD-backed frame
+
+
+def iterate(state, step, *, rounds: int, until=None,
+            free: bool = False) -> list[DataFrame]:
+    """Run ``state = step(state)`` round by round and return every round's
+    state (the input excluded, the round that satisfied ``until``
+    included) — the one loop every iterative query runs on.
+
+    Each round is ``localCheckpoint``'ed, so the plan a round builds on
+    stays one round deep (unchecked, BPE's plan compounded to 9 scans /
+    25 exchanges in three rounds).  The checkpoint is LAZY: the first
+    job that reads the round materializes it — ``until``, else the next
+    round's shuffle or the caller's action — instead of a separate
+    ``count()`` job.  ``until(state) -> bool`` is the round's only
+    action: a job over the whole round (``isEmpty``, ``count``, a
+    checksum — Spark's local checkpoint computes any partition a partial
+    action like ``isEmpty`` skipped) that both materializes it and
+    decides to stop (star contraction: 2 jobs per round -> 1, r12).
+    With ``until`` the loop stops at the first True and raises
+    ``RuntimeError`` naming the query after ``rounds`` rounds without
+    one; without it exactly ``rounds`` run.
+
+    ``free=True`` frees round i-1 (the input too) with ``unpersist_cp``
+    once round i is materialized, instead of leaving its blocks to the
+    ContextCleaner, which unpins them only after a driver GC (r13).  Only
+    for loops that read just the previous round and keep just the last:
+    earlier returned states are freed.  Without ``until`` nothing else
+    would materialize a round before its predecessor is freed, so only
+    those rounds are checkpointed eagerly."""
+    eager = free and until is None
+    states = []
+    for _ in range(rounds):
+        states.append(step(state).localCheckpoint(eager=eager))
+        done = until is not None and until(states[-1])
+        if free:
+            unpersist_cp(state)
+        state = states[-1]
+        if done:
+            return states
+    if until is not None:
+        name = step.__qualname__.split(".")[0]
+        raise RuntimeError(f"{name}: no fixpoint after {rounds} rounds")
+    return states
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

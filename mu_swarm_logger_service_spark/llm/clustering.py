@@ -27,12 +27,15 @@ O(touched nodes per block), not O(edges).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core.numeric import dsum
 from ..core.registry import query
-from ..core.tables import load, spread, unpersist_cp
+from ..core.tables import iterate, load, spread, unpersist_cp
 from .similarity import _PQ_CB_SQL, _PQ_CODED_SQL, cosine, load_vec
 
 # IVF coarse codebook: a FIXED-K id-gated centroid set (the PQ family's
@@ -424,10 +427,11 @@ def q_llm_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact DECIMAL so Spark's nondeterministic reduce order can't move
     the double result.  The iteration count is FIXED, so the DuckDB
     oracle unrolls the same three steps symbolically — value-exact.
-    Lineage is truncated per round with localCheckpoint, like the BFS
-    frontier loop.  (Fully unrolling the three rounds into one plan was
-    measured too: the 3×-deeper plan triples Catalyst/codegen time and
-    loses on cold runs — per-round truncation wins end to end.)
+    The rounds run on `core.tables.iterate`, which truncates lineage per
+    round and frees each superseded rank vector.  (Fully unrolling the
+    three rounds into one plan was measured too: the 3×-deeper plan
+    triples Catalyst/codegen time and loses on cold runs — per-round
+    truncation wins end to end.)
     """
     from ..sources.sparql import container_edges
 
@@ -439,35 +443,22 @@ def q_llm_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     n = nodes.agg(F.count(F.lit(1)).cast("double").alias("c"))
-    r = nodes.crossJoin(F.broadcast(n)).select(
+    r0 = nodes.crossJoin(F.broadcast(n)).select(
         "node", (F.lit(1.0) / F.col("c")).alias("rank")
     )
-    prev_cp = None  # previous round's checkpointed rank vector (if any)
-    for _ in range(PR_ITERS):
-        # r12 optimization (guide §3.1/§2.4): the rank vector and the
-        # per-parent mass are CONTAINER-scale (one row per container id,
-        # bounded by fleet size — the same boundedness argument as the
-        # IVF fixed-K codebook broadcast), so broadcast them into their
-        # joins.  Per iteration only the fundamental parent-key
-        # aggregation shuffles — the "one shuffle on the parent key" the
-        # docstring claims, which the previous form missed (the edges⋈r
-        # join planned as a sort-merge shuffle).  Round-body plans
-        # (plans/r12/q_llm_pagerank_roundbody_*.txt): SortMergeJoin 1→0,
-        # Exchange 3→2 per iteration; interleaved A/B at sf0.1: old
-        # 1.008 s / new 0.977 s median (×0.97 — the win is plan shape,
-        # which compounds with graph size, not bench-scale wall).  On a
-        # graph whose rank vector outgrew a broadcast, drop the hints
-        # and the loop falls back to shuffled joins unchanged.
-        # NB (r12 ADVICE): r is checkpointed at the END of each round, so
-        # the broadcast subtree stays one round deep at any PR_ITERS —
-        # raising PR_ITERS adds rounds, not plan depth.
+
+    def rank_round(r: DataFrame) -> DataFrame:
+        # r12 (guide §3.1/§2.4): the rank vector and the per-parent mass
+        # are container-scale, so both are broadcast and only the
+        # parent-key aggregation shuffles (plans/r12/q_llm_pagerank_
+        # roundbody_*.txt: SortMergeJoin 1→0, Exchange 3→2 per round).
         mass = (
             edges.join(F.broadcast(r), edges.child == r.node)
             .groupBy(F.col("parent").alias("node"))
             .agg(F.sum(F.col("rank").cast("decimal(27,12)")).cast("double")
                  .alias("m"))
         )
-        r = (
+        return (
             nodes.crossJoin(F.broadcast(n))
             .join(F.broadcast(mass), "node", "left")
             .select(
@@ -476,15 +467,9 @@ def q_llm_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                  + F.lit(PR_DAMPING) * F.coalesce("m", F.lit(0.0)))
                 .alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
-        # r13 (guide §5): the new round's EAGER checkpoint is the only
-        # thing the rest of the loop reads, so the previous round's
-        # blocks are dead — free them now instead of waiting on the
-        # ContextCleaner (see core.tables.unpersist_cp).
-        if prev_cp is not None:
-            unpersist_cp(prev_cp)
-        prev_cp = r
+
+    r = iterate(r0, rank_round, rounds=PR_ITERS, free=True)[-1]
     # The final r is eager-materialized, so the loop-entry tables'
     # checkpoint blocks are dead too (the returned plan reads only r).
     unpersist_cp(edges)
@@ -1033,8 +1018,9 @@ def q_llm_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 CC_MAX_ROUNDS = 25
 
 
-def _star_round(sym: DataFrame, large: bool) -> DataFrame:
-    """One star contraction over a symmetric edge list (u, v), u != v.
+def _star_round(edges: DataFrame, large: bool) -> DataFrame:
+    """One star contraction over canonical (lo, hi) edges, taken as the
+    symmetric list (u, v), u != v.
 
     large-star processes every undirected edge from its SMALLER endpoint's
     adjacency (v > u), pointing larger neighbors at m = min(N(u) + {u});
@@ -1042,6 +1028,8 @@ def _star_round(sym: DataFrame, large: bool) -> DataFrame:
     smaller neighbors AND u itself at m = min(N-(u)) (all of N- is < u, so
     u never beats the min).  Returned edges are canonical (lo, hi) pairs.
     """
+    sym = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
+        edges.select(F.col("hi").alias("u"), F.col("lo").alias("v")))
     if large:
         mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
         m = F.least(F.col("mn"), F.col("u"))
@@ -1074,8 +1062,9 @@ def q_llm_cc_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithms (and a third, the SQL closure) must agree value-exactly.
 
     Convergence is detected by a (count, xxhash64-sum) checksum of the
-    canonical edge set — one action per round, lineage truncated with
-    eager localCheckpoint like the PageRank/BFS loops.  The fixture graph
+    canonical edge set — the one action per round of `core.tables.iterate`,
+    which also materializes the round's lazy checkpoint and frees the
+    round before it.  The fixture graph
     (stride-20 near-dup chains, FIXTURES.md) reaches fixpoint in ~3
     rounds; CC_MAX_ROUNDS=25 (>= log^2 of any plausible corpus) turns
     non-convergence into a loud failure instead of a wrong answer.  At
@@ -1083,11 +1072,6 @@ def q_llm_cc_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
     node->component map is the edge list itself plus the roots."""
     from .dedup import jaccard_half_edges
 
-    # LAZY checkpoints throughout this loop (r12): the checksum that
-    # follows every (re)materialization is itself a full-pass action, so
-    # letting IT trigger the checkpoint persists and checksums the edge
-    # set in ONE job — the eager form paid a separate materialization
-    # job per round (measured: 2 jobs -> 1 per round, ~×0.75 overall).
     edges = (
         jaccard_half_edges(spark, sf_dir)
         .select(F.col("doc_a").alias("lo"), F.col("doc_b").alias("hi"))
@@ -1107,26 +1091,18 @@ def q_llm_cc_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).head()
         return (row["n"], row["h"])
 
-    prev = checksum(edges)
-    for _ in range(CC_MAX_ROUNDS):
-        if prev[0] == 0:
-            break
-        sym = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
-            edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        edges = _star_round(sym, large=True)
-        sym = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
-            edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        edges = _star_round(sym, large=False).localCheckpoint(eager=False)
-        cur = checksum(edges)  # materializes the lazy checkpoint too
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"star contraction did not converge in {CC_MAX_ROUNDS} rounds"
-        )
+    def contract(e: DataFrame) -> DataFrame:
+        return _star_round(_star_round(e, large=True), large=False)
+
+    last = checksum(edges)  # materializes the input checkpoint
+
+    def converged(e: DataFrame) -> bool:
+        nonlocal last
+        prev, last = last, checksum(e)
+        return last[0] == 0 or last == prev
+
+    edges = iterate(edges, contract, rounds=CC_MAX_ROUNDS, until=converged,
+                    free=True)[-1]
 
     # Fixpoint sanity (two actions on the tiny contracted set): a star
     # forest rooted at minima has every non-root in exactly ONE edge and no
@@ -1407,7 +1383,19 @@ KCORE_K = 20        # the core threshold: peel nodes with degree < K
 KCORE_ROUNDS = 3
 
 
-@query("q_graph_kcore", oracle=f"""
+def _kcore_oracle(n_rounds: int) -> str:
+    """The peel unrolled for DuckDB: deg{i} counts the edges whose ends
+    both survived rounds 1..i (alive{i}: deg{i-1} >= K); degf restricts
+    only c2, to the round-n survivors."""
+    k = KCORE_K
+    degs = "".join(f"""
+), alive{i} AS (SELECT c FROM deg{i - 1} WHERE d >= {k}
+), deg{i} AS (
+  SELECT e.c1 AS c, CAST(COUNT(*) AS BIGINT) AS d
+  FROM e JOIN alive{i} a1 ON a1.c = e.c1
+  JOIN alive{i} a2 ON a2.c = e.c2 GROUP BY 1""" for i in range(1, n_rounds))
+    d = ["d0.d"] + [f"COALESCE(d{i}.d, 0)" for i in range(1, n_rounds)]
+    return f"""
 WITH cp AS MATERIALIZED (
   SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
   FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
@@ -1418,38 +1406,24 @@ WITH cp AS MATERIALIZED (
   FROM cp a JOIN parts_ok ok ON ok.p = a.p
   JOIN cp b ON a.p = b.p AND a.c <> b.c
 ), deg0 AS (
-  SELECT c1 AS c, CAST(COUNT(*) AS BIGINT) AS d FROM e GROUP BY 1
-), alive1 AS (
-  SELECT c FROM deg0 WHERE d >= {KCORE_K}
-), deg1 AS (
-  SELECT e.c1 AS c, CAST(COUNT(*) AS BIGINT) AS d
-  FROM e JOIN alive1 a1 ON a1.c = e.c1
-  JOIN alive1 a2 ON a2.c = e.c2 GROUP BY 1
-), alive2 AS (
-  SELECT c FROM deg1 WHERE d >= {KCORE_K}
-), deg2 AS (
-  SELECT e.c1 AS c, CAST(COUNT(*) AS BIGINT) AS d
-  FROM e JOIN alive2 a1 ON a1.c = e.c1
-  JOIN alive2 a2 ON a2.c = e.c2 GROUP BY 1
-), alive3 AS (
-  SELECT c FROM deg2 WHERE d >= {KCORE_K}
+  SELECT c1 AS c, CAST(COUNT(*) AS BIGINT) AS d FROM e GROUP BY 1{degs}
+), alive{n_rounds} AS (SELECT c FROM deg{n_rounds - 1} WHERE d >= {k}
 ), degf AS (
   SELECT e.c1 AS c, CAST(COUNT(*) AS BIGINT) AS d
-  FROM e JOIN alive3 a2 ON a2.c = e.c2 GROUP BY 1
+  FROM e JOIN alive{n_rounds} a2 ON a2.c = e.c2 GROUP BY 1
 )
 SELECT d0.c AS custkey, d0.d AS deg0,
-       CASE WHEN d0.d < {KCORE_K} THEN 1
-            WHEN COALESCE(d1.d, 0) < {KCORE_K} THEN 2
-            WHEN COALESCE(d2.d, 0) < {KCORE_K} THEN 3
+       CASE {" ".join(f"WHEN {x} < {k} THEN {i}" for i, x in enumerate(d, 1))}
             ELSE 0 END AS peeled_round,
-       (d0.d >= {KCORE_K} AND COALESCE(d1.d, 0) >= {KCORE_K}
-        AND COALESCE(d2.d, 0) >= {KCORE_K}) AS in_core,
+       ({" AND ".join(f"{x} >= {k}" for x in d)}) AS in_core,
        COALESCE(df.d, 0) AS deg_final
-FROM deg0 d0
-LEFT JOIN deg1 d1 ON d1.c = d0.c
-LEFT JOIN deg2 d2 ON d2.c = d0.c
+FROM deg0 d0{"".join(f" LEFT JOIN deg{i} d{i} ON d{i}.c = d0.c"
+                     for i in range(1, n_rounds))}
 LEFT JOIN degf df ON df.c = d0.c
-""")
+"""
+
+
+@query("q_graph_kcore", oracle=_kcore_oracle(KCORE_ROUNDS))
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded k-core peeling on the rare-part co-purchase graph.
 
@@ -1464,8 +1438,11 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-iteration budget of q_llm_pagerank, so R rounds cost R edge
     shuffles, and alive-sets stay node-sized (never collected,
     never broadcast-forced — Catalyst may still broadcast small ones).
-    Exact fixpoint k-core = raise KCORE_ROUNDS; each round is the same
-    bounded cost, the classic distributed-peeling trade."""
+    The rounds run on `core.tables.iterate` for exactly KCORE_ROUNDS
+    rounds, and the oracle is unrolled from the same constant: the exact
+    fixpoint k-core is KCORE_ROUNDS raised past the peel depth, each
+    extra round the same bounded cost — the classic distributed-peeling
+    trade."""
     e = (_copurchase_pairs(spark, sf_dir, KCORE_HUB_CAP)
          .distinct()
          # One edge materialization reused by every peel round — without
@@ -1487,40 +1464,31 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .join(a2, F.col("c2") == F.col("ac2"))
                 .select("c1", "c2"))
 
-    # Node-sized per-round checkpoints: each deg_i feeds BOTH alive
-    # sides of the next restrict, so an unchecked lineage doubles per
-    # round (the large-star/small-star loop truncates identically).
-    deg0 = degrees(e).localCheckpoint(eager=True)
-    alive1 = deg0.filter(F.col("d") >= KCORE_K).select(
-        F.col("c1").alias("c"))
-    deg1 = degrees(restrict(e, alive1)).localCheckpoint(eager=True)
-    alive2 = deg1.filter(F.col("d") >= KCORE_K).select(
-        F.col("c1").alias("c"))
-    deg2 = degrees(restrict(e, alive2)).localCheckpoint(eager=True)
-    alive3 = deg2.filter(F.col("d") >= KCORE_K).select(
-        F.col("c1").alias("c"))
+    def alive(deg: DataFrame) -> DataFrame:
+        return deg.filter(F.col("d") >= KCORE_K).select(F.col("c1").alias("c"))
+
+    def peel(deg: DataFrame | None) -> DataFrame:
+        return degrees(e if deg is None else restrict(e, alive(deg)))
+
+    degs = iterate(None, peel, rounds=KCORE_ROUNDS)
     degf = degrees(
-        e.join(alive3.select(F.col("c").alias("ac2")),
+        e.join(alive(degs[-1]).select(F.col("c").alias("ac2")),
                F.col("c2") == F.col("ac2")).select("c1", "c2"))
 
-    k = F.lit(KCORE_K)
-    out = (deg0.select(F.col("c1").alias("custkey"),
-                       F.col("d").alias("deg0"))
-           .join(deg1.select(F.col("c1").alias("custkey"),
-                             F.col("d").alias("d1")), "custkey", "left")
-           .join(deg2.select(F.col("c1").alias("custkey"),
-                             F.col("d").alias("d2")), "custkey", "left")
-           .join(degf.select(F.col("c1").alias("custkey"),
-                             F.col("d").alias("df_")), "custkey", "left"))
-    d1 = F.coalesce(F.col("d1"), F.lit(0))
-    d2 = F.coalesce(F.col("d2"), F.lit(0))
+    out = reduce(lambda a, b: a.join(b, "custkey", "left"), [
+        d.select(F.col("c1").alias("custkey"), F.col("d").alias(f"d{i}"))
+        for i, d in enumerate([*degs, degf])])
+    k, n = F.lit(KCORE_K), len(degs)
+    ds = [F.col("d0")] + [F.coalesce(F.col(f"d{i}"), F.lit(0))
+                          for i in range(1, n)]
+    peeled_round = F.when(ds[0] < k, 1)
+    for i, d in enumerate(ds[1:], 2):
+        peeled_round = peeled_round.when(d < k, i)
     return out.select(
-        "custkey", "deg0",
-        F.when(F.col("deg0") < k, 1)
-        .when(d1 < k, 2).when(d2 < k, 3).otherwise(0)
-        .alias("peeled_round"),
-        ((F.col("deg0") >= k) & (d1 >= k) & (d2 >= k)).alias("in_core"),
-        F.coalesce(F.col("df_"), F.lit(0)).cast("long").alias("deg_final"),
+        "custkey", F.col("d0").alias("deg0"),
+        peeled_round.otherwise(0).alias("peeled_round"),
+        reduce(operator.and_, [d >= k for d in ds]).alias("in_core"),
+        F.coalesce(F.col(f"d{n}"), F.lit(0)).cast("long").alias("deg_final"),
     )
 
 

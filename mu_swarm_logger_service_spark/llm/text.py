@@ -9,12 +9,14 @@ rand(), so even the "sampling" query has an exact oracle.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core.numeric import dsum
 from ..core.registry import query
-from ..core.tables import load, spread
+from ..core.tables import iterate, load, spread
 
 
 @query("q_llm_text_stats", oracle="""
@@ -1714,6 +1716,49 @@ sy{r} AS (
     return sql + "\n" + "\nUNION ALL\n".join(selects)
 
 
+def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus vocabulary (word, s, freq) in the marker-delimited
+    symbol encoding ("<c><a><t>") both BPE queries merge over — the one
+    corpus-sized shuffle of the trainer."""
+    words = (
+        spread(load(spark, sf_dir, "documents"))
+        .select(F.explode(F.split("text", " ")).alias("word"))
+        .where(F.col("word") != "")
+        .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
+    )
+    return words.select(
+        "word", F.regexp_replace("word", "(.)", "<$1>").alias("s"), "freq")
+
+
+def _bpe_merge_round(cur: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One greedy merge over a vocabulary frame carrying ``s`` and
+    ``freq``: the argmax adjacent pair (a, b, cnt) — count desc, then
+    lexicographic — and ``cur`` with that pair merged in every ``s``
+    (its other columns kept)."""
+    with_syms = cur.select(
+        F.split(F.expr("substring(s, 2, length(s) - 2)"), "><")
+        .alias("syms"), "freq")
+    pairs = (
+        with_syms
+        # size guard: Spark's sequence() counts DOWN on negative spans
+        # (single-symbol words would index out of bounds)
+        .select(F.explode(F.expr(
+            "IF(size(syms) >= 2,"
+            " transform(sequence(1, size(syms) - 1), i -> "
+            "  struct(element_at(syms, i) AS a,"
+            "   element_at(syms, i + 1) AS b)),"
+            " array())")).alias("p"), "freq")
+        .groupBy("p.a", "p.b").agg(F.sum("freq").alias("cnt"))
+    )
+    top = pairs.orderBy(F.desc("cnt"), "a", "b").limit(1)
+    merged = F.replace(
+        "s",
+        F.concat(F.lit("<"), "a", F.lit("><"), "b", F.lit(">")),
+        F.concat(F.lit("<"), "a", "b", F.lit(">"))).alias("s")
+    return top, cur.crossJoin(F.broadcast(top)).select(
+        *(merged if c == "s" else c for c in cur.columns))
+
+
 BPE_ROUNDS = 3
 
 
@@ -1735,52 +1780,20 @@ def q_llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the vocab, a 1-row argmax broadcast back, a narrow
     map.  q_llm_bpe_pairs is the single-round statistic; this is the
     loop that consumes it.  Returns the learned merge table."""
-    docs = load(spark, sf_dir, "documents")
-    words = (
-        spread(docs).select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-    )
-    cur = words.select(
-        F.regexp_replace("word", "(.)", "<$1>").alias("s"), "freq")
     merges = []
-    for rnd in range(1, BPE_ROUNDS + 1):
-        with_syms = cur.select(
-            F.split(F.expr("substring(s, 2, length(s) - 2)"), "><")
-            .alias("syms"), "freq")
-        pairs = (
-            with_syms
-            # size guard: Spark's sequence() counts DOWN on negative spans
-            # (single-symbol words would index out of bounds)
-            .select(F.explode(F.expr(
-                "IF(size(syms) >= 2,"
-                " transform(sequence(1, size(syms) - 1), i -> "
-                "  struct(element_at(syms, i) AS a,"
-                "   element_at(syms, i + 1) AS b)),"
-                " array())")).alias("p"), "freq")
-            .groupBy("p.a", "p.b").agg(F.sum("freq").alias("cnt"))
-        )
-        top = (pairs.orderBy(F.desc("cnt"), "a", "b").limit(1)
-               .select(F.lit(rnd).alias("merge_round"), "a", "b", "cnt"))
+
+    def step(cur: DataFrame) -> DataFrame:
+        top, merged = _bpe_merge_round(cur)
         merges.append(top.select(
-            "merge_round", F.col("a").alias("sym_a"),
-            F.col("b").alias("sym_b"),
+            F.lit(len(merges) + 1).alias("merge_round"),
+            F.col("a").alias("sym_a"), F.col("b").alias("sym_b"),
             F.concat("a", "b").alias("merged"),
             F.col("cnt").alias("pair_count")))
-        cur = (
-            cur.crossJoin(F.broadcast(top))
-            .select(F.replace(
-                "s",
-                F.concat(F.lit("<"), "a", F.lit("><"), "b", F.lit(">")),
-                F.concat(F.lit("<"), "a", "b", F.lit(">"))).alias("s"),
-                "freq")
-            # r12: lazy per-round truncation (see q_llm_bpe_apply's note).
-            .localCheckpoint(eager=False)
-        )
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.unionByName(m)
-    return out
+        return merged
+
+    iterate(_bpe_vocab(spark, sf_dir).select("s", "freq"), step,
+            rounds=BPE_ROUNDS)
+    return reduce(DataFrame.unionByName, merges)
 
 
 def _bpe_apply_oracle(n_rounds: int) -> str:
@@ -1820,53 +1833,16 @@ def q_llm_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocab (bounded), apply by broadcasting the word→token-count map
     onto the corpus occurrence stream — the corpus is scanned once and
     never carries symbol arrays, only the final integer."""
-    docs = load(spark, sf_dir, "documents")
-    words = (
-        spread(docs).select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-    )
-    cur = words.select(
-        "word", F.regexp_replace("word", "(.)", "<$1>").alias("s"), "freq")
-    for rnd in range(BPE_ROUNDS):
-        with_syms = cur.select(
-            F.split(F.expr("substring(s, 2, length(s) - 2)"), "><")
-            .alias("syms"), "freq")
-        pairs = (
-            with_syms
-            .select(F.explode(F.expr(
-                "IF(size(syms) >= 2,"
-                " transform(sequence(1, size(syms) - 1), i -> "
-                "  struct(element_at(syms, i) AS a,"
-                "   element_at(syms, i + 1) AS b)),"
-                " array())")).alias("p"), "freq")
-            .groupBy("p.a", "p.b").agg(F.sum("freq").alias("cnt"))
-        )
-        top = pairs.orderBy(F.desc("cnt"), "a", "b").limit(1)
-        cur = (
-            cur.crossJoin(F.broadcast(top))
-            .select("word", F.replace(
-                "s",
-                F.concat(F.lit("<"), "a", F.lit("><"), "b", F.lit(">")),
-                F.concat(F.lit("<"), "a", "b", F.lit(">"))).alias("s"),
-                "freq")
-            # r12: LAZY per-round truncation — without it each round's
-            # vocab re-derives every earlier round per plan reference
-            # (the audit plan compounded to 9 scans / 25 exchanges);
-            # lazy adds no job (the final action materializes through
-            # the persisted chain) while the loop-plan stays one round
-            # deep.  The PageRank/kcore loop discipline in its
-            # no-mid-loop-action form.
-            .localCheckpoint(eager=False)
-        )
+    cur = iterate(_bpe_vocab(spark, sf_dir),
+                  lambda v: _bpe_merge_round(v)[1], rounds=BPE_ROUNDS)[-1]
     word_tokens = cur.select(
         "word",
         F.size(F.split(F.expr("substring(s, 2, length(s) - 2)"), "><"))
         .alias("n_tokens"),
     )
     occ = (
-        spread(docs).select("doc_id",
-                            F.explode(F.split("text", " ")).alias("word"))
+        spread(load(spark, sf_dir, "documents"))
+        .select("doc_id", F.explode(F.split("text", " ")).alias("word"))
         .where(F.col("word") != "")
     )
     return (

@@ -10,9 +10,10 @@ the remaining query forms [spec:SPARQL 1.1 Query §16] plus property paths
   BFS iteration — each round joins the previous frontier with the edge
   relation, exactly how Datalog engines evaluate recursion.  The frontier
   shrinks geometrically on tree/DAG-shaped graphs (depth ≤ log n here),
-  so at 100 TB the loop runs O(log n) shuffles on an ever-smaller input;
-  lineage is truncated per round with localCheckpoint so the plan doesn't
-  grow with depth.
+  so at 100 TB the loop runs O(log n) shuffles on an ever-smaller input.
+  The loop is `core.tables.iterate`: each round's frontier is a lazy
+  local checkpoint that the round's emptiness check materializes, so the
+  plan stays one round deep without a separate materialization job.
 - **CONSTRUCT**: a graph-producing query — solution sequence → new
   triples, i.e. groupBy + per-predicate projection UNION.
 - **ASK**: boolean existence — a global aggregate over the BGP.
@@ -27,12 +28,14 @@ value-exact.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.numeric import dsum_sql
 from ..core.registry import query
-from ..core.tables import load, unpersist_cp
+from ..core.tables import iterate, load, unpersist_cp
 from .triples import DCT, RDF_TYPE, SWARMUI
 
 
@@ -76,39 +79,31 @@ def q_sparql_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = container_edges(spark, sf_dir)
     edges = edges.localCheckpoint(eager=True)  # reused every round
 
-    frontier = edges.select(
+    depth1 = edges.select(
         F.col("child").alias("src"), F.col("parent").alias("dst"),
         F.lit(1).cast("long").alias("depth"),
     ).localCheckpoint(eager=True)
-    paths = frontier
-    while True:
-        # PIN the broadcast of the edge relation (r12, guide §3.1): edges
-        # is CONTAINER-scale (one row per container id — bounded by the
-        # fleet size, not by event volume), so the per-round join should
-        # always be a map-side hash join on the frontier's partitions,
-        # never a two-sided shuffle.  At bench scale the planner already
-        # picks broadcast from the checkpointed stats (round-body plans
-        # in plans/r12/q_sparql_path_roundbody_*.txt are identical, and
-        # the interleaved A/B is neutral: old 1.360 s / new 1.432 s
-        # medians at sf0.1); the explicit hint removes the dependence on
-        # size ESTIMATES, which guide §3.1 calls out as unreliable — a
-        # stats-less replanning of this loop body must not degrade to
-        # SMJ-per-round.  If the edge relation ever outgrew a broadcast,
-        # drop the hint and the loop is unchanged.
-        nxt = (
+
+    def extend(frontier: DataFrame) -> DataFrame:
+        # PIN the broadcast of the container-scale edge relation (r12,
+        # guide §3.1): the per-round join stays a map-side hash join even
+        # if a stats-less replanning would pick SMJ.  Round-body plans
+        # (plans/r12/q_sparql_path_roundbody_*.txt) are identical at bench
+        # scale, A/B neutral (1.360 / 1.432 s at sf0.1).
+        return (
             frontier.join(F.broadcast(edges), frontier.dst == edges.child)
             .select(frontier.src, F.col("parent").alias("dst"),
                     (frontier.depth + 1).alias("depth"))
-            .localCheckpoint(eager=True)  # truncate lineage per round
         )
-        if nxt.isEmpty():
-            break
-        paths = paths.union(nxt)
-        frontier = nxt
-    # r13 (guide §5): every round's frontier is an EAGER checkpoint and
-    # `paths` unions those checkpoints only, so the edge relation's
-    # blocks are dead once the loop exits — free them deterministically
-    # instead of waiting on the ContextCleaner.
+
+    # Container ids are non-negative BIGINTs, so the c_i -> c_{i//2}
+    # tree is at most 63 deep: round 63 finds the empty frontier at the
+    # latest, and the cap only turns a broken edge builder into an error.
+    rounds = iterate(depth1, extend, rounds=64,
+                     until=lambda nxt: nxt.isEmpty())
+    # The last round is the empty frontier; every round is materialized,
+    # so `paths` no longer reads the edge relation.
+    paths = reduce(DataFrame.union, rounds[:-1], depth1)
     unpersist_cp(edges)
     return paths
 

@@ -5,7 +5,8 @@ Each test pins ONE mechanism this round changed:
   by the stream runner _run_available_now),
 - the per-session, freshness-keyed base-table plan cache (load),
 - the one-SQL-string cosine fast path's bit-identity with the Column path,
-- deterministic checkpoint unpersist (pagerank loop, memory-sink views).
+- deterministic checkpoint unpersist (pagerank and star-contraction loops,
+  memory-sink views).
 """
 
 from __future__ import annotations
@@ -120,14 +121,17 @@ def _n_persistent(spark) -> int:
 
 
 def test_pagerank_unpersists_loop_checkpoints(spark, sf_dir):
-    """After the final action, only the LAST round's rank checkpoint may
-    remain pinned — edges/nodes and earlier rounds are freed inline
-    (guide §5; the ContextCleaner lag this replaces is asynchronous)."""
-    before = _n_persistent(spark)
-    df = QUERIES["q_llm_pagerank"](spark, sf_dir)
-    assert df.count() > 0
-    leaked = _n_persistent(spark) - before
-    assert leaked <= 1, f"pagerank left {leaked} persistent RDDs pinned"
+    """After the final action, only the LAST round's checkpoint may
+    remain pinned — loop-entry tables and earlier rounds are freed inline
+    (guide §5; the ContextCleaner lag this replaces is asynchronous) —
+    for both loops that run iterate(free=True): PageRank's rank vector
+    and star contraction's edge set."""
+    for name in ("q_llm_pagerank", "q_llm_cc_largestar"):
+        before = _n_persistent(spark)
+        df = QUERIES[name](spark, sf_dir)
+        assert df.count() > 0
+        leaked = _n_persistent(spark) - before
+        assert leaked <= 1, f"{name} left {leaked} persistent RDDs pinned"
 
 
 def test_memory_sink_view_dropped(spark, sf_dir):

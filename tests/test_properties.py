@@ -4,6 +4,7 @@ oracle can't (e.g. a filter applied to the wrong branch)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -812,20 +813,19 @@ def test_two_sample_stats_nonvacuous_and_scipy_free_rederivation(
     assert 0 < ks["ks_d"] < 1
 
 
-def test_kcore_nonvacuous_and_python_peel_rederivation(spark, sf_dir):
-    """Peeling must FIRE on the fixture (round-1 peels and survivors
-    both present) and the full per-node (peel round, final degree)
-    assignment must equal a plain-Python peel over the same rare-part
-    co-purchase graph."""
+@pytest.mark.parametrize("rounds", [3, 4])
+def test_kcore_nonvacuous_and_python_peel_rederivation(spark, sf_dir,
+                                                       monkeypatch, rounds):
+    """Peeling must FIRE on the fixture (round-1 peels, last-round peels
+    and survivors all present) and the full per-node (peel round, final
+    degree) assignment must equal a plain-Python peel over the same
+    rare-part co-purchase graph — for any KCORE_ROUNDS, which the
+    engine's peel must honour."""
     from mu_swarm_logger_service_spark.core.registry import QUERIES
     from mu_swarm_logger_service_spark.core.tables import load
+    from mu_swarm_logger_service_spark.llm import clustering
     from mu_swarm_logger_service_spark.llm.clustering import (
-        KCORE_HUB_CAP, KCORE_K, KCORE_ROUNDS)
-
-    out = {r["custkey"]: r
-           for r in QUERIES["q_graph_kcore"](spark, sf_dir).collect()}
-    assert any(r["peeled_round"] == 1 for r in out.values())
-    assert any(r["in_core"] for r in out.values())
+        KCORE_HUB_CAP, KCORE_K)
 
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey").collect()
@@ -842,15 +842,34 @@ def test_kcore_nonvacuous_and_python_peel_rederivation(spark, sf_dir):
                 for c2 in cs:
                     if c1 != c2:
                         adj.setdefault(c1, set()).add(c2)
+
+    def peel(k):
+        alive = set(adj)
+        peeled_round = {c: 0 for c in adj}
+        for rnd in range(1, rounds + 1):
+            deg = {c: sum(1 for nb in adj[c] if nb in alive) for c in alive}
+            gone = {c for c in alive if deg[c] < k}
+            for c in gone:
+                peeled_round[c] = rnd
+            alive -= gone
+        return alive, peeled_round
+
+    # The smallest threshold >= KCORE_K whose cascade still peels in the
+    # last round and leaves a core: on a shallower cascade a peel that
+    # ignored KCORE_ROUNDS would give the same rows (sf0.001 at K=20
+    # peels in round 1 only).
+    k, (alive, peeled_round) = next(
+        (k, res) for k in range(KCORE_K, 4 * KCORE_K)
+        if (res := peel(k))[0] and rounds in res[1].values())
+    monkeypatch.setattr(clustering, "KCORE_ROUNDS", rounds)
+    monkeypatch.setattr(clustering, "KCORE_K", k)
+
+    out = {r["custkey"]: r
+           for r in QUERIES["q_graph_kcore"](spark, sf_dir).collect()}
+    assert any(r["peeled_round"] == 1 for r in out.values())
+    assert any(r["peeled_round"] == rounds for r in out.values())
+    assert any(r["in_core"] for r in out.values())
     assert set(adj) == set(out)
-    alive = set(adj)
-    peeled_round = {c: 0 for c in adj}
-    for rnd in range(1, KCORE_ROUNDS + 1):
-        deg = {c: sum(1 for nb in adj[c] if nb in alive) for c in alive}
-        gone = {c for c in alive if deg[c] < KCORE_K}
-        for c in gone:
-            peeled_round[c] = rnd
-        alive -= gone
     for c, r in out.items():
         assert r["deg0"] == len(adj[c])
         assert r["peeled_round"] == peeled_round[c]
