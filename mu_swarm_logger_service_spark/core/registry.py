@@ -53,69 +53,12 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # rotated OUT remain fully gated every session by the local parity suite
 # (tests/test_oracle_parity.py parameterizes over ALL registered oracles,
 # so a regression in a displaced key still fails CI before any commit).
-# Rotation history — cumulative driver-green coverage:
-#   r1-r3: first 50 registration-order keys (scan/filter/join/agg/window).
-#   r4: the 47 driver-unconfirmed SURVEY-§2 keys + 3 flagship extras
-#       (47/47 went green first try — CORRECTNESS_r04.json).
-#   r5: analytics / timeseries / sketch / triples families (50/50 green —
-#       CORRECTNESS_r05.json; cumulative 151/253).
-#   r6: fn extras, stream extras, sparql algebra, sketch additions,
-#       ANN/clustering llm extras (49/50 green + q_fn_encode hard-red on a
-#       BinaryType output column — fixed and re-queued; cumulative 200/266).
-#   r7 (this window): the q_fn_encode re-queue + round-6 operators + all
-#       codec queries + llm text extras.  Cumulative target 250/266.
-#       r8 then sweeps the remaining 33 (within one 50-key window): the 16
-#       never-checked keys, three vacuous-green re-queues
-#       (q_llm_embed_near_dup, q_join_anti, q_analytics_important_parts —
-#       their only green rows were 0-row results; all three de-vacuated in
-#       round 7, and rotate_window now re-queues that class mechanically),
-#       round 7's first six new operators (q_llm_bm25_topk,
-#       q_ts_holt_trend, q_stream_holt, q_sketch_kmv, q_llm_cc_largestar,
-#       q_stream_kmv), the eight late-round-7 operators
-#       (q_agg_weighted_median, q_ts_streaks, q_ts_cross_corr,
-#       q_llm_winnowing, q_fn_normalize_text, q_stream_cdc_apply,
-#       q_analytics_abc, q_agg_ab_ttest), the late-round-7 extras
-#       (q_audit_benford, q_llm_cluster_purity, q_llm_rank_eval,
-#       q_llm_html_extract, q_llm_hashed_features, q_ts_lttb,
-#       q_intersect_all), and the final round-7 batch (q_analytics_rfm,
-#       q_analytics_hhi, q_ts_sax, q_llm_collocations,
-#       q_analytics_supplier_overlap) plus the session's later additions
-#       (q_ts_theil_sen, q_ts_mad_outliers, q_analytics_wilson_ci,
-#       q_graph_label_prop, q_ts_runs_test, q_cdc_bitemporal, ...,
-#       q_agg_spearman, q_ts_kendall, q_llm_edit_dedup,
-#       q_graph_assortativity, q_ts_burstiness, q_stream_burstiness,
-#       q_llm_curriculum, q_ts_decompose, q_analytics_price_index,
-#       q_ts_mann_kendall, q_ops_slo_burn, q_ops_log_templates,
-#       q_agg_bitwise_agg, q_agg_equidepth_hist,
-#       q_llm_mixture_temperature, q_join_asof_nearest).
-#       The remainder now spans r8 AND r9 (rotate_window reports >50):
-#       with rounds running to r20, window capacity is ~50/round — new
-#       keys simply ride later windows, and every key stays locally
-#       parity-gated per session regardless of driver rotation.
-# Do NOT trust these comment counts at activation time: run
-# ``python tools/rotate_window.py`` — it derives the next window from
-# CORRECTNESS_r*.json + the live registry (re-queuing any hard-red key
-# that never went green) and prints a paste-ready tuple; r7 takes 50 of
-# the remainder, r8 sweeps the rest.
+# ``python tools/rotate_window.py`` derives the next window from
+# CORRECTNESS_r*.json and the live registry; paste its tuple below.
 # Keys not registered are skipped harmlessly; remaining keys follow in
 # registration order.  The window must never exceed the driver's 50 rows
 # (enforced below and in tests) or the tail silently loses evidence.
 EXPORT_FIRST: tuple[str, ...] = (
-    # r12 window, activated 2026-08-16, re-derived stalest-first at
-    # activation (per the r11 suggestion's instruction): latest green
-    # driver row per key over CORRECTNESS_r01-r11, ascending, r11-window
-    # keys excluded.  The derivation matched the pre-derived suggestion
-    # except four analytics tail keys (the true stalest are
-    # shipping_priority/small_qty_revenue/volume_shipping/cdc_scd2, not
-    # blocking/dominant/market_basket/part_supp — those four got r10
-    # rows).  q_win_topk_group LEADS although its row is fresh (r11):
-    # this session applied the class-I observed-time policy to it (r11
-    # ADVICE), changing observable semantics, so its driver evidence
-    # predates its own code — exactly the staleness class this rotation
-    # exists for.  It displaces q_analytics_order_distribution (r5 row,
-    # untouched since).  The five streaming keys whose class-I policy
-    # changed in r11 (tumbling/sliding/session/stateful/output_modes)
-    # ride at positions 8-14 as the verdict required.
     "q_win_topk_group", "q_intersect", "q_except",
     "q_fn_hash_uuid", "q_fn_conditional", "q_fn_cast",
     "q_fn_array", "q_fn_map", "q_stream_tumbling",
@@ -138,76 +81,9 @@ EXPORT_FIRST: tuple[str, ...] = (
     "q_analytics_shipmode_priority",
 )
 
-# r13 window suggestion: re-derive stalest-first at activation (the
-# derivation lives in round notes / tools/rotate_window.py's accounting;
-# with never-checked=0 the window is simply the 50 keys whose latest green
-# driver row is oldest, excluding the r12 window above).  Fold in FIRST:
-# the trap-class-L measure-domain policy (r12, commits 1403a32..1a54059)
-# changed observable semantics for ~52 keys — every dsum/davg consumer
-# plus the 46 first-contact fixes (aggregates: distinct/stats/percentile/
-# salted/winsorize/linreg/ab_ttest/anova/skew_kurtosis/equidepth_hist;
-# analytics: abc/hhi/mann_whitney/ks_test/cohort_ltv/did/power/
-# price_index/large_orders/benford; win frame_rows/time_range;
-# ts histogram/cross_corr/kendall; fn math/cast/format; sql surface/
-# unpivot; cdc incremental_agg/join_ivm; sources accesslog/log_templates/
-# container_logs; sparql aggregate/union; stream session/stateful/
-# foreachbatch/static_join; udx all six; values_inline) and the five
-# de-whaled llm oracles (bm25_topk/winnowing/span_corruption/bpe_train/
-# bpe_apply — bpe_apply's vocab join also changed values on hostile
-# content).  Most of these keys' driver rows predate the policy (the
-# q_win_topk_group precedent); prioritize the ones whose r12 row is
-# absent or pre-r10, then any r12 hard-reds.
-
 # The driver's CORRECTNESS window is 50 rows; a 51st pin would silently push
 # the last key out of the claimed evidence window.
 assert len(EXPORT_FIRST) <= 50, "EXPORT_FIRST exceeds the driver's window"
-
-# r10 window suggestion, derived 2026-08-15/16 at the end of round 9: with
-# 0 never-checked keys left, the highest-value re-queue is the surface
-# round 9 TOUCHED.  This session's seven hostile trap classes changed
-# policy/code on ~60 queries — more than one 50-key window — so the 50
-# below prioritize (a) every query whose POLICY changed (classes C2/D/
-# E/F/G fixes), then (b) the r9-early fixes (null-policy keys, IVF
-# codebook, stale-cache sources, guards).  Paste into EXPORT_FIRST at
-# the start of round 10 (fold in any r9 hard-reds first; the remainder
-# of the vector family rides r11):
-#   "q_fn_json", "q_fn_variant", "q_fn_string", "q_fn_struct",
-#   "q_fn_encode", "q_fn_format", "q_fn_ipnet", "q_fn_math",
-#   "q_source_syslog", "q_source_container_logs", "q_source_accesslog",
-#   "q_ops_log_templates", "q_agg_weighted_median", "q_agg_spearman",
-#   "q_analytics_min_cost_supplier", "q_analytics_mann_whitney",
-#   "q_analytics_revenue_gini", "q_join_asof", "q_join_asof_nearest",
-#   "q_ts_funnel", "q_ts_holt_trend", "q_ts_holt_winters",
-#   "q_ts_forecast_backtest", "q_ts_lttb", "q_ts_kaplan_meier",
-#   "q_ts_pattern_match", "q_stream_holt", "q_stream_holt_winters",
-#   "q_stream_pattern_match", "q_stream_cdc_apply",
-#   "q_stream_fingerprint", "q_stream_heavy_hitters",
-#   "q_audit_dataset_fingerprint", "q_llm_dpo_pairs", "q_llm_langid",
-#   "q_llm_tfidf_keywords", "q_llm_vocab_coverage", "q_llm_knn_label",
-#   "q_llm_cosine_topk", "q_llm_matryoshka", "q_llm_rrf_fusion",
-#   "q_llm_ann_pq", "q_llm_ann_ivf", "q_llm_ann_recall",
-#   "q_llm_kmeans_step", "q_llm_semdedup", "q_llm_embed_near_dup",
-#   "q_llm_cluster_purity", "q_scan_dpp", "q_sketch_heavy_hitters",
-#
-# (r9 window note, superseded): the 49 keys below were the last
-# never-driver-checked remainder; applied above on 2026-08-15.
-#   "q_ts_decompose", "q_ts_mann_kendall", "q_ops_slo_burn",
-#   "q_sketch_kmv", "q_sketch_kmv_jaccard", "q_fn_normalize_text",
-#   "q_fn_ipnet", "q_stream_holt", "q_stream_kmv",
-#   "q_stream_cdc_apply", "q_stream_holt_winters", "q_stream_pattern_match",
-#   "q_stream_burstiness", "q_source_syslog", "q_source_accesslog",
-#   "q_ops_log_templates", "q_llm_rank_eval", "q_llm_cc_largestar",
-#   "q_llm_cluster_purity", "q_graph_label_prop", "q_graph_kcore",
-#   "q_graph_modularity", "q_graph_assortativity", "q_llm_edit_dedup",
-#   "q_llm_bpe_pairs", "q_llm_pack_next_fit", "q_llm_rebalance",
-#   "q_llm_gopher_rules", "q_llm_vocab_coverage", "q_llm_perplexity",
-#   "q_llm_dpo_pairs", "q_llm_char_entropy", "q_llm_quality_cascade",
-#   "q_llm_quantile_normalize", "q_llm_token_budget", "q_llm_bpe_train",
-#   "q_llm_bpe_apply", "q_llm_k_anonymity", "q_llm_bm25_topk",
-#   "q_llm_winnowing", "q_llm_html_extract", "q_llm_hashed_features",
-#   "q_llm_collocations", "q_llm_span_corruption", "q_llm_l_diversity",
-#   "q_llm_curriculum", "q_llm_mixture_temperature", "q_udtf_map_arrow",
-#   "q_meta_catalog",
 
 
 def _export_order(d: dict) -> dict:

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..core.numeric import dsum
 from ..core.registry import query
-from ..core.tables import iterate, load, spread, unpersist_cp
+from ..core.tables import iterate, load, spread, stat_sig, unpersist_cp
 from .similarity import _PQ_CB_SQL, _PQ_CODED_SQL, cosine, load_vec
 
 # IVF coarse codebook: a FIXED-K id-gated centroid set (the PQ family's
@@ -63,29 +63,26 @@ CENT_MOD = 71       # semdedup cells = vectors with vec_id % 71 == 3
 # 50k vectors ≈ 35M assignment cosines — generous for audits (the 8×
 # fixture is 16k), refused long before a production corpus.
 MAX_SEMDEDUP_CORPUS = 50_000
-_CONF_MAX_SEMDEDUP = "spark.mu_swarm_logger.semdedup.max_corpus"
-_semdedup_guard_ok: set[tuple[str, int]] = set()
+_semdedup_size: dict[tuple[str, tuple[int, int]], int] = {}
 
 
 def _guard_semdedup_corpus(spark: SparkSession, sf_dir: str) -> None:
     """Admission check: one COUNT before the corpus × corpus/CENT_MOD
-    assignment.  Cached per (sf_dir, ceiling) per session."""
-    ceiling = int(spark.conf.get(_CONF_MAX_SEMDEDUP,
-                                 str(MAX_SEMDEDUP_CORPUS)))
-    key = (sf_dir, ceiling)
-    if key in _semdedup_guard_ok:
-        return
-    n = load_vec(spark, sf_dir).count()
-    if n > ceiling:
+    assignment.  The count is cached per (sf_dir, embeddings file
+    signature); the ceiling is compared on every call."""
+    key = (sf_dir, stat_sig(sf_dir, "embeddings"))
+    if key not in _semdedup_size:
+        _semdedup_size[key] = load_vec(spark, sf_dir).count()
+    n = _semdedup_size[key]
+    if n > MAX_SEMDEDUP_CORPUS:
         raise ValueError(
             f"semdedup exact baseline refused: corpus has {n} vectors "
-            f"(> {ceiling}); the brute coarse assignment is "
+            f"(> {MAX_SEMDEDUP_CORPUS}); the brute coarse assignment is "
             f"corpus × corpus/{CENT_MOD} cosines — oracle-scale audits "
             f"only. At production scale run the ANN-assisted "
             f"q_llm_semdedup_scale (hyperplane-LSH coarse assignment, "
             f"same in-cell policy), or raise "
-            f"{_CONF_MAX_SEMDEDUP!r} explicitly.")
-    _semdedup_guard_ok.add(key)
+            f"MAX_SEMDEDUP_CORPUS in llm/clustering.py explicitly.")
 IVF_TOPK = 5
 _IVF_QUERY_FILTER = "vec_id % 100 = 0"
 
@@ -148,7 +145,7 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transform is py4j round-trips plus incremental re-analysis (the
     # struct-field selects after the agg force schema resolution of the
     # whole subtree).  The body below is the IDENTICAL computation as one
-    # SQL string over a per-call temp view: same broadcast(cent) /
+    # parameterized SQL string: same broadcast(cent) /
     # broadcast(probe) hints, same max(struct(cs, nc, e)) argmax with the
     # same rounded-cosine + 0.0D sign normalization, same windows and
     # tiebreaks — full-collect verified identical, and the plan pin
@@ -158,8 +155,10 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on the engine side).
     from .similarity import _dot_sql, _norm_sql
 
-    emb = spread(load_vec(spark, sf_dir).select("vec_id", "embedding"))
-    emb.createOrReplaceTempView("_ivf_emb_src")  # serial-session scratch
+    # Only the O(n·K) assignment side is `spread` (compute-bound); the
+    # centroids and the query set read the unspread vectors, so no
+    # round-robin exchange feeds a broadcast or the probe window.
+    vec = load_vec(spark, sf_dir).select("vec_id", "embedding")
 
     def cos(a: str, b: str) -> str:
         return f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})"
@@ -167,7 +166,7 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"""
         WITH cent AS (
           SELECT vec_id AS cell, embedding AS ce
-          FROM _ivf_emb_src WHERE vec_id < {IVF_K}
+          FROM {{vec}} WHERE vec_id < {IVF_K}
         ), assign AS (
           SELECT vec_id, -best.nc AS cell, best.e AS e
           FROM (
@@ -176,7 +175,7 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                      round({cos('embedding', 'ce')}, 6) + 0.0D AS cs,
                      -cell AS nc,
                      embedding AS e)) AS best
-            FROM _ivf_emb_src CROSS JOIN cent
+            FROM {{corpus}} CROSS JOIN cent
             GROUP BY vec_id
           )
         ), probe AS (
@@ -188,7 +187,7 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ORDER BY round({cos('qe', 'ce')}, 6) DESC, cent.cell
                    ) AS r
             FROM (SELECT vec_id AS q_id, embedding AS qe
-                  FROM _ivf_emb_src WHERE {_IVF_QUERY_FILTER}) q
+                  FROM {{vec}} WHERE {_IVF_QUERY_FILTER}) q
             CROSS JOIN cent
           ) WHERE r <= {NPROBE}
         ), scored AS (
@@ -204,7 +203,7 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                    PARTITION BY q_id ORDER BY cos_sim DESC, c_id) AS rn
           FROM scored
         ) WHERE rn <= {IVF_TOPK}
-    """)
+    """, corpus=spread(vec), vec=vec)
 
 
 _GROUPS_SQL = """
@@ -659,8 +658,8 @@ def q_llm_semdedup_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids sharing a hyperplane-LSH bucket with the vector
     (q_llm_ann_lsh's hyperplane_tables, OR-amplified across N_TABLES):
     candidates per vector ~= T * ncent / 2^BITS, and BITS is a REAL
-    build parameter (session conf spark.mu_swarm_logger.lsh.*, the
-    minhash_params pattern) tuned ~log2(ncent), so the assignment is
+    build parameter (similarity.BITS_PER_TABLE, read through lsh_params)
+    tuned ~log2(ncent), so the assignment is
     O(n*T) instead of the brute n*(n/71) the admission guard refuses
     past oracle scale.
     Vectors whose buckets contain NO centroid take a NULL cell and are
@@ -706,7 +705,7 @@ def _semdedup_scale_assign(spark: SparkSession, sf_dir: str
     from .similarity import hyperplane_tables, lsh_params
 
     emb = spread(load_vec(spark, sf_dir)).select("vec_id", "embedding")
-    n_tables, bits = lsh_params(spark)
+    n_tables, bits = lsh_params()
     cent = emb.filter(F.expr(f"vec_id % {CENT_MOD} = 3")).select(
         F.col("vec_id").alias("cell"), F.col("embedding").alias("ce"))
     sig_v = emb.select(

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core.registry import query
-from ..core.tables import load, spread
+from ..core.tables import load, spread, stat_sig
 
 
 # Oracle twin of normalized_text() below — interpolate into every oracle
@@ -57,11 +57,13 @@ def normalized_text(col: str = "text") -> Column:
 # documents.  Production-scale near-dup must go through q_llm_near_dedup
 # (MinHash/LSH banding) or q_llm_prefix_filter_join (PPJoin-style exact
 # prefix blocking) — both handle the single-block corpus with sub-quadratic
-# candidate generation.  Raise the ceiling explicitly (e.g. for a one-off
-# ground-truth audit on a mid-size block) via the session conf.
+# candidate generation.  A one-off ground-truth audit on a mid-size block
+# raises this constant explicitly.
 MAX_QUADRATIC_BLOCK = 5_000
-_CONF_MAX_BLOCK = "spark.mu_swarm_logger.jaccard.max_block"
-_block_guard_ok: set[tuple[str, int, int | None]] = set()
+# Largest measured block per (sf_dir, documents stat_sig, bucket_width):
+# the file signature makes an in-place regeneration a miss, and the
+# ceiling is compared on every call, so it stays out of the key.
+_block_max: dict[tuple[str, tuple[int, int], int | None], int] = {}
 
 
 def _guard_quadratic_block(spark: SparkSession, sf_dir: str,
@@ -69,8 +71,9 @@ def _guard_quadratic_block(spark: SparkSession, sf_dir: str,
                            label: str = "blocked exact-Jaccard baseline",
                            ) -> None:
     """Admission check: one tiny 2-column aggregate before a potentially
-    O(n²) self-join.  Cached per (sf_dir, ceiling, bucket_width): repeated
-    calls (bench reps, shared edge builds) pay it once per session.
+    O(n²) self-join.  The measured block size is cached per (sf_dir,
+    documents file signature, bucket_width): repeated calls (bench reps,
+    shared edge builds) pay the aggregate once per fixture version.
 
     ``bucket_width`` refines the block key with a length bucket
     ``floor(n_chars / bucket_width)`` — the admission key used by
@@ -81,31 +84,31 @@ def _guard_quadratic_block(spark: SparkSession, sf_dir: str,
     same refusal applies, just on the finer key.  The count runs on the
     base documents table; callers that union in planted variants add at
     most a constant factor, which the order-of-magnitude ceiling absorbs."""
-    ceiling = int(spark.conf.get(_CONF_MAX_BLOCK, str(MAX_QUADRATIC_BLOCK)))
-    key = (sf_dir, ceiling, bucket_width)
-    if key in _block_guard_ok:
-        return
-    docs = load(spark, sf_dir, "documents")
     if bucket_width is None:
         block_cols, block_desc = ["lang", "source"], "(lang, source)"
     else:
-        docs = docs.withColumn(
-            "_bkt", (F.col("n_chars") / bucket_width).cast("long"))
         block_cols = ["lang", "source", "_bkt"]
         block_desc = f"(lang, source, n_chars/{bucket_width} bucket)"
-    top = (
-        docs.groupBy(*block_cols).count()
-        .orderBy(F.desc("count")).first()
-    )
-    if top is not None and top["count"] > ceiling:
+    key = (sf_dir, stat_sig(sf_dir, "documents"), bucket_width)
+    if key not in _block_max:
+        docs = load(spark, sf_dir, "documents")
+        if bucket_width is not None:
+            docs = docs.withColumn(
+                "_bkt", (F.col("n_chars") / bucket_width).cast("long"))
+        top = (
+            docs.groupBy(*block_cols).count()
+            .orderBy(F.desc("count")).first()
+        )
+        _block_max[key] = 0 if top is None else top["count"]
+    if _block_max[key] > MAX_QUADRATIC_BLOCK:
         raise ValueError(
             f"{label} refused: largest {block_desc} "
-            f"block has {top['count']} documents (> {ceiling}); this path is "
+            f"block has {_block_max[key]} documents "
+            f"(> {MAX_QUADRATIC_BLOCK}); this path is "
             f"O(block²) ground truth for oracle-scale audits only. Use "
             f"q_llm_near_dedup (MinHash/LSH) or q_llm_prefix_filter_join "
             f"(prefix blocking) at production scale, or raise "
-            f"{_CONF_MAX_BLOCK!r} explicitly.")
-    _block_guard_ok.add(key)
+            f"MAX_QUADRATIC_BLOCK in llm/dedup.py explicitly.")
 
 
 def jaccard_half_edges(
@@ -277,23 +280,17 @@ def q_llm_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_MINHASH = 64          # default permutations (production scale)
 N_BANDS = 16            # default bands (N_MINHASH // N_BANDS rows per band)
 
-# Session-conf overrides — the DEFAULT is the production configuration
-# (64 permutations / 16 bands of 4 rows: candidate threshold s where
-# 1-(1-s^4)^16 = 0.5 is s ≈ 0.55, matched to the J >= 0.5 verify gate), so
-# a user calling q_llm_near_dedup cold gets production recall (r4 verdict
-# task 5).  Downshift for cheap demos with e.g.
-#   spark.conf.set("spark.mu_swarm_logger.minhash.permutations", "16")
-#   spark.conf.set("spark.mu_swarm_logger.minhash.bands", "4")
-# before calling q_llm_near_dedup.  Recall/soundness property tests run
-# the matrix {16/4, 64/16} (tests/test_llm.py).
-_CONF_PERMS = "spark.mu_swarm_logger.minhash.permutations"
-_CONF_BANDS = "spark.mu_swarm_logger.minhash.bands"
+# The constants are the production configuration (64 permutations / 16
+# bands of 4 rows: candidate threshold s where 1-(1-s^4)^16 = 0.5 is
+# s ≈ 0.55, matched to the J >= 0.5 verify gate), so q_llm_near_dedup
+# gets production recall (r4 verdict task 5).  Recall/soundness property
+# tests run the matrix {16/4, 64/16} by patching the two constants
+# (tests/test_llm.py).
 
 
-def minhash_params(spark: SparkSession) -> tuple[int, int, int]:
-    """(n_perm, n_bands, rows_per_band) from session conf, validated."""
-    n_perm = int(spark.conf.get(_CONF_PERMS, str(N_MINHASH)))
-    n_bands = int(spark.conf.get(_CONF_BANDS, str(N_BANDS)))
+def minhash_params() -> tuple[int, int, int]:
+    """(n_perm, n_bands, rows_per_band) from N_MINHASH/N_BANDS, validated."""
+    n_perm, n_bands = N_MINHASH, N_BANDS
     if n_perm <= 0 or n_bands <= 0 or n_perm % n_bands:
         raise ValueError(
             f"minhash permutations ({n_perm}) must be a positive multiple "
@@ -371,7 +368,7 @@ def q_llm_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a) soundness — every emitted pair really has J >= 0.5 — and (b) recall
     against the exact blocked baseline (q_llm_minhash_jaccard).
     """
-    n_perm, n_bands, rows_per_band = minhash_params(spark)
+    n_perm, n_bands, rows_per_band = minhash_params()
     docs = spread(load(spark, sf_dir, "documents"))
     # Tokenize ONCE and materialize (r12 optimization, guide §8's
     # "decide with small rows" discipline applied to the token arrays):
@@ -489,7 +486,7 @@ def q_llm_near_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert soundness (every emitted pair really has J >= 0.5) and recall
     against the exact blocked batch×corpus ground truth
     (tests/test_llm.py::test_near_dedup_incremental_sound_and_recall)."""
-    n_perm, n_bands, rows_per_band = minhash_params(spark)
+    n_perm, n_bands, rows_per_band = minhash_params()
     # Tokenize ONCE into a materialized (doc_id, lang, source, tok) table
     # (r12 — the q_llm_near_dedup tokenize-once discipline): previously
     # each side's minhash_signatures re-tokenized its documents and the
@@ -547,12 +544,11 @@ def q_llm_near_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIMHASH_BITS = 32       # default width (demo scale; production uses 64)
-_CONF_SIMHASH_BITS = "spark.mu_swarm_logger.simhash.bits"
 
 
-def simhash_bits(spark: SparkSession) -> int:
-    """SimHash width from session conf (1..64; signature lives in a long)."""
-    bits = int(spark.conf.get(_CONF_SIMHASH_BITS, str(SIMHASH_BITS)))
+def simhash_bits() -> int:
+    """SIMHASH_BITS, validated (1..64; the signature lives in a long)."""
+    bits = SIMHASH_BITS
     if not 1 <= bits <= 64:
         raise ValueError(f"simhash bits must be in 1..64, got {bits}")
     return bits
@@ -603,7 +599,7 @@ def q_llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     precise pairs)."""
     docs = spread(load(spark, sf_dir, "documents"))
     sh = simhash(docs, keep=("lang", "source"),
-                 n_bits=simhash_bits(spark)).repartition(
+                 n_bits=simhash_bits()).repartition(
         spark.sparkContext.defaultParallelism, "lang", "source"
     )
     a, b = sh.alias("a"), sh.alias("b")

@@ -68,43 +68,36 @@ from ..core.tables import load, observed_time
 # domain-gated queries need no second filter.)
 TS_DOMAIN_LO = "1990-01-01"
 TS_DOMAIN_HI = "2100-01-01"
-# Deployment override (r10 advice): like the other tunables in this repo
-# (lsh_params, MAX_SEMDEDUP) the bounds ride session conf — a 1989 archive
-# or a post-2100 simulation sets these instead of editing code.  The
-# REGISTERED oracle strings are derived from the defaults at import (the
-# driver's oracle_sql() is static text), so overriding the conf moves the
-# Spark side only — valid for deployments, out of the oracle contract.
-_CONF_TS_LO = "spark.mu_swarm_logger.ts_domain.lo"
-_CONF_TS_HI = "spark.mu_swarm_logger.ts_domain.hi"
+# A 1989 archive or a post-2100 simulation edits these two constants.
+# ts_domain() reads them at call time; the REGISTERED oracle strings are
+# derived from them at import (the driver's oracle_sql() is static text).
 TS_DOMAIN_SQL = (f"ts >= TIMESTAMP '{TS_DOMAIN_LO}'"
                  f" AND ts < TIMESTAMP '{TS_DOMAIN_HI}'")
 # oracle spelling: replace `FROM events` with this subquery
 TS_DOMAIN_EVENTS = f"(SELECT * FROM events WHERE {TS_DOMAIN_SQL}) events"
 
 
-def ts_domain(spark: "SparkSession | None" = None) -> "F.Column":
-    """Spark twin of TS_DOMAIN_SQL; bounds overridable per session via
-    spark.mu_swarm_logger.ts_domain.{lo,hi} (yyyy-MM-dd, validated)."""
+def ts_domain() -> "F.Column":
+    """Spark twin of TS_DOMAIN_SQL over TS_DOMAIN_LO/HI (yyyy-MM-dd,
+    validated: a bad edit of the constants fails loudly)."""
+    import datetime
+    import re
+
     lo, hi = TS_DOMAIN_LO, TS_DOMAIN_HI
-    if spark is not None:
-        lo = spark.conf.get(_CONF_TS_LO, TS_DOMAIN_LO)
-        hi = spark.conf.get(_CONF_TS_HI, TS_DOMAIN_HI)
-        import datetime
-        import re
-        for v in (lo, hi):
-            if not re.fullmatch(r"\d{4}-\d{2}-\d{2}", v):
-                raise ValueError(
-                    f"ts_domain bound {v!r} is not a yyyy-MM-dd date")
-            # The shape regex admits calendar-impossible dates
-            # ('2024-02-30'), which cast to NULL (non-ANSI) and silently
-            # drop every row — the exact failure this guard must refuse.
-            try:
-                datetime.date.fromisoformat(v)
-            except ValueError:
-                raise ValueError(
-                    f"ts_domain bound {v!r} is not a valid calendar date")
-        if not lo < hi:
-            raise ValueError(f"empty ts_domain: lo={lo} >= hi={hi}")
+    for v in (lo, hi):
+        if not re.fullmatch(r"\d{4}-\d{2}-\d{2}", v):
+            raise ValueError(
+                f"ts_domain bound {v!r} is not a yyyy-MM-dd date")
+        # The shape regex admits calendar-impossible dates
+        # ('2024-02-30'), which cast to NULL (non-ANSI) and silently
+        # drop every row — the exact failure this guard must refuse.
+        try:
+            datetime.date.fromisoformat(v)
+        except ValueError:
+            raise ValueError(
+                f"ts_domain bound {v!r} is not a valid calendar date")
+    if not lo < hi:
+        raise ValueError(f"empty ts_domain: lo={lo} >= hi={hi}")
     return ((F.col("ts") >= F.lit(lo).cast("timestamp"))
             & (F.col("ts") < F.lit(hi).cast("timestamp")))
 
@@ -129,7 +122,7 @@ def q_ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows a bare groupBy cannot produce.  Spine bounds come from the
     declared valid-time domain (ts_domain above): clock garbage must not
     size a calendar."""
-    ev = load(spark, sf_dir, "events").filter(ts_domain(spark))
+    ev = load(spark, sf_dir, "events").filter(ts_domain())
     bounds = ev.agg(
         F.date_trunc("hour", F.min("ts")).alias("h0"),
         F.date_trunc("hour", F.max("ts")).alias("h1"),
@@ -732,7 +725,7 @@ def q_ts_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     caught pre-epoch stamps splitting the bucket ids), which the
     valid-time domain (ts_domain) guarantees: a dashboard's pixel
     buckets live on the declared time axis, not on clock garbage."""
-    ev = load(spark, sf_dir, "events").filter(ts_domain(spark))
+    ev = load(spark, sf_dir, "events").filter(ts_domain())
     px = ev.select(
         "event_type",
         (F.unix_timestamp("ts") / 900).cast("long").alias("bucket"),
@@ -796,7 +789,7 @@ def q_ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     stamp) — the heavy lifting is the one groupBy shuffle on the raw
     stream, as in gapfill.  The interp expression is integer-derived
     with a fixed IEEE op order, so it is bit-identical cross-engine."""
-    ev = load(spark, sf_dir, "events").filter(ts_domain(spark))
+    ev = load(spark, sf_dir, "events").filter(ts_domain())
     bounds = ev.agg(
         F.date_trunc("hour", F.min("ts")).alias("h0"),
         F.date_trunc("hour", F.max("ts")).alias("h1"),
@@ -1289,7 +1282,7 @@ def q_ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape).  The day lattice is bounded by the declared valid-time
     domain (ts_domain): one clock-garbage stamp must not stretch it to
     a century (class H)."""
-    ev = load(spark, sf_dir, "events").filter(ts_domain(spark))
+    ev = load(spark, sf_dir, "events").filter(ts_domain())
     day = F.date_trunc("day", "ts")
     dec6 = "decimal(27,6)"
     mval = measure(F.col("value"))  # class-L gate before the decimal cast

@@ -253,9 +253,9 @@ def q_udf_register_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
 
     spark.udf.register("clip250", clip250)
-    load(spark, sf_dir, "events").createOrReplaceTempView("events_v")
     return spark.sql(
-        "SELECT event_id, clip250(value) AS value_clipped FROM events_v"
+        "SELECT event_id, clip250(value) AS value_clipped FROM {events}",
+        events=load(spark, sf_dir, "events"),
     )
 
 

@@ -9,45 +9,38 @@ from pyspark.sql import functions as F
 
 import mu_swarm_logger_service_spark  # noqa: F401  (registers queries)
 from mu_swarm_logger_service_spark.core.registry import QUERIES
-from mu_swarm_logger_service_spark.core.tables import load
-from mu_swarm_logger_service_spark.llm import multimodal
+from mu_swarm_logger_service_spark.core.tables import load, stat_sig
+from mu_swarm_logger_service_spark.llm import (
+    clustering, dedup, multimodal, similarity)
 from mu_swarm_logger_service_spark.llm.dedup import simhash
 
 
 @pytest.mark.parametrize("n_perm,n_bands", [(16, 4), (64, 16)])
-def test_near_dedup_sound_and_recall(spark, sf_dir, n_perm, n_bands):
+def test_near_dedup_sound_and_recall(spark, sf_dir, monkeypatch, n_perm,
+                                     n_bands):
     """Every LSH-confirmed pair has J>=0.5 by construction; recall vs the
     exact blocked baseline must be high for strong pairs (J>=0.8).  Runs
     the parameter matrix: 16/4 (demo downshift) and 64/16 (the production
-    default since round 5), both via the session conf knobs."""
-    from mu_swarm_logger_service_spark.llm.dedup import _CONF_BANDS, _CONF_PERMS
-
-    spark.conf.set(_CONF_PERMS, str(n_perm))
-    spark.conf.set(_CONF_BANDS, str(n_bands))
-    try:
-        lsh = QUERIES["q_llm_near_dedup"](spark, sf_dir)
-        exact = QUERIES["q_llm_minhash_jaccard"](spark, sf_dir)
-        lsh_pairs = {(r.doc_a, r.doc_b) for r in lsh.collect()}
-        assert all(r.jaccard >= 0.5 for r in lsh.collect())
-        strong = {(r.doc_a, r.doc_b)
-                  for r in exact.filter(F.col("jaccard") >= 0.8).collect()}
-        if strong:
-            recall = len(strong & lsh_pairs) / len(strong)
-            assert recall >= 0.8, \
-                f"LSH recall {recall:.2f} on {len(strong)} strong pairs " \
-                f"at {n_perm} perms / {n_bands} bands"
-    finally:
-        spark.conf.unset(_CONF_PERMS)
-        spark.conf.unset(_CONF_BANDS)
+    default since round 5), both by patching N_MINHASH/N_BANDS."""
+    monkeypatch.setattr(dedup, "N_MINHASH", n_perm)
+    monkeypatch.setattr(dedup, "N_BANDS", n_bands)
+    lsh = QUERIES["q_llm_near_dedup"](spark, sf_dir)
+    exact = QUERIES["q_llm_minhash_jaccard"](spark, sf_dir)
+    lsh_pairs = {(r.doc_a, r.doc_b) for r in lsh.collect()}
+    assert all(r.jaccard >= 0.5 for r in lsh.collect())
+    strong = {(r.doc_a, r.doc_b)
+              for r in exact.filter(F.col("jaccard") >= 0.8).collect()}
+    if strong:
+        recall = len(strong & lsh_pairs) / len(strong)
+        assert recall >= 0.8, \
+            f"LSH recall {recall:.2f} on {len(strong)} strong pairs " \
+            f"at {n_perm} perms / {n_bands} bands"
 
 
-def test_simhash_64bit_conf(spark, sf_dir):
-    """At the production width (64 bits, via session conf) identical texts
-    must still collide and the signature must differ from the 32-bit one
-    (the extra bits are really computed, sign bit included)."""
-    from mu_swarm_logger_service_spark.llm.dedup import (
-        _CONF_SIMHASH_BITS, simhash)
-
+def test_simhash_64bit_conf(spark, sf_dir, monkeypatch):
+    """At the production width (64 bits, SIMHASH_BITS patched) identical
+    texts must still collide and the signature must differ from the 32-bit
+    one (the extra bits are really computed, sign bit included)."""
     docs = load(spark, sf_dir, "documents").limit(50)
     sig32 = {r.doc_id: r.simhash for r in simhash(docs, n_bits=32).collect()}
     sig64 = {r.doc_id: r.simhash for r in simhash(docs, n_bits=64).collect()}
@@ -57,28 +50,23 @@ def test_simhash_64bit_conf(spark, sf_dir):
     mask = (1 << 32) - 1
     assert all(sig64[d] & mask == sig32[d] & mask for d in sig32)
     assert any(sig64[d] != sig32[d] for d in sig32)
-    # the registered query honors the conf knob end-to-end
-    spark.conf.set(_CONF_SIMHASH_BITS, "64")
-    try:
-        QUERIES["q_llm_simhash"](spark, sf_dir).collect()
-    finally:
-        spark.conf.unset(_CONF_SIMHASH_BITS)
+    # the registered query honors the constant end-to-end
+    monkeypatch.setattr(dedup, "SIMHASH_BITS", 64)
+    QUERIES["q_llm_simhash"](spark, sf_dir).collect()
+    monkeypatch.setattr(dedup, "SIMHASH_BITS", 65)
+    with pytest.raises(ValueError, match="1..64"):
+        QUERIES["q_llm_simhash"](spark, sf_dir)
 
 
-def test_minhash_params_validation(spark):
-    """Bad conf (perms not a multiple of bands) must raise, not silently
-    truncate the signature."""
-    from mu_swarm_logger_service_spark.llm.dedup import (
-        _CONF_BANDS, _CONF_PERMS, minhash_params)
-
-    spark.conf.set(_CONF_PERMS, "30")
-    spark.conf.set(_CONF_BANDS, "4")
-    try:
-        with pytest.raises(ValueError, match="multiple"):
-            minhash_params(spark)
-    finally:
-        spark.conf.unset(_CONF_PERMS)
-        spark.conf.unset(_CONF_BANDS)
+def test_minhash_params_validation(spark, sf_dir, monkeypatch):
+    """A bad edit of the constants (perms not a multiple of bands) must
+    raise, not silently truncate the signature."""
+    monkeypatch.setattr(dedup, "N_MINHASH", 30)
+    monkeypatch.setattr(dedup, "N_BANDS", 4)
+    with pytest.raises(ValueError, match="multiple"):
+        dedup.minhash_params()
+    with pytest.raises(ValueError, match="multiple"):
+        QUERIES["q_llm_near_dedup"](spark, sf_dir)
 
 
 def test_simhash_identical_text_collides(spark, sf_dir):
@@ -230,15 +218,12 @@ def test_quadratic_baseline_quarantined(spark, sf_dir):
     block exceeds the admission ceiling (e.g. a one-lang/one-source corpus,
     where "the block" is the whole corpus) it must REFUSE to run and point
     at the sub-quadratic production paths (LSH / prefix-filter)."""
-    from mu_swarm_logger_service_spark.llm.dedup import (
-        _CONF_MAX_BLOCK, _block_guard_ok, jaccard_half_edges)
-
     # Force the ceiling below the corpus's largest block to simulate the
     # degenerate-blocking corpus without writing new testdata.
-    spark.conf.set(_CONF_MAX_BLOCK, "1")
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "MAX_QUADRATIC_BLOCK", 1)
         with pytest.raises(ValueError, match="near_dedup|prefix_filter"):
-            jaccard_half_edges(spark, sf_dir)
+            dedup.jaccard_half_edges(spark, sf_dir)
         with pytest.raises(ValueError, match="O\\(block"):
             QUERIES["q_llm_containment"](spark, sf_dir)
         # edit_dedup's (lang, source, length-bucket) blocks are equi-join
@@ -246,13 +231,53 @@ def test_quadratic_baseline_quarantined(spark, sf_dir):
         # so it must share the refusal (r7 verdict task 2).
         with pytest.raises(ValueError, match="edit-distance near-dup"):
             QUERIES["q_llm_edit_dedup"](spark, sf_dir)
-    finally:
-        spark.conf.unset(_CONF_MAX_BLOCK)
-    # At the default ceiling the oracle-scale corpus is admitted (cached
-    # thereafter: one tiny aggregate per (sf_dir, ceiling) per session).
-    jaccard_half_edges(spark, sf_dir)
-    from mu_swarm_logger_service_spark.llm.dedup import MAX_QUADRATIC_BLOCK
-    assert (sf_dir, MAX_QUADRATIC_BLOCK, None) in _block_guard_ok
+    # At the default ceiling the oracle-scale corpus is admitted (the
+    # measured block size is cached per (sf_dir, file signature, bucket)).
+    dedup.jaccard_half_edges(spark, sf_dir)
+    assert (sf_dir, stat_sig(sf_dir, "documents"), None) in dedup._block_max
+
+
+def _largest_block(spark, d):
+    return (load(spark, d, "documents").groupBy("lang", "source").count()
+            .agg(F.max("count")).first()[0])
+
+
+@pytest.mark.parametrize("table,module,ceiling,measure,run", [
+    ("documents", dedup, "MAX_QUADRATIC_BLOCK", _largest_block,
+     lambda spark, d: dedup.jaccard_half_edges(spark, d)),
+    ("embeddings", similarity, "MAX_PAIRWISE_SUBSET",
+     lambda spark, d: similarity.load_vec(spark, d)
+     .filter("vec_id % 10 = 0").count(),
+     lambda spark, d: QUERIES["q_llm_embed_near_dup"](spark, d)),
+    ("embeddings", clustering, "MAX_SEMDEDUP_CORPUS",
+     lambda spark, d: similarity.load_vec(spark, d).count(),
+     lambda spark, d: QUERIES["q_llm_semdedup"](spark, d)),
+], ids=["block", "subset", "semdedup"])
+def test_admission_guard_sees_in_place_regeneration(
+        spark, sf_dir, tmp_path, monkeypatch, table, module, ceiling,
+        measure, run):
+    """An admission guard must re-measure a table regenerated in place:
+    admitted at ceiling == its measured size, the same path must refuse
+    once the file is rewritten with every row duplicated and re-keyed
+    (every measured size doubles).  A cache keyed on the path alone
+    would keep admitting the stale measurement."""
+    import shutil
+
+    import pandas as pd
+
+    src = tmp_path / f"{table}.parquet"
+    shutil.copy(f"{sf_dir}/{table}.parquet", src)
+    d = str(tmp_path)
+    monkeypatch.setattr(module, ceiling, measure(spark, d))
+    run(spark, d)  # admitted at the boundary
+
+    df = pd.read_parquet(src)
+    key = "doc_id" if table == "documents" else "vec_id"
+    rep = df.copy()
+    rep[key] += (int(df[key].max()) // 10 + 1) * 10  # keeps the % 10 gate
+    pd.concat([df, rep], ignore_index=True).to_parquet(src, index=False)
+    with pytest.raises(ValueError, match="refused"):
+        run(spark, d)
 
 
 def test_embed_near_dup_subset_guarded(spark, sf_dir):
@@ -260,50 +285,34 @@ def test_embed_near_dup_subset_guarded(spark, sf_dir):
     past the admission ceiling it must REFUSE and point at the
     hyperplane-LSH composition — the same standard the quadratic-Jaccard
     family applies (r8 verdict task 3)."""
-    from mu_swarm_logger_service_spark.llm.similarity import (
-        _CONF_MAX_SUBSET, MAX_PAIRWISE_SUBSET, _subset_guard_ok)
-
-    spark.conf.set(_CONF_MAX_SUBSET, "1")
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(similarity, "MAX_PAIRWISE_SUBSET", 1)
         with pytest.raises(ValueError, match="hyperplane"):
             QUERIES["q_llm_embed_near_dup"](spark, sf_dir)
-    finally:
-        spark.conf.unset(_CONF_MAX_SUBSET)
-    # Default ceiling admits the oracle-scale corpus (and caches the check).
+    # Default ceiling admits the oracle-scale corpus (and caches the count).
     assert QUERIES["q_llm_embed_near_dup"](spark, sf_dir).count() > 0
-    assert (sf_dir, MAX_PAIRWISE_SUBSET) in _subset_guard_ok
+    assert (sf_dir, stat_sig(sf_dir, "embeddings")) in similarity._subset_size
 
 
-def test_lsh_build_params_conf(spark, sf_dir):
-    """The hyperplane-LSH build parameters are session conf (the
-    minhash_params pattern): out-of-range values must raise, and a
-    tighter bucket grid (more bits) must be honored end-to-end — at 12
-    bits per table on this corpus the candidate sets shrink, so the
+def test_lsh_build_params_conf(spark, sf_dir, monkeypatch):
+    """The hyperplane-LSH build parameters are the constants N_TABLES /
+    BITS_PER_TABLE, read at call time: out-of-range values must raise,
+    and a tighter bucket grid (more bits) must be honored end-to-end — at
+    12 bits per table on this corpus the candidate sets shrink, so the
     registered query still runs and never emits self-pairs."""
-    from mu_swarm_logger_service_spark.llm.similarity import (
-        _CONF_LSH_BITS, _CONF_LSH_TABLES, lsh_params)
+    monkeypatch.setattr(similarity, "BITS_PER_TABLE", 63)
+    with pytest.raises(ValueError, match="bits_per_table"):
+        similarity.lsh_params()
 
-    spark.conf.set(_CONF_LSH_BITS, "63")
-    try:
-        with pytest.raises(ValueError, match="bits_per_table"):
-            lsh_params(spark)
-    finally:
-        spark.conf.unset(_CONF_LSH_BITS)
-
-    spark.conf.set(_CONF_LSH_TABLES, "2")
-    spark.conf.set(_CONF_LSH_BITS, "12")
-    try:
-        rows = QUERIES["q_llm_ann_lsh"](spark, sf_dir).collect()
-    finally:
-        spark.conf.unset(_CONF_LSH_TABLES)
-        spark.conf.unset(_CONF_LSH_BITS)
+    monkeypatch.setattr(similarity, "N_TABLES", 2)
+    monkeypatch.setattr(similarity, "BITS_PER_TABLE", 12)
+    rows = QUERIES["q_llm_ann_lsh"](spark, sf_dir).collect()
     assert all(r.q_id != r.c_id for r in rows)
     # 2 tables x 12 bits: signatures must actually use the upper bits
-    # somewhere (buckets > 63 exist), proving the knob reached the expr
-    from mu_swarm_logger_service_spark.llm.similarity import (
-        hyperplane_tables, load_vec)
-    sig = (load_vec(spark, sf_dir)
-           .select(F.explode(hyperplane_tables(
+    # somewhere (buckets > 63 exist), proving the constants reached the
+    # expr
+    sig = (similarity.load_vec(spark, sf_dir)
+           .select(F.explode(similarity.hyperplane_tables(
                "embedding", 2, 12)).alias("b")))
     assert sig.filter(F.col("b") > 63).count() > 0
 
@@ -329,9 +338,6 @@ def test_semdedup_scale_composed_path(spark, sf_dir, tmp_path_factory):
     oracle-scale centroid set is too sparse for that)."""
     import pandas as pd
 
-    from mu_swarm_logger_service_spark.llm.clustering import (
-        _CONF_MAX_SEMDEDUP, _semdedup_guard_ok)
-
     d = tmp_path_factory.mktemp("semdedup2x")
     base = pd.read_parquet(f"{sf_dir}/embeddings.parquet")
     rep = base.copy()
@@ -340,14 +346,11 @@ def test_semdedup_scale_composed_path(spark, sf_dir, tmp_path_factory):
         d / "embeddings.parquet", index=False)
     fix = str(d)
 
-    spark.conf.set(_CONF_MAX_SEMDEDUP, "1")
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(clustering, "MAX_SEMDEDUP_CORPUS", 1)
         with pytest.raises(ValueError, match="ANN"):
             QUERIES["q_llm_semdedup"](spark, fix)
         comp = QUERIES["q_llm_semdedup_scale"](spark, fix).collect()
-    finally:
-        spark.conf.unset(_CONF_MAX_SEMDEDUP)
-        _semdedup_guard_ok.clear()
     brute = QUERIES["q_llm_semdedup"](spark, fix).collect()
 
     assert len(comp) == len({r.vec_id for r in comp})  # one row per vector
@@ -376,17 +379,12 @@ def test_semdedup_corpus_guarded(spark, sf_dir):
     """SemDeDup's brute coarse assignment is corpus x corpus/CENT_MOD:
     past the admission ceiling it must REFUSE and name the ANN-assisted
     assignment (the quadratic-family standard, r9)."""
-    from mu_swarm_logger_service_spark.llm.clustering import (
-        _CONF_MAX_SEMDEDUP, MAX_SEMDEDUP_CORPUS, _semdedup_guard_ok)
-
-    spark.conf.set(_CONF_MAX_SEMDEDUP, "1")
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(clustering, "MAX_SEMDEDUP_CORPUS", 1)
         with pytest.raises(ValueError, match="ANN-assisted"):
             QUERIES["q_llm_semdedup"](spark, sf_dir)
-    finally:
-        spark.conf.unset(_CONF_MAX_SEMDEDUP)
     assert QUERIES["q_llm_semdedup"](spark, sf_dir).count() > 0
-    assert (sf_dir, MAX_SEMDEDUP_CORPUS) in _semdedup_guard_ok
+    assert (sf_dir, stat_sig(sf_dir, "embeddings")) in clustering._semdedup_size
 
 
 def test_ann_ivf_pq_recall_vs_exact(spark, sf_dir):
@@ -432,40 +430,33 @@ def test_paragraph_dedup_semantics(spark, sf_dir):
 
 
 @pytest.mark.parametrize("n_perm,n_bands", [(16, 4), (64, 16)])
-def test_near_dedup_incremental_sound_and_recall(spark, sf_dir, n_perm,
-                                                 n_bands):
+def test_near_dedup_incremental_sound_and_recall(spark, sf_dir, monkeypatch,
+                                                 n_perm, n_bands):
     """Incremental LSH probe: every emitted (batch, corpus) pair must
     really have J>=0.5, and recall vs the exact blocked batch×corpus
     ground truth (strong pairs, J>=0.8) must be high — the same contract
     as the all-pairs variant, restricted to cross-parity pairs."""
-    from mu_swarm_logger_service_spark.llm.dedup import (
-        _CONF_BANDS, _CONF_PERMS, jaccard_half_edges)
+    monkeypatch.setattr(dedup, "N_MINHASH", n_perm)
+    monkeypatch.setattr(dedup, "N_BANDS", n_bands)
+    inc = QUERIES["q_llm_near_dedup_incremental"](spark, sf_dir)
+    rows = inc.collect()
+    assert all(r.jaccard >= 0.5 for r in rows)
+    got = {(r.batch_id, r.corpus_id) for r in rows}
+    exact = dedup.jaccard_half_edges(spark, sf_dir, with_jaccard=True)
 
-    spark.conf.set(_CONF_PERMS, str(n_perm))
-    spark.conf.set(_CONF_BANDS, str(n_bands))
-    try:
-        inc = QUERIES["q_llm_near_dedup_incremental"](spark, sf_dir)
-        rows = inc.collect()
-        assert all(r.jaccard >= 0.5 for r in rows)
-        got = {(r.batch_id, r.corpus_id) for r in rows}
-        exact = jaccard_half_edges(spark, sf_dir, with_jaccard=True)
+    def side(d):          # 20-doc id block, mirrors the query's split
+        return (d // 20) % 2
 
-        def side(d):          # 20-doc id block, mirrors the query's split
-            return (d // 20) % 2
-
-        strong = {
-            (r.doc_a, r.doc_b) if side(r.doc_a) == 1 else (r.doc_b, r.doc_a)
-            for r in exact.filter(F.col("jaccard") >= 0.8).collect()
-            if side(r.doc_a) != side(r.doc_b)
-        }
-        assert strong, "fixture must contain cross-side strong pairs"
-        recall = len(strong & got) / len(strong)
-        assert recall >= 0.8, \
-            f"incremental LSH recall {recall:.2f} on {len(strong)} " \
-            f"strong cross pairs at {n_perm}/{n_bands}"
-    finally:
-        spark.conf.unset(_CONF_PERMS)
-        spark.conf.unset(_CONF_BANDS)
+    strong = {
+        (r.doc_a, r.doc_b) if side(r.doc_a) == 1 else (r.doc_b, r.doc_a)
+        for r in exact.filter(F.col("jaccard") >= 0.8).collect()
+        if side(r.doc_a) != side(r.doc_b)
+    }
+    assert strong, "fixture must contain cross-side strong pairs"
+    recall = len(strong & got) / len(strong)
+    assert recall >= 0.8, \
+        f"incremental LSH recall {recall:.2f} on {len(strong)} " \
+        f"strong cross pairs at {n_perm}/{n_bands}"
 
 
 def test_embed_near_dup_non_vacuous(spark, sf_dir):

@@ -1944,41 +1944,36 @@ def test_asof_nearest_dominates_backward(spark, sf_dir):
 
 
 def test_ts_domain_session_conf_override(spark, sf_dir):
-    """The valid-time domain bounds ride session conf (r10 advice): a
-    narrowed domain must shrink the gapfill spine, the defaults must
-    restore on unset, and malformed/empty bounds must refuse loudly
-    rather than silently drop every event."""
-    import pytest as _pytest
-
+    """The valid-time domain bounds are the constants TS_DOMAIN_LO/HI,
+    read at call time: a narrowed domain must shrink the gapfill spine,
+    the defaults must restore once the patch is undone, and malformed/
+    empty bounds must refuse loudly rather than silently drop every
+    event."""
     from mu_swarm_logger_service_spark.core.registry import QUERIES
-    from mu_swarm_logger_service_spark.operators.timeseries import (
-        _CONF_TS_HI, _CONF_TS_LO, ts_domain)
+    from mu_swarm_logger_service_spark.operators import timeseries
 
     base = QUERIES["q_ts_gapfill"](spark, sf_dir).count()
-    try:
+    with pytest.MonkeyPatch.context() as mp:
         # Narrow to a single day inside the fixture's 30-day span: the
         # hour spine collapses to <= 24 rows (vs ~720 at defaults).
-        spark.conf.set(_CONF_TS_LO, "2024-01-02")
-        spark.conf.set(_CONF_TS_HI, "2024-01-03")
+        mp.setattr(timeseries, "TS_DOMAIN_LO", "2024-01-02")
+        mp.setattr(timeseries, "TS_DOMAIN_HI", "2024-01-03")
         narrowed = QUERIES["q_ts_gapfill"](spark, sf_dir).count()
         assert 0 < narrowed <= 24 < base
 
-        spark.conf.set(_CONF_TS_HI, "not-a-date")
-        with _pytest.raises(ValueError, match="yyyy-MM-dd"):
-            ts_domain(spark)
+        mp.setattr(timeseries, "TS_DOMAIN_HI", "not-a-date")
+        with pytest.raises(ValueError, match="yyyy-MM-dd"):
+            timeseries.ts_domain()
         # r11 ADVICE: a calendar-impossible date passes the shape regex
         # but casts to NULL (non-ANSI) and silently empties the domain —
         # the guard must refuse it loudly.
         for bad in ("2024-02-30", "2024-13-01", "2023-00-15"):
-            spark.conf.set(_CONF_TS_HI, bad)
-            with _pytest.raises(ValueError, match="calendar"):
-                ts_domain(spark)
-        spark.conf.set(_CONF_TS_HI, "2024-01-02")  # == lo: empty domain
-        with _pytest.raises(ValueError, match="empty ts_domain"):
-            ts_domain(spark)
-    finally:
-        spark.conf.unset(_CONF_TS_LO)
-        spark.conf.unset(_CONF_TS_HI)
+            mp.setattr(timeseries, "TS_DOMAIN_HI", bad)
+            with pytest.raises(ValueError, match="calendar"):
+                timeseries.ts_domain()
+        mp.setattr(timeseries, "TS_DOMAIN_HI", "2024-01-02")  # == lo
+        with pytest.raises(ValueError, match="empty ts_domain"):
+            QUERIES["q_ts_gapfill"](spark, sf_dir)
     assert QUERIES["q_ts_gapfill"](spark, sf_dir).count() == base
 
 

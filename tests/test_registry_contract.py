@@ -14,9 +14,13 @@ output schema.  Render them first (hex, to_json, concat_ws, getField).
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 from pyspark.sql import types as T
 
 import __spark_entry__ as entrymod
+import mu_swarm_logger_service_spark as pkg
 
 FORBIDDEN = (T.BinaryType, T.ArrayType, T.MapType, T.StructType)
 
@@ -33,3 +37,34 @@ def test_no_unhashable_output_dtypes(spark, sf_dir):
         "registered outputs with driver-unhashable dtypes "
         "(hex/to_json/flatten them before returning):\n  "
         + "\n  ".join(violations))
+
+
+def test_no_custom_session_conf_or_fixed_name_views():
+    """Structural lock: a query result depends on its inputs only.  No
+    string literal in the package names a custom ``spark.mu_swarm*``
+    session-conf key (tunables are module constants), and the only temp
+    views are the table views of the SQL entry point — query bodies pass
+    DataFrames to ``spark.sql`` as parameters instead of registering a
+    fixed name two concurrent queries would share."""
+    root = pathlib.Path(pkg.__file__).parent
+    keys, views = [], set()
+
+    def visit(node, func, rel):
+        for child in ast.iter_child_nodes(node):
+            f = (child.name if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)) else func)
+            if (isinstance(child, ast.Constant)
+                    and isinstance(child.value, str)
+                    and child.value.startswith("spark.mu_swarm")):
+                keys.append(f"{rel}:{child.lineno} {child.value}")
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == "createOrReplaceTempView"):
+                views.add((rel, func))
+            visit(child, f, rel)
+
+    for path in root.rglob("*.py"):
+        rel = str(path.relative_to(root))
+        visit(ast.parse(path.read_text()), None, rel)
+    assert not keys, keys
+    assert views == {("core/tables.py", "register_views")}, views
