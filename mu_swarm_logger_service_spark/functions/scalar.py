@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.folds import fsum
 from ..core.numeric import epoch_s
 from ..core.registry import query
 from ..core.tables import load
@@ -275,7 +276,6 @@ def q_fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     lambdas run JVM-side (no Python)."""
     emb = load(spark, sf_dir, "embeddings")
     e = F.col("embedding")
-    ed = F.transform(e, lambda x: x.cast("double"))
     return emb.select(
         "vec_id",
         F.size(e).alias("dim"),
@@ -292,9 +292,9 @@ def q_fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in (1, 2, 3, 4)
         ],
         F.size(F.filter(e, lambda x: x > 0)).alias("n_pos"),
-        F.round(
-            F.aggregate(ed, F.lit(0.0), lambda acc, x: acc + x * x), 4
-        ).alias("sumsq"),
+        F.round(F.expr(fsum("embedding",
+                            "CAST(x AS DOUBLE) * CAST(x AS DOUBLE)")), 4)
+        .alias("sumsq"),
     )
 
 

@@ -33,10 +33,11 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..core.folds import cosine
 from ..core.numeric import dsum
 from ..core.registry import query
 from ..core.tables import iterate, load, spread, stat_sig, unpersist_cp
-from .similarity import _PQ_CB_SQL, _PQ_CODED_SQL, cosine, load_vec
+from .similarity import _PQ_CB_SQL, _PQ_CODED_SQL, load_vec
 
 # IVF coarse codebook: a FIXED-K id-gated centroid set (the PQ family's
 # `vec_id < K` pattern).  K is corpus-INDEPENDENT by construction, so the
@@ -153,16 +154,10 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # still holds.  SQL literals: 0.0D keeps every constant DOUBLE (a
     # bare 0.0 parses DECIMAL in Spark SQL — the oracle-side trap, here
     # on the engine side).
-    from .similarity import _dot_sql, _norm_sql
-
     # Only the O(n·K) assignment side is `spread` (compute-bound); the
     # centroids and the query set read the unspread vectors, so no
     # round-robin exchange feeds a broadcast or the probe window.
     vec = load_vec(spark, sf_dir).select("vec_id", "embedding")
-
-    def cos(a: str, b: str) -> str:
-        return f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})"
-
     return spark.sql(f"""
         WITH cent AS (
           SELECT vec_id AS cell, embedding AS ce
@@ -172,7 +167,7 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM (
             SELECT /*+ BROADCAST(cent) */ vec_id,
                    max(struct(
-                     round({cos('embedding', 'ce')}, 6) + 0.0D AS cs,
+                     round({cosine('embedding', 'ce')}, 6) + 0.0D AS cs,
                      -cell AS nc,
                      embedding AS e)) AS best
             FROM {{corpus}} CROSS JOIN cent
@@ -184,7 +179,7 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                    q.q_id, q.qe, cent.cell,
                    row_number() OVER (
                      PARTITION BY q.q_id
-                     ORDER BY round({cos('qe', 'ce')}, 6) DESC, cent.cell
+                     ORDER BY round({cosine('qe', 'ce')}, 6) DESC, cent.cell
                    ) AS r
             FROM (SELECT vec_id AS q_id, embedding AS qe
                   FROM {{vec}} WHERE {_IVF_QUERY_FILTER}) q
@@ -193,7 +188,7 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ), scored AS (
           SELECT /*+ BROADCAST(probe) */
                  probe.q_id, assign.vec_id AS c_id,
-                 round({cos('qe', 'e')}, 6) + 0.0D AS cos_sim
+                 round({cosine('qe', 'e')}, 6) + 0.0D AS cos_sim
           FROM assign JOIN probe ON assign.cell = probe.cell
           WHERE assign.vec_id != probe.q_id
         )
@@ -522,7 +517,7 @@ def q_llm_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < IVF_K).select(
         F.col("vec_id").alias("cell"), F.col("embedding").alias("ce")
     )
-    cos_r = F.round(cosine("embedding", "ce"), 6) + 0.0
+    cos_r = F.round(F.expr(cosine("embedding", "ce")), 6) + 0.0
     assign = (
         emb.join(F.broadcast(cent))
         .groupBy("vec_id")
@@ -565,7 +560,7 @@ def _semdedup_emit(assign: DataFrame, all_rows: DataFrame | None = None
     dup = (
         assign.join(b, "cell")
         .where((F.col("b_id") < F.col("vec_id"))
-               & (F.round(cosine("e", "eb"), 6) >= SEM_TAU))
+               & (F.round(F.expr(cosine("e", "eb")), 6) >= SEM_TAU))
         .select("vec_id").distinct()
         .withColumn("hit", F.lit(1))
     )
@@ -632,7 +627,7 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.expr(f"vec_id % {CENT_MOD} = 3")).select(
         F.col("vec_id").alias("cell"), F.col("embedding").alias("ce")
     )
-    cos_r = F.round(cosine("embedding", "ce"), 6) + 0.0
+    cos_r = F.round(F.expr(cosine("embedding", "ce")), 6) + 0.0
     assign = (
         emb.join(F.broadcast(cent))
         .groupBy("vec_id")
@@ -720,7 +715,7 @@ def _semdedup_scale_assign(spark: SparkSession, sf_dir: str
         sig_v.join(sig_c, ["table", "bucket"])
         .dropDuplicates(["vec_id", "cell"])  # met in >=1 table -> score once
     )
-    cos_r = F.round(cosine("embedding", "ce"), 6) + 0.0
+    cos_r = F.round(F.expr(cosine("embedding", "ce")), 6) + 0.0
     assign = (
         cand.groupBy("vec_id")
         .agg(F.max(F.struct(
@@ -938,7 +933,7 @@ def q_llm_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``array_position(sims, array_max(sims))`` over a cell-id-ordered
     centroid array — first max == lowest cell id, the exact tiebreak of
     the oracle's ``ORDER BY cos DESC, cell`` window."""
-    from .similarity import _PQ_CODES, _pq_codebook
+    from .similarity import _PQ_ADC, _PQ_CODES, _pq_codebook
 
     emb = load_vec(spark, sf_dir).select("vec_id", "embedding")
     cent = emb.filter(F.col("vec_id") < IVF_K).select(
@@ -953,9 +948,8 @@ def q_llm_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.expr("transform(cs, s -> struct(s.vec_id AS cell,"
                        " s.embedding AS ce))").alias("cents"))
     )
-    sims = F.transform(
-        F.col("cents"),
-        lambda c: F.round(cosine(F.col("e"), c["ce"]), 6) + F.lit(0.0))
+    sims = F.expr(
+        f"transform(cents, c -> round({cosine('e', 'c.ce')}, 6) + 0.0D)")
     cell = F.element_at(
         F.col("cents"),
         F.array_position(sims, F.array_max(sims)).cast("int"))["cell"]
@@ -972,7 +966,7 @@ def q_llm_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"),
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("qe"),
     )
-    probe_cos = F.round(cosine("qe", "ce"), 6)
+    probe_cos = F.round(F.expr(cosine("qe", "ce")), 6)
     wp = Window.partitionBy("q_id").orderBy(probe_cos.desc(), F.col("cell"))
     probe = (
         q.join(F.broadcast(cent))
@@ -981,21 +975,12 @@ def q_llm_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "qe", "cell")
     )
 
-    adist = (
-        "aggregate(sequence(0, 7), CAST(0.0 AS DOUBLE), (acc, j) -> "
-        "acc + aggregate(transform(sequence(1, 8), i -> "
-        "(element_at(qe, j*8+i) - element_at(element_at(cb,"
-        " CAST(element_at(code, j+1) + 1 AS INT)), j*8+i)) * "
-        "(element_at(qe, j*8+i) - element_at(element_at(cb,"
-        " CAST(element_at(code, j+1) + 1 AS INT)), j*8+i))), "
-        "CAST(0.0 AS DOUBLE), (a, x) -> a + x))"
-    )
     scored = (
         index.join(F.broadcast(probe), "cell")
         .crossJoin(F.broadcast(_pq_codebook(emb)))
         .where(F.col("vec_id") != F.col("q_id"))
         .select("q_id", F.col("vec_id").alias("c_id"),
-                (F.round(F.expr(adist), 6) + F.lit(0.0)).alias("adc_dist"))
+                (F.round(F.expr(_PQ_ADC), 6) + F.lit(0.0)).alias("adc_dist"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("adc_dist").asc(), "c_id")
     return (
@@ -1205,7 +1190,7 @@ def q_llm_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", "embedding")
     cent = emb.filter(F.col("vec_id") < IVF_K).select(
         F.col("vec_id").alias("cell"), F.col("embedding").alias("ce"))
-    cos_r = F.round(cosine("embedding", "ce"), 6) + 0.0
+    cos_r = F.round(F.expr(cosine("embedding", "ce")), 6) + 0.0
     assign = (
         spread(emb).join(F.broadcast(cent))
         .groupBy("vec_id", "label")

@@ -5,10 +5,11 @@ DuckDB's list_cosine_similarity); the LSH-bucketed variant is the 100 TB
 scale path — random-hyperplane signatures computed DETERMINISTICALLY (seeded
 via xxhash64, not rand()) so results are reproducible and testable.
 
-All vector math runs JVM-side through higher-order array functions
-(zip_with / aggregate) — no Python in the row path; ranking uses the
-ROUNDED cosine (6 dp) with a vec_id tiebreak so ordering is identical
-across engines regardless of last-ulp float noise.
+All vector math runs JVM-side as sequential left folds over the arrays,
+built as SQL text by core/folds (dot/norm/cosine/cosine0/fsum) — no
+Python in the row path; ranking uses the ROUNDED cosine (6 dp) with a
+vec_id tiebreak so ordering is identical across engines regardless of
+last-ulp float noise.
 """
 
 from __future__ import annotations
@@ -18,85 +19,9 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..core.folds import cosine, cosine0, fsum, norm, operand
 from ..core.registry import query
 from ..core.tables import load, spread, stat_sig
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Σ aᵢ·bᵢ as a left fold in double — JVM higher-order, order-stable."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    ))
-
-
-def _sql_ident(name: str) -> str:
-    """Backtick-quote a plain-identifier column name for SQL-string
-    interpolation (the hyperplane_tables discipline: reject anything a
-    Column's str() could silently mis-parse into)."""
-    if not isinstance(name, str) or not name.isidentifier():
-        raise ValueError(
-            f"expected a plain-identifier column name, got {name!r}")
-    return f"`{name}`"
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-            f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
-            f"(acc, x) -> acc + x)")
-
-
-def _norm_sql(a: str) -> str:
-    return (f"SQRT(aggregate(transform({a}, x -> "
-            f"CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 0.0D, "
-            f"(acc, x) -> acc + x))")
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity.  Given COLUMN NAMES, the whole expression is
-    emitted as ONE SQL string — a single parser round-trip instead of
-    ~15 py4j lambda constructions (measured ~105 ms of driver-side
-    construction per call; the r12 hyperplane_tables lesson applied to
-    the vector family's hottest helper).  The resolved tree — same
-    zip_with/transform/aggregate lambdas, same DOUBLE casts, same 0.0D
-    seed, same left-fold order — is the one the Column path builds, so
-    results are bit-identical (full-collect verified across the vector
-    family); call sites with computed operands (slices, struct fields)
-    keep passing Columns and take the lambda path."""
-    if isinstance(a, str) and isinstance(b, str):
-        qa, qb = _sql_ident(a), _sql_ident(b)
-        return F.expr(
-            f"{_dot_sql(qa, qb)} / ({_norm_sql(qa)} * {_norm_sql(qb)})")
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine0(a: Column | str, b: Column | str) -> Column:
-    """Zero-norm-safe cosine: similarity to a zero vector is DEFINED as
-    0.0 (the neutral "no similarity" convention).  Required wherever a
-    zero norm is reachable — e.g. a Matryoshka PREFIX of a non-zero
-    vector can be all-zero — because the engines disagree on the
-    undefined case (ANSI Spark throws DIVIDE_BY_ZERO, DuckDB's
-    list_cosine_similarity clamps to -1.0).  Oracles of callers must
-    carry the matching CASE WHEN norm-product = 0 THEN 0.0 guard.
-    For non-zero norms the ELSE branch is the exact `cosine` division —
-    identical operands, identical bits.  Accepts column NAMES for the
-    one-SQL-string construction fast path (see cosine)."""
-    if isinstance(a, str) and isinstance(b, str):
-        qa, qb = _sql_ident(a), _sql_ident(b)
-        nprod = f"({_norm_sql(qa)} * {_norm_sql(qb)})"
-        return F.expr(
-            f"CASE WHEN {nprod} != 0.0D THEN {_dot_sql(qa, qb)} / {nprod} "
-            f"ELSE 0.0D END")
-    nprod = norm(a) * norm(b)
-    return F.when(nprod != 0.0, dot(a, b) / nprod).otherwise(F.lit(0.0))
 
 
 # ---------------------------------------------------------------------------
@@ -198,7 +123,7 @@ def q_llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.crossJoin(F.broadcast(q))
         .where(F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id",
-                (F.round(cosine("qe", "ce"), 6) + 0.0)
+                (F.round(F.expr(cosine("qe", "ce")), 6) + 0.0)
                 .alias("cos_sim"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("c_id"))
@@ -254,7 +179,7 @@ def q_llm_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.crossJoin(F.broadcast(q))
         .where(F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id", "label",
-                (F.round(cosine("qe", "ce"), 6) + 0.0)
+                (F.round(F.expr(cosine("qe", "ce")), 6) + 0.0)
                 .alias("cos_sim"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("c_id"))
@@ -338,10 +263,10 @@ def q_llm_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("q_id") != F.col("c_id"))
         .select(
             "q_id", "c_id",
-            (F.round(cosine0("qe", "ce"), 6) + 0.0)
+            (F.round(F.expr(cosine0("qe", "ce")), 6) + 0.0)
             .alias("cos_full"),
-            (F.round(cosine0(F.slice("qe", 1, _MRL_DIM),
-                             F.slice("ce", 1, _MRL_DIM)), 6) + 0.0)
+            (F.round(F.expr(cosine0(f"slice(qe, 1, {_MRL_DIM})",
+                                    f"slice(ce, 1, {_MRL_DIM})")), 6) + 0.0)
             .alias("cos_trunc"),
         )
     )
@@ -435,10 +360,10 @@ def q_llm_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("q_id") != F.col("c_id"))
         .select(
             "q_id", "c_id",
-            (F.round(cosine0("qe", "ce"), 6) + 0.0)
+            (F.round(F.expr(cosine0("qe", "ce")), 6) + 0.0)
             .alias("cos_full"),
-            (F.round(cosine0(F.slice("qe", 1, _MRL_DIM),
-                             F.slice("ce", 1, _MRL_DIM)), 6) + 0.0)
+            (F.round(F.expr(cosine0(f"slice(qe, 1, {_MRL_DIM})",
+                                    f"slice(ce, 1, {_MRL_DIM})")), 6) + 0.0)
             .alias("cos_trunc"),
         )
     )
@@ -500,22 +425,17 @@ def hyperplane_tables(emb_col: str, n_tables: int, bits: int) -> Column:
     resolved plan — same transform/aggregate lambdas, same literal
     types (INT table/bit/index, 0.0D seed, left fold) — is unchanged,
     so the buckets are bit-identical (verified by full collect at
-    sf0.1).  ``emb_col`` is the embedding COLUMN NAME — a plain
-    identifier only (asserted); it is interpolated into SQL text, so a
-    dotted/spaced/keyword name would mis-parse, and a Column object's
-    str() would interpolate silently wrong (r12 ADVICE)."""
-    if not emb_col.isidentifier():
-        raise ValueError(
-            f"hyperplane_tables needs a plain-identifier column name, "
-            f"got {emb_col!r} (pass the string name, not a Column)")
+    sf0.1).  ``emb_col`` is the embedding column NAME, validated and
+    quoted by `core.folds.operand` (a Column object's str() would
+    interpolate silently wrong — r12 ADVICE)."""
+    col = operand(emb_col)
     sigs = []
     for t in range(n_tables):
         terms = ["0"]
         for b in range(bits):
-            d = (f"aggregate(transform(`{emb_col}`, (x, j) -> "
-                 f"CAST(x AS DOUBLE) * (CAST(xxhash64({t}, {b}, j) "
-                 f"AS DOUBLE) / {_HYPERPLANE_SCALE})), "
-                 f"0.0D, (acc, x) -> acc + x)")
+            d = fsum(f"transform({col}, (x, j) -> "
+                     f"CAST(x AS DOUBLE) * (CAST(xxhash64({t}, {b}, j) "
+                     f"AS DOUBLE) / {_HYPERPLANE_SCALE}))")
             terms.append(f"(CASE WHEN {d} > 0 THEN {1 << b} ELSE 0 END)")
         sigs.append(" + ".join(terms))
     return F.expr("array(" + ", ".join(sigs) + ")")
@@ -556,7 +476,7 @@ def q_llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = cand.select(
         "q_id", "c_id",
-        (F.round(cosine("qe", "ce"), 6) + 0.0).alias("cos_sim"),
+        (F.round(F.expr(cosine("qe", "ce")), 6) + 0.0).alias("cos_sim"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("c_id"))
     return (
@@ -676,7 +596,7 @@ def q_llm_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sub.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
     )
     b = sub.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    cos = cosine("ea", "eb")
+    cos = F.expr(cosine("ea", "eb"))
     return (
         a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
         .where(F.round(cos, 6) >= 0.3)  # rounded: threshold can't straddle ulp noise
@@ -741,19 +661,14 @@ def q_llm_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
                "  CAST(floor(CAST(x AS DOUBLE) * 127.0D / scale + 0.5D)"
                "       AS BIGINT)))"),
     )
-    err2 = (
-        "transform(sequence(1, size(embedding)),"
-        " i -> (CAST(element_at(embedding, i) AS DOUBLE)"
-        "         - element_at(q, i) * scale / 127.0D)"
-        "      * (CAST(element_at(embedding, i) AS DOUBLE)"
-        "         - element_at(q, i) * scale / 127.0D))"
-    )
+    err = ("(CAST(element_at(embedding, i) AS DOUBLE)"
+           " - element_at(q, i) * scale / 127.0D)")
     return quant.select(
         "vec_id", "label", "scale",
         F.expr("aggregate(q, 0L, (a, x) -> a + x)").alias("sum_q"),
         F.expr("CAST(size(filter(q, x -> abs(x) = 127)) AS BIGINT)")
         .alias("n_sat"),
-        (F.expr(f"aggregate({err2}, CAST(0.0 AS DOUBLE), (a, x) -> a + x)")
+        (F.expr(fsum("sequence(1, size(embedding))", f"{err} * {err}", "i"))
          / F.size("embedding")).alias("mse"),
     )
 
@@ -897,7 +812,7 @@ def q_llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = spread(emb.filter(F.col("label").isNotNull())
                .select(F.col("vec_id").alias("c_id"), "label",
                        F.col("embedding").alias("ce")))
-    cos_r = F.round(cosine("qe", "ce"), 6) + 0.0
+    cos_r = F.round(F.expr(cosine("qe", "ce")), 6) + 0.0
     same = F.col("label") == F.col("q_label")
     cand = F.struct(cos_r.alias("cs"), (-F.col("c_id")).alias("nc"))
     best = (
@@ -935,12 +850,11 @@ PQ_K = 16         # centroids per subspace (codebook anchors: vec_id < K)
 
 # Per (vector, subspace j): squared L2 distance to each codebook centroid,
 # as a sequential left-fold (identical addition order cross-engine).
-_PQ_DISTS = (
-    "transform(cb, c -> aggregate(transform(sequence(1, {d}), i -> "
-    "(CAST(element_at(e, j*{d}+i) AS DOUBLE) - element_at(c, j*{d}+i)) * "
-    "(CAST(element_at(e, j*{d}+i) AS DOUBLE) - element_at(c, j*{d}+i))), "
-    "CAST(0.0 AS DOUBLE), (a, x) -> a + x))"
-).format(d=PQ_DSUB)
+_PQ_DIFF = (f"(CAST(element_at(e, j*{PQ_DSUB}+i) AS DOUBLE)"
+            f" - element_at(c, j*{PQ_DSUB}+i))")
+_PQ_DISTS = ("transform(cb, c -> "
+             + fsum(f"sequence(1, {PQ_DSUB})", f"{_PQ_DIFF} * {_PQ_DIFF}", "i")
+             + ")")
 
 # argmin per subspace: first index of the minimum (ties -> lowest centroid
 # id in BOTH engines: array_position and list_indexof are first-match).
@@ -948,6 +862,15 @@ _PQ_CODES = (
     f"transform(sequence(0, {PQ_M - 1}), j -> "
     f"array_position({_PQ_DISTS}, array_min({_PQ_DISTS})) - 1)"
 )
+
+# ADC distance of query `qe` to the vector whose per-subspace codes are
+# `code`, against codebook `cb`: Σ over subspaces of the squared L2 from
+# the query sub-vector to the centroid the code names.
+_PQ_QDIFF = (f"(element_at(qe, j*{PQ_DSUB}+i) - element_at(element_at(cb,"
+             f" CAST(element_at(code, j+1) + 1 AS INT)), j*{PQ_DSUB}+i))")
+_PQ_ADC = fsum(f"sequence(0, {PQ_M - 1})",
+               fsum(f"sequence(1, {PQ_DSUB})",
+                    f"{_PQ_QDIFF} * {_PQ_QDIFF}", "i"), "j")
 
 _PQ_DDISTS = (
     "list_transform(cb, c -> list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
@@ -1083,22 +1006,13 @@ def q_llm_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select(F.col("vec_id").alias("q_id"),
                   F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
                   .alias("qe")))
-    adist = (
-        f"aggregate(sequence(0, {PQ_M - 1}), CAST(0.0 AS DOUBLE), (acc, j) -> "
-        f"acc + aggregate(transform(sequence(1, {PQ_DSUB}), i -> "
-        "(element_at(qe, j*8+i) - element_at(element_at(cb,"
-        " CAST(element_at(code, j+1) + 1 AS INT)), j*8+i)) * "
-        "(element_at(qe, j*8+i) - element_at(element_at(cb,"
-        " CAST(element_at(code, j+1) + 1 AS INT)), j*8+i))), "
-        "CAST(0.0 AS DOUBLE), (a, x) -> a + x))"
-    )
     pairs = (
         spread(_pq_codes(emb).withColumnRenamed("vec_id", "c_id"))
         .crossJoin(F.broadcast(qs))
         .crossJoin(F.broadcast(_pq_codebook(emb)))
         .where(F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id",
-                (F.round(F.expr(adist), 6) + F.lit(0.0)).alias("adc_dist"))
+                (F.round(F.expr(_PQ_ADC), 6) + F.lit(0.0)).alias("adc_dist"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("adc_dist").asc(), "c_id")
     return (
@@ -1306,9 +1220,7 @@ def q_llm_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("w"),
         )
     )
-    wnorm = F.sqrt(F.aggregate(
-        F.transform("w", lambda x: x * x), F.lit(0.0),
-        lambda acc, x: acc + x))
+    wnorm = F.expr(norm("w"))
     return wh.select(
         "vec_id",
         (F.round(F.element_at("w", 1), 6) + F.lit(0.0)).alias("w1"),
@@ -1397,7 +1309,7 @@ def q_llm_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.col("label").alias("c_label"),
                           F.col("embedding").alias("ce")))
     w = Window.partitionBy("q_id").orderBy(
-        (F.round(cosine("qe", "ce"), 6) + 0.0).desc(), "c_id")
+        (F.round(F.expr(cosine("qe", "ce")), 6) + 0.0).desc(), "c_id")
     hits = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("q_id") != F.col("c_id"))

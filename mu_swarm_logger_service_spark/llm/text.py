@@ -14,6 +14,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..core.folds import fsum
 from ..core.numeric import dsum
 from ..core.registry import query
 from ..core.tables import iterate, load, spread
@@ -748,11 +749,8 @@ def q_llm_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_list(F.struct("lang", "n"))).alias("ls"),
         F.sum("n").cast("long").alias("n_docs"),
     )
-    p = lambda e: e.getField("n").cast("double") / F.col("n_docs")  # noqa: E731
-    h = -F.aggregate(
-        F.col("ls"), F.lit(0.0),
-        lambda acc, e: acc + p(e) * F.log2(p(e)),
-    )
+    p = "(CAST(e.n AS DOUBLE) / n_docs)"
+    h = -F.expr(fsum("ls", f"{p} * log2({p})", "e"))
     return per_source.select(
         "source", "n_docs",
         F.size("ls").cast("long").alias("n_langs"),
@@ -2591,9 +2589,8 @@ def q_llm_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("l_distinct"),
         F.sort_array(F.collect_list(F.struct("lang", "n"))).alias("ls"),
     )
-    p = lambda e: e.getField("n").cast("double") / F.col("group_n")  # noqa: E731
-    h = -F.aggregate(F.col("ls"), F.lit(0.0),
-                     lambda acc, e: acc + p(e) * F.log(p(e)))
+    p = "(CAST(e.n AS DOUBLE) / group_n)"
+    h = -F.expr(fsum("ls", f"{p} * ln({p})", "e"))
     return cls.select(
         "source", "len_bucket", "group_n", "l_distinct",
         (F.col("l_distinct") < LDIV_MIN).alias("at_risk"),

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..core.folds import fsum
 from ..core.numeric import (davg, davg_sql, dsum, dsum_sql,
                             in_measure_domain, measure, measure_sql)
 from ..core.registry import query
@@ -942,13 +943,8 @@ def q_agg_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.max("n"), F.lit(0).cast("long")).alias("n"),
         F.countDistinct("s").cast("long").alias("n_rows"),
         F.countDistinct("p").cast("long").alias("n_cols"),
-        F.aggregate(
-            F.sort_array(F.collect_list(
-                F.struct(F.col("s").alias("s"), F.col("p").alias("p"),
-                         F.col("term").alias("term")))),
-            F.lit(0.0),
-            lambda acc, x: acc + x.getField("term"),
-        ).alias("chi2"),
+        F.expr(fsum("sort_array(collect_list(struct(s, p, term)))",
+                    "x.term")).alias("chi2"),
     )
     # class K / degenerate cardinality: dof clamps at 0 (the raw
     # (r-1)(c-1) is 1 for an empty table), and cramers_v rides
@@ -1050,21 +1046,16 @@ def q_agg_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").cast("long").alias("n_total"),
         F.count(F.lit(1)).cast("long").alias("k"),
     )
-    fsum = lambda expr: F.aggregate(  # noqa: E731
-        F.col("ls"), F.lit(0.0), lambda acc, e: acc + expr(e))
     sums = packed.select(
         "ls", "n_total", "k",
-        fsum(lambda e: e.getField("s")).alias("s_all"),
+        F.expr(fsum("ls", "e.s", "e")).alias("s_all"),
     )
-    mean_dev = lambda e: (e.getField("s") / e.getField("n")  # noqa: E731
-                          - F.col("s_all") / F.col("n_total"))
+    mean_dev = "(e.s / e.n - s_all / n_total)"
     parts = sums.select(
         "n_total", "k",
-        fsum(lambda e: e.getField("n").cast("double")
-             * mean_dev(e) * mean_dev(e)).alias("ssb"),
-        fsum(lambda e: e.getField("q")
-             - e.getField("s") * e.getField("s") / e.getField("n"))
-        .alias("ssw"),
+        F.expr(fsum("ls", f"CAST(e.n AS DOUBLE) * {mean_dev} * {mean_dev}",
+                    "e")).alias("ssb"),
+        F.expr(fsum("ls", "e.q - e.s * e.s / e.n", "e")).alias("ssw"),
     )
     # class K / degenerate cardinality: every division rides try_divide
     # (NULL on a zero divisor, mirroring DuckDB's /0 -> NULL) — k=1

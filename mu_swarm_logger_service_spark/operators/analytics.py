@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..core.folds import fsum
 from ..core.numeric import (davg, davg_sql, dsum, dsum_sql,
                             in_measure_domain, measure, measure_sql)
 from ..core.registry import query
@@ -2415,24 +2416,18 @@ def q_analytics_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_list(
             F.struct("x", "wd", "o", "rx", "cy", "n"))).alias("ls"),
     )
-    term = lambda e: (  # noqa: E731
-        (e.getField("o").cast("double") / e.getField("n"))
-        * F.log((e.getField("o").cast("double") * e.getField("n"))
-                / (e.getField("rx").cast("double") * e.getField("cy"))))
-    mi = F.aggregate(F.col("ls"), F.lit(0.0),
-                     lambda acc, e: acc + term(e))
+    mi = F.expr(fsum("ls", "(CAST(e.o AS DOUBLE) / e.n)"
+                           " * ln((CAST(e.o AS DOUBLE) * e.n)"
+                           " / (CAST(e.rx AS DOUBLE) * e.cy))", "e"))
 
     def h(field_m: str):
         # H(X) = -SUM_cells (o/n) ln(rx/n): grouping the cells of one x
         # contributes (rx/n) ln(rx/n) exactly, so the marginal entropy
         # rides the SAME sorted cell fold (no struct-distinct, which
         # DuckDB cannot list_distinct).
-        def t(e):
-            return (-(e.getField("o").cast("double") / e.getField("n"))
-                    * F.log(e.getField(field_m).cast("double")
-                            / e.getField("n")))
-        return F.aggregate(F.col("ls"), F.lit(0.0),
-                           lambda acc, e: acc + t(e))
+        return F.expr(fsum("ls", f"-(CAST(e.o AS DOUBLE) / e.n)"
+                                 f" * ln(CAST(e.{field_m} AS DOUBLE) / e.n)",
+                           "e"))
 
     # class K / degenerate cardinality: NMI's denominator sqrt(Hx*Hy) is
     # 0 when either marginal entropy is 0 — a SINGLE event type (or
@@ -2555,10 +2550,10 @@ def q_analytics_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
              "WHEN 1 THEN CAST(1.0 AS DOUBLE) / 12 "
              "WHEN 2 THEN CAST(1.0 AS DOUBLE) / 12 "
              "ELSE CAST(1.0 AS DOUBLE) / 4 END")
-    shap = F.expr(
-        f"aggregate(filter(sequence(0, 15), s -> (s & bit) = 0), "
-        f"CAST(0.0 AS DOUBLE), (a, s) -> a + ({w_sql}) "
-        f"* (element_at(v, (s | bit) + 1) - element_at(v, s + 1)))")
+    shap = F.expr(fsum(
+        "filter(sequence(0, 15), s -> (s & bit) = 0)",
+        f"({w_sql}) * (element_at(v, (s | bit) + 1) - element_at(v, s + 1))",
+        "s"))
     return (chan.crossJoin(F.broadcast(vtab))
             .select("channel", shap.alias("shapley")))
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..core.folds import fsum
 from ..core.numeric import measure, measure_sql
 from ..core.registry import query
 from ..core.tables import load, observed_time
@@ -2129,10 +2130,8 @@ def q_ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
                           "struct(d, y))), s -> s.y)").alias("ys"))
               .filter(F.size("ys") >= 2 * _HW_M + 1))
     a, b, g, m = _HW_ALPHA, _HW_BETA, _HW_GAMMA, _HW_M
-    sum1 = (f"aggregate(slice(ys, 1, {m}), cast(0.0 as double), "
-            f"(a, x) -> a + x)")
-    sum2 = (f"aggregate(slice(ys, {m} + 1, {m}), cast(0.0 as double), "
-            f"(a, x) -> a + x)")
+    sum1 = fsum(f"slice(ys, 1, {m})")
+    sum2 = fsum(f"slice(ys, {m + 1}, {m})")
     lt = (f"{a} * (y - element_at(acc.s, 1)) "
           f"+ {1 - a} * (acc.l + acc.b)")
     state = F.expr(
@@ -2430,12 +2429,8 @@ def q_ts_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_list(
             F.struct("cur", "nxt", "o", "row_n", "n"))).alias("ls"),
     )
-    h = F.aggregate(
-        F.col("ls"), F.lit(0.0),
-        lambda acc, e: acc + (
-            -(e.getField("o").cast("double") / e.getField("n"))
-            * F.log(e.getField("o").cast("double")
-                    / e.getField("row_n"))))
+    h = F.expr(fsum("ls", "-(CAST(e.o AS DOUBLE) / e.n)"
+                          " * ln(CAST(e.o AS DOUBLE) / e.row_n)", "e"))
     return packed.select(
         F.col("n").alias("n_transitions"),
         (F.round(h, 6) + 0.0).alias("h_rate_nats"),

@@ -10,6 +10,7 @@ iterator (row 71), SQL-registered UDTF (row 72) and scalar UDF (row 73).
 
 from __future__ import annotations
 
+import uuid
 from typing import Iterator
 
 import pandas as pd
@@ -217,9 +218,15 @@ SELECT i, i * i AS sq FROM generate_series(0, 31) t(i)
 """)
 def q_udtf_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-registered UDTF (row 72): table-valued function callable from
-    the FROM clause."""
-    spark.udtf.register("squares_udtf", udtf(_SquaresUDTF, returnType="i int, sq int"))
-    return spark.sql("SELECT i, sq FROM squares_udtf(0, 31)")
+    the FROM clause.  Registered under a fresh name and dropped once the
+    query is analyzed (the `spark.sql(..., df=...)` view discipline), so
+    no session-wide function name outlives the call."""
+    name = f"squares_udtf_{uuid.uuid4().hex}"
+    spark.udtf.register(name, udtf(_SquaresUDTF, returnType="i int, sq int"))
+    try:
+        return spark.sql(f"SELECT i, sq FROM {name}(0, 31)")
+    finally:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
 
 
 # ---------------------------------------------------------------------------
@@ -252,11 +259,15 @@ def q_udf_register_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         out[~(v.abs() < 1e21)] = pd.NA
         return out
 
-    spark.udf.register("clip250", clip250)
-    return spark.sql(
-        "SELECT event_id, clip250(value) AS value_clipped FROM {events}",
-        events=load(spark, sf_dir, "events"),
-    )
+    name = f"clip250_{uuid.uuid4().hex}"
+    spark.udf.register(name, clip250)
+    try:
+        return spark.sql(
+            f"SELECT event_id, {name}(value) AS value_clipped FROM {{events}}",
+            events=load(spark, sf_dir, "events"),
+        )
+    finally:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
 
 
 # ---------------------------------------------------------------------------

@@ -71,7 +71,7 @@ def compare(spark, duck, sf_dir: str, fn, sql: str, name: str = "?",
     # schema ban lives in tests/test_registry_contract.py; this catches
     # object-dtype leaks the schema can't see.)
     for col in sdf.columns:
-        bad = sdf[col].map(lambda v: isinstance(v, _DRIVER_UNHASHABLE)).any()
+        bad = any(isinstance(v, _DRIVER_UNHASHABLE) for v in sdf[col])
         assert not bad, (
             f"{name}.{col}: driver-unhashable cell type (bytes/list/dict) "
             "— render it (hex/to_json/concat_ws) before returning")

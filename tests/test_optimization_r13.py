@@ -4,7 +4,7 @@ Each test pins ONE mechanism this round changed:
 - backlog-sized streaming state partitions (_state_partitions, applied
   by the stream runner _run_available_now),
 - the per-session, freshness-keyed base-table plan cache (load),
-- the one-SQL-string cosine fast path's bit-identity with the Column path,
+- the SQL-text folds' bit-identity with the Column-lambda folds,
 - deterministic checkpoint unpersist (pagerank and star-contraction loops,
   memory-sink views).
 """
@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,12 +82,47 @@ def test_load_plan_cache_hits_and_freshness(spark, sf_dir, tmp_path):
     assert c2.count() == len(sub)
 
 
+def _ref_dot(a, b):
+    """The Column-lambda fold core/folds replaced — the reference."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _ref_norm(a):
+    return F.sqrt(F.aggregate(
+        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0), lambda acc, x: acc + x))
+
+
+def _ref_cosine(a, b):
+    return _ref_dot(a, b) / (_ref_norm(a) * _ref_norm(b))
+
+
+def _ref_cosine0(a, b):
+    nprod = _ref_norm(a) * _ref_norm(b)
+    return F.when(nprod != 0.0, _ref_dot(a, b) / nprod).otherwise(F.lit(0.0))
+
+
+def _assert_same_bits(df, new, ref, key):
+    """``new`` and ``ref`` give the same IEEE bits (NULL == NULL) on
+    every row of ``df``; returns the values."""
+    rows = df.select(*key, new.alias("new"), ref.alias("ref")).collect()
+    assert rows
+    bits = lambda v: None if v is None else struct.pack("<d", v)  # noqa: E731
+    for r in rows:
+        assert bits(r.new) == bits(r.ref), r
+    return [r.new for r in rows]
+
+
 def test_cosine_name_path_bit_identical(spark, sf_dir):
-    """The one-SQL-string cosine/cosine0 must produce the same bits as the
-    Column-lambda path on real fixture vectors (including invalids being
-    pre-filtered by load_vec)."""
-    from mu_swarm_logger_service_spark.llm.similarity import (
-        cosine, cosine0, load_vec)
+    """The SQL-text folds (core/folds) produce the same bits as the
+    Column-lambda folds they replaced, on real fixture vectors: identifier,
+    slice and lambda-struct-field operands, cosine0 on a zero-norm slice,
+    and the fsum entropy terms (log2 and ln)."""
+    from mu_swarm_logger_service_spark.core.folds import (
+        cosine, cosine0, fsum)
+    from mu_swarm_logger_service_spark.llm.similarity import load_vec
 
     emb = load_vec(spark, sf_dir).select("vec_id", "embedding").limit(200)
     a = emb.select(F.col("vec_id").alias("i"),
@@ -94,26 +130,64 @@ def test_cosine_name_path_bit_identical(spark, sf_dir):
     b = emb.select(F.col("vec_id").alias("j"),
                    F.col("embedding").alias("eb"))
     pairs = a.join(b, F.col("i") % 13 == F.col("j") % 13)
-    for fn in (cosine, cosine0):
-        old = pairs.select("i", "j",
-                           fn(F.col("ea"), F.col("eb")).alias("c")).collect()
-        new = pairs.select("i", "j", fn("ea", "eb").alias("c")).collect()
-        o = sorted(old, key=lambda r: (r.i, r.j))
-        n = sorted(new, key=lambda r: (r.i, r.j))
-        assert len(o) == len(n) and len(o) > 0
-        for x, y in zip(o, n):
-            same = (x.c == y.c) or (x.c is None and y.c is None) \
-                or (x.c != x.c and y.c != y.c)
-            assert same, (x, y)
+    ea, eb = F.col("ea"), F.col("eb")
+    for new, ref in ((cosine, _ref_cosine), (cosine0, _ref_cosine0)):
+        _assert_same_bits(pairs, F.expr(new("ea", "eb")), ref(ea, eb),
+                          ["i", "j"])
+    _assert_same_bits(
+        pairs, F.expr(cosine0("slice(ea, 1, 32)", "slice(eb, 1, 32)")),
+        _ref_cosine0(F.slice(ea, 1, 32), F.slice(eb, 1, 32)), ["i", "j"])
+
+    # A zero prefix: the slice norm is 0, so cosine0 is defined as 0.0.
+    zpad = pairs.withColumn(
+        "za", F.concat(F.array_repeat(F.lit(0.0).cast("float"), 8), ea))
+    zero = _assert_same_bits(
+        zpad, F.expr(cosine0("slice(za, 1, 8)", "slice(eb, 1, 8)")),
+        _ref_cosine0(F.slice("za", 1, 8), F.slice(eb, 1, 8)), ["i", "j"])
+    assert set(zero) == {0.0}
+
+    # Lambda-field operand inside an outer transform (the IVF-PQ shape).
+    cents = emb.filter("vec_id < 8").agg(F.array_sort(F.collect_list(
+        F.struct(F.col("vec_id").alias("cell"),
+                 F.col("embedding").alias("ce")))).alias("cents"))
+    withc = a.crossJoin(cents).withColumn("e", ea)
+    _assert_same_bits(
+        withc,
+        F.expr(f"transform(cents, c -> {cosine('e', 'c.ce')})")[3],
+        F.transform("cents", lambda c: _ref_cosine(F.col("e"), c["ce"]))[3],
+        ["i"])
+
+    # Entropy folds over a sorted (lang, n) struct list.
+    docs = T.load(spark, sf_dir, "documents")
+    ls = (docs.groupBy("source", "lang").count()
+          .groupBy("source")
+          .agg(F.sort_array(F.collect_list(F.struct("lang", "count")))
+               .alias("ls"), F.sum("count").alias("n")))
+    p = lambda e: e["count"].cast("double") / F.col("n")  # noqa: E731
+    for sql_log, col_log in (("log2", F.log2), ("ln", F.log)):
+        pe = "(CAST(e.count AS DOUBLE) / n)"
+        _assert_same_bits(
+            ls, -F.expr(fsum("ls", f"{pe} * {sql_log}({pe})", "e")),
+            -F.aggregate("ls", F.lit(0.0),
+                         lambda acc, e: acc + p(e) * col_log(p(e))),
+            ["source"])
 
 
 def test_cosine_name_path_rejects_non_identifier():
-    from mu_swarm_logger_service_spark.llm.similarity import cosine
+    """Fold operands are interpolated into SQL text: only identifier
+    paths (each part backtick-quoted) and integer-bounded slices pass."""
+    from mu_swarm_logger_service_spark.core.folds import (
+        cosine, norm, operand)
 
+    for bad in ("a; DROP", "a b", "a..b", "1a", "a`b", "slice(a, 1, n)",
+                "slice(a, 1.5, 8)", "max(a)"):
+        with pytest.raises(ValueError):
+            cosine(bad, "c")
     with pytest.raises(ValueError):
-        cosine("a.b", "c")  # dotted name would mis-parse in SQL text
-    with pytest.raises(ValueError):
-        cosine("a; DROP", "c")
+        norm(F.col("a"))
+    assert operand("a.b") == "`a`.`b`"
+    assert operand("slice(c.ce, 1, 32)") == "slice(`c`.`ce`, 1, 32)"
+    assert "zip_with(`a`.`b`, `c`, " in cosine("a.b", "c")
 
 
 def _n_persistent(spark) -> int:
