@@ -50,6 +50,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mu_swarm_logger_service_spark import all_queries, get_spark  # noqa: E402
+from perfbench.run import host_control  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -149,6 +150,12 @@ def main() -> None:
      .select(F.explode(F.expr(pair_expr)).alias("p"))
      .select("p.doc_a", "p.doc_b").distinct().count())
 
+    # Same-run host control (perfbench's fixed job, sum of 0..5e7-1) before
+    # and after the headline queries: host speed drifts x2-4 between
+    # windows, so a total is comparable across runs only next to these.
+    # The control's first run in a JVM compiles its job; time the second.
+    host_control(spark)
+    control_before = host_control(spark)
     per_query: dict[str, float] = {}
     cold_query: dict[str, float] = {}
     rep3_query: dict[str, float] = {}
@@ -168,6 +175,7 @@ def main() -> None:
         cold_total += reps[0]
         print(f"# {name}: warm {reps[1]:.3f}s / cold {reps[0]:.3f}s / "
               f"rep3 {reps[2]:.3f}s ({n} rows)", file=sys.stderr)
+    control_after = host_control(spark)
 
     # Ingestion throughput: the reference's whole job (event stream →
     # triples → sink) measured as events/s.  Reference ceiling: one
@@ -181,9 +189,9 @@ def main() -> None:
     # after a DRIVER GC collects the RDD handles (Python-side first, so
     # py4j drops its JVM references).  Left alone, that debt surfaces as
     # GC pauses inside the ingest micro-batches: r7 recorded 79.2k ev/s
-    # here while the identical code measured 97-107k on an idle session
-    # (tools/ingest_probe.py, which also re-verified repartition_to=8
-    # takes effect: 8 batch partitions).  Collect it so this phase
+    # here while the identical code measured 97-107k on an idle session,
+    # where repartition_to=8 was also re-verified to take effect (8 batch
+    # partitions).  Collect it so this phase
     # measures the ingest path, not the query phase's garbage.
     import gc as _gc
     _gc.collect()
@@ -219,6 +227,8 @@ def main() -> None:
         # field on this line, could not distinguish that from a dead env var.
         "cpus_effective": spark.sparkContext.defaultParallelism,
         "master": spark.sparkContext.master,
+        "host_control_before_s": round(control_before, 3),
+        "host_control_after_s": round(control_after, 3),
     }))
 
 

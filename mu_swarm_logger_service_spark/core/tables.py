@@ -218,32 +218,43 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # events.ts has shipped as parquet TIMESTAMP(NANOS) in some testdata
-    # generations (Spark 4 rejects it outright without the legacy flag) and
-    # TIMESTAMP(MICROS) in others; enable the legacy nanos-as-long read so
-    # both load, then normalize in _normalize_events_ts.  The flag is scoped
-    # to this read: it is restored afterwards so an unrelated parquet read of
-    # a NANOS column elsewhere in the session still fails loudly instead of
-    # silently yielding int64.
+    # generations and TIMESTAMP(MICROS) in others.  Spark 4 refuses to
+    # infer a NANOS column, but reads it as int64 nanos under an explicit
+    # ``ts long`` schema, with no session conf involved;
+    # _normalize_events_ts then converts either encoding.
     def build():
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
-            df = spark.read.parquet(f"{sf_dir}/events.parquet")
-            df.schema  # force analysis (and the footer read) under the flag
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        return df
+        path = f"{sf_dir}/events.parquet"
+        schema = _nanos_ts_schema(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path)
 
     return _plan_cached(spark, "raw", sf_dir, "events", build)
 
 
+def _nanos_ts_schema(path: str):
+    """The Spark schema of a file- or directory-shaped events parquet with
+    ``ts`` as long, when the footer of its first file types ``ts`` as
+    TIMESTAMP(NANOS); otherwise None (Spark infers the schema)."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    for first in ds.dataset(path, format="parquet").files[:1]:
+        footer = pq.ParquetFile(first)
+        ts = footer.schema.column(footer.schema.names.index("ts")).logical_type
+        if json.loads(ts.to_json()).get("timeUnit") == "nanoseconds":
+            arrow = footer.schema_arrow
+            return from_arrow_schema(arrow.set(
+                arrow.get_field_index("ts"), pa.field("ts", pa.int64())))
+    return None
+
+
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to session-zone TIMESTAMP (µs) regardless of
-    how the parquet writer encoded it: int64 nanos (legacy flag), NTZ micros,
+    how the parquet writer encoded it: int64 nanos (read as long), NTZ micros,
     or already LTZ.  DuckDB's view of the same file agrees under UTC."""
     from pyspark.sql.types import LongType, TimestampNTZType
 

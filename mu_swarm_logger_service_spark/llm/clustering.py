@@ -444,8 +444,8 @@ def q_llm_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     def rank_round(r: DataFrame) -> DataFrame:
         # r12 (guide §3.1/§2.4): the rank vector and the per-parent mass
         # are container-scale, so both are broadcast and only the
-        # parent-key aggregation shuffles (plans/r12/q_llm_pagerank_
-        # roundbody_*.txt: SortMergeJoin 1→0, Exchange 3→2 per round).
+        # parent-key aggregation shuffles (r12 round-body plan:
+        # SortMergeJoin 1→0, Exchange 3→2 per round).
         mass = (
             edges.join(F.broadcast(r), edges.child == r.node)
             .groupBy(F.col("parent").alias("node"))

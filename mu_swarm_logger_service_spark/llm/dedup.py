@@ -377,9 +377,9 @@ def q_llm_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full tokenizations and three spread exchanges of the corpus.  The
     # checkpointed token table is the decision-pass intermediate: one
     # scan, one tokenization, and the downstream branches read the
-    # materialized arrays.  Plan evidence (plans/r12/q_llm_near_dedup_
-    # {before,after}.txt): 3 parquet scans → 1 (in the checkpoint job;
-    # the final plan reads the token table 3×), Exchange 6 → 3.
+    # materialized arrays.  Physical plan (r12): 3 parquet scans → 1 (in
+    # the checkpoint job; the final plan reads the token table 3×),
+    # Exchange 6 → 3.
     # Interleaved A/B at sf0.1: old 2.235 s / new 2.106 s median
     # (×0.94).  At 100 TB this is the "fingerprints written once"
     # pattern (the token table is what a real pipeline would persist
@@ -423,7 +423,7 @@ def q_llm_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions AQE coalesced by BYTES, blind to the per-pair intersect
     # compute) and then `repartition(n_par, "doc_b")` to win the
     # parallelism back, re-shuffling candidate rows already widened by
-    # tok_a.  Interleaved A/B of the phase at sf0.1 (plans/r13, probe in
+    # tok_a.  Interleaved A/B of the phase at sf0.1 (probe in
     # OPTIMIZATION_r13.md): 0.66-0.74 s -> 0.41-0.45 s warm, identical
     # 106,237 output rows; one full-width exchange of the tok_a-widened
     # candidate set removed from the plan.
@@ -431,7 +431,7 @@ def q_llm_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = expanded.repartition(n_par, "doc_a", "doc_b").dropDuplicates()
     tok = tok_full.select("doc_id", "tok")
     # Token-attach joins stay UNPINNED: at bench scale the planner
-    # broadcasts the token table itself (verified in plans/r13); at 100 TB
+    # broadcasts the token table itself (r13 physical plan); at 100 TB
     # a corpus-sized build side must be free to plan as SMJ, so a
     # broadcast hint here would be a posture bug, not an optimization.
     with_tok = (

@@ -107,8 +107,8 @@ def q_llm_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs suffice.  tf is checkpointed because both the join arm and
     # the df arm consume it (Spark has no CTE dedup — the reuse would
     # otherwise recompute the explode per arm, the price-index/edge-set
-    # discipline).  Plan evidence (plans/r12/q_llm_tfidf_keywords_*.txt):
-    # parquet scans 3 → 1, Exchange 6 → 5 — the df arm's shuffle now
+    # discipline).  Physical plan (r12): parquet scans 3 → 1,
+    # Exchange 6 → 5 — the df arm's shuffle now
     # carries pre-aggregated (lang, token) rows, not the raw token
     # stream.  Interleaved A/B at sf0.1 is neutral-to-slightly-worse
     # (old 0.438 s / new 0.468 s median, ×1.07 — the checkpoint

@@ -87,9 +87,9 @@ def q_sparql_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     def extend(frontier: DataFrame) -> DataFrame:
         # PIN the broadcast of the container-scale edge relation (r12,
         # guide §3.1): the per-round join stays a map-side hash join even
-        # if a stats-less replanning would pick SMJ.  Round-body plans
-        # (plans/r12/q_sparql_path_roundbody_*.txt) are identical at bench
-        # scale, A/B neutral (1.360 / 1.432 s at sf0.1).
+        # if a stats-less replanning would pick SMJ.  The r12 round-body
+        # plans with and without the pin are identical at bench scale,
+        # A/B neutral (1.360 / 1.432 s at sf0.1).
         return (
             frontier.join(F.broadcast(edges), frontier.dst == edges.child)
             .select(frontier.src, F.col("parent").alias("dst"),

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf, udtf
 
 from ..core.registry import query
-from ..core.tables import load
+from ..core.tables import _ship_package, load
 
 
 # ---------------------------------------------------------------------------
@@ -220,7 +220,10 @@ def q_udtf_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-registered UDTF (row 72): table-valued function callable from
     the FROM clause.  Registered under a fresh name and dropped once the
     query is analyzed (the `spark.sql(..., df=...)` view discipline), so
-    no session-wide function name outlives the call."""
+    no session-wide function name outlives the call.  The UDTF class is
+    pickled by module reference and no table is loaded, so the package is
+    shipped here, as ``stream_events`` does."""
+    _ship_package(spark)
     name = f"squares_udtf_{uuid.uuid4().hex}"
     spark.udtf.register(name, udtf(_SquaresUDTF, returnType="i int, sq int"))
     try:

@@ -46,9 +46,10 @@ def test_no_custom_session_conf_or_fixed_name_views():
     session-conf key (tunables are module constants), and the only temp
     views are the table views of the SQL entry point — query bodies pass
     DataFrames to ``spark.sql`` as parameters instead of registering a
-    fixed name two concurrent queries would share."""
+    fixed name two concurrent queries would share.  Session conf is
+    written (``conf.set``/``conf.unset``) only by the stream runner."""
     root = pathlib.Path(pkg.__file__).parent
-    keys, views = [], set()
+    keys, views, conf_writes = [], set(), set()
 
     def visit(node, func, rel):
         for child in ast.iter_child_nodes(node):
@@ -62,6 +63,12 @@ def test_no_custom_session_conf_or_fixed_name_views():
                     and isinstance(child.func, ast.Attribute)
                     and child.func.attr == "createOrReplaceTempView"):
                 views.add((rel, func))
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in ("set", "unset")
+                    and isinstance(child.func.value, ast.Attribute)
+                    and child.func.value.attr == "conf"):
+                conf_writes.add((rel, func))
             visit(child, f, rel)
 
     for path in root.rglob("*.py"):
@@ -69,6 +76,8 @@ def test_no_custom_session_conf_or_fixed_name_views():
         visit(ast.parse(path.read_text()), None, rel)
     assert not keys, keys
     assert views == {("core/tables.py", "register_views")}, views
+    assert conf_writes <= {("streaming/queries.py", "_run_available_now")}, \
+        conf_writes
 
 
 _ZERO_SEEDS = {"0.0d", "0.0", "cast(0.0asdouble)", "0d", "cast(0asdouble)"}
@@ -183,3 +192,29 @@ def test_udx_queries_leave_no_temp_functions(spark, sf_dir):
     for name in ("q_udf_register_sql", "q_udtf_sql"):
         assert entrymod.queries()[name](spark, sf_dir).count() > 0
     assert temp_functions() == before
+
+
+def test_udtf_query_first_on_plain_session_from_foreign_cwd(sf_dir, tmp_path):
+    """``q_udtf_sql`` pickles its UDTF class by module reference and loads
+    no table, so it ships the package itself: run as the first query of a
+    plain session whose cwd is outside the repository, its executors
+    still import the package."""
+    import os
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(pkg.__file__).parent.parent
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(repo)!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = SparkSession.builder.master('local[2]').getOrCreate()\n"
+        "import __spark_entry__\n"
+        "df = __spark_entry__.queries()['q_udtf_sql']"
+        f"(spark, {sf_dir!r})\n"
+        "print('ROWS', df.count())\n"
+        "spark.stop()\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True, timeout=600)
+    assert "ROWS 32" in out.stdout.splitlines(), out.stderr[-2000:]

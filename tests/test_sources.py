@@ -157,3 +157,47 @@ def test_events_ts_encoding_matrix(spark, sf_dir, tmp_path_factory):
         f"read_parquet('{d}/events.parquet')").fetchall())
     assert sp == dk
     assert sp[1] == 0 and sp[6] == 0 and sp[9] == -1  # trunc-toward-zero
+
+
+def test_nanos_events_read_without_session_conf(spark, sf_dir, tmp_path,
+                                               monkeypatch):
+    """A TIMESTAMP(NANOS) ``events.ts``, file- or directory-shaped, loads
+    and streams the same rows as the shipped micros table, and reading it
+    writes no session conf: the footer decides the read schema, so no
+    query planned meanwhile in the same session can see a flipped flag."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.conf import RuntimeConfig
+
+    from mu_swarm_logger_service_spark.streaming.transforms import stream_events
+
+    base = pq.read_table(f"{sf_dir}/events.parquet")
+    i = base.schema.get_field_index("ts")
+    nanos = base.set_column(i, pa.field("ts", pa.timestamp("ns")),
+                            base.column("ts").cast(pa.timestamp("ns")))
+    as_file, as_dir = tmp_path / "file", tmp_path / "dir" / "events.parquet"
+    as_file.mkdir()
+    as_dir.mkdir(parents=True)
+    pq.write_table(nanos, as_file / "events.parquet")
+    half = nanos.num_rows // 2
+    pq.write_table(nanos.slice(0, half), as_dir / "part-0.parquet")
+    pq.write_table(nanos.slice(half), as_dir / "part-1.parquet")
+
+    def rows(df):
+        return sorted(df.withColumn("ts", F.unix_micros("ts")).collect())
+
+    ref = rows(load(spark, sf_dir, "events"))
+    writes = []
+    for name in ("set", "unset"):
+        orig = getattr(RuntimeConfig, name)
+        monkeypatch.setattr(RuntimeConfig, name, lambda self, key, *v, _o=orig:
+                            writes.append(key) or _o(self, key, *v))
+    before = spark.conf.getAll
+    for d in (str(as_file), os.path.dirname(as_dir)):
+        assert rows(load(spark, d, "events")) == ref, d
+        assert rows(_run_stream(stream_events(spark, d))) == ref, d
+    assert writes == []
+    assert spark.conf.getAll == before
