@@ -291,7 +291,8 @@ def q_llm_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import jaccard_half_edges
 
-    half = jaccard_half_edges(spark, sf_dir, with_block=True)
+    half = jaccard_half_edges(spark, sf_dir).select(
+        "doc_a", "doc_b", "lang", "source")
     comp = half.groupBy("lang", "source").applyInPandas(
         lambda pdf: _uf_components(pdf),
         "node long, component long, group_size long",

@@ -4,12 +4,10 @@ Scale design (100 TB): every method here avoids the O(n²) crossJoin of all
 documents —
 
 - exact dedup is one hash-groupBy (single shuffle on the content hash);
-- MinHash/LSH shuffles on (band, bucket) so only same-bucket docs ever
-  meet; the exact-Jaccard verification runs on the candidate pairs only;
-- the exact pairwise Jaccard baseline restricts pairs to an equi-key
-  blocking group (lang, source) — the pattern a real pipeline uses to keep
-  pair counts bounded (blocking) — and is the ground truth the LSH path is
-  measured against in tests.
+- MinHash/LSH and prefix filtering emit candidate pairs from equi joins on
+  a bucket or prefix token, verified by `verify_pairs`;
+- the pairwise baselines pair documents within a (lang, source) block via
+  `block_pairs`, behind the quadratic admission guard.
 """
 
 from __future__ import annotations
@@ -68,7 +66,7 @@ _block_max: dict[tuple[str, tuple[int, int], int | None], int] = {}
 
 def _guard_quadratic_block(spark: SparkSession, sf_dir: str,
                            bucket_width: int | None = None,
-                           label: str = "blocked exact-Jaccard baseline",
+                           label: str = "blocked pairwise baseline",
                            ) -> None:
     """Admission check: one tiny 2-column aggregate before a potentially
     O(n²) self-join.  The measured block size is cached per (sf_dir,
@@ -111,65 +109,100 @@ def _guard_quadratic_block(spark: SparkSession, sf_dir: str,
             f"MAX_QUADRATIC_BLOCK in llm/dedup.py explicitly.")
 
 
-def jaccard_half_edges(
-    spark: SparkSession, sf_dir: str, with_block: bool = False,
-    with_jaccard: bool = False,
-) -> DataFrame:
-    """Blocked exact-Jaccard half-edges (doc_a < doc_b, J >= 0.5): the edge
-    list every near-dup graph operator (pairs / components / triangles)
-    builds on.
+def block_pairs(spark: SparkSession, sf_dir: str, t: DataFrame,
+                on: Column) -> DataFrame:
+    """The same-(lang, source) pairs of ``t``'s documents that satisfy
+    ``on`` (written over ``a.*``/``b.*``), each once: the ``a``/``b``
+    aliases joined on the block keys, ``a.doc_id < b.doc_id`` and ``on``.
+    The one blocked self-join of the dedup family.
 
-    Exact pruning before the per-pair intersect, in cheap-first conjunct
-    order inside one whole-stage-codegen filter:
+    The pair count is O(Σ block²) by design, so the quadratic admission
+    guard runs first.  ``t`` is repartitioned on the block keys with a
+    PINNED partition count: the corpus arrives as few input splits at
+    small SF and the blocked self-join is compute-bound, not IO-bound, so
+    without the pin the per-pair work collapses onto one task (AQE
+    coalesces small shuffles by SIZE, blind to compute).  Both join
+    branches hash-partition identically, so Catalyst reuses one exchange
+    — the pin costs nothing at 100 TB and buys the whole cluster's
+    parallelism at any scale."""
+    _guard_quadratic_block(spark, sf_dir)
+    t = t.repartition(spark.sparkContext.defaultParallelism, "lang", "source")
+    return t.alias("a").join(t.alias("b"),
+                             (F.col("a.lang") == F.col("b.lang"))
+                             & (F.col("a.source") == F.col("b.source"))
+                             & (F.col("a.doc_id") < F.col("b.doc_id")) & on)
 
-    - length band: J >= 1/2 forces min(|A|,|B|) >= max(|A|,|B|)/2, an
-      integer compare on pre-computed sizes — pairs failing it never pay
-      the intersect;
-    - integer threshold: J >= 1/2  ⟺  3·|A∩B| >= |A|+|B| — no float
-      division in the hot filter (the rounded float J is emitted only when
-      `with_jaccard` asks for it).
+
+def _half_jaccard(sa: Column, sb: Column, inter: Column) -> tuple[Column, Column]:
+    """(gate, jaccard) for set sizes ``sa``, ``sb`` and intersection size
+    ``inter``.  The gate is J >= 1/2 as integer conjuncts, cheapest
+    first: the length band (J >= 1/2 forces 2·min >= max) skips the
+    intersect for size-mismatched pairs, and 3·|A∩B| >= |A|+|B| keeps
+    float division out of the hot filter — for integer sizes it is
+    exactly fl(i/u) >= 0.5.  The rounded float J is what survivors emit.
 
     (Dictionary-encoding tokens to ints was measured too: the pairwise
     intersect itself gets 2× faster, but the encode pass — explode, vocab
     broadcast, collect_list re-assembly — costs more than it saves on this
     short-document corpus.  Worth revisiting only for corpora whose token
-    sets are hundreds of elements.)
+    sets are hundreds of elements.)"""
+    gate = (2 * sa >= sb) & (2 * sb >= sa) & (3 * inter >= sa + sb)
+    return gate, F.round(inter.cast("double") / (sa + sb - inter), 6)
 
-    The token sets are explicitly repartitioned on the blocking key with a
-    PINNED partition count: the corpus arrives as few input splits at small
-    SF and the blocked self-join is the one compute-bound (not IO-bound)
-    stage in the engine, so without this the O(Σ block²) intersect work
-    collapses onto one task (AQE coalesces small shuffles by SIZE, blind to
-    compute).  Both join branches hash-partition identically, so Catalyst
-    reuses one exchange — the pin costs nothing at 100 TB and buys the
-    whole cluster's parallelism at any scale.
-    """
-    _guard_quadratic_block(spark, sf_dir)
+
+def verify_pairs(cand: DataFrame, tok: DataFrame, a: str = "doc_a",
+                 b: str = "doc_b") -> DataFrame:
+    """(a, b, jaccard) for the candidate pairs ``cand`` (columns ``a``,
+    ``b``; duplicates allowed) whose exact token-set Jaccard is >= 1/2;
+    ``tok`` is the (doc_id, tok) distinct-token table.  The one
+    token-attach verify of the dedup family.
+
+    One exchange dedups the candidates AND sets the verify stage's
+    compute parallelism: the explicit repartition on the full pair key
+    is AQE-non-coalescible and already satisfies dropDuplicates' required
+    distribution, so the dedup plans as a single complete HashAggregate
+    on n_par partitions and the token-join + intersect stage runs right
+    on top of it.  A `.distinct()` instead (whose post-shuffle partitions
+    AQE coalesces by BYTES, blind to the per-pair intersect) needs a
+    second `repartition(n_par, b)` to win the parallelism back,
+    re-shuffling candidate rows already widened by tok_a — measured on
+    near-dedup at sf0.1: 0.66-0.74 s -> 0.41-0.45 s warm for the phase,
+    identical rows.  The token-attach joins stay UNPINNED: at bench scale
+    the planner broadcasts the token table; at 100 TB a corpus-sized
+    build side must be free to plan as SMJ, so a broadcast hint here
+    would be a posture bug.  Band-duplicated pairs still cross the
+    exchange raw; a map-side pre-dedup would land here."""
+    n_par = cand.sparkSession.sparkContext.defaultParallelism
+    with_tok = (
+        cand.select(a, b).repartition(n_par, a, b).dropDuplicates()
+        .join(tok.toDF(a, "tok_a"), a)
+        .join(tok.toDF(b, "tok_b"), b)
+    )
+    gate, jac = _half_jaccard(
+        F.size("tok_a"), F.size("tok_b"),
+        F.size(F.array_intersect("tok_a", "tok_b")))
+    return with_tok.where(gate).select(a, b, jac.alias("jaccard"))
+
+
+def jaccard_half_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocked exact-Jaccard half-edges (doc_a, doc_b, lang, source,
+    jaccard) with doc_a < doc_b and J >= 0.5: the edge list every near-dup
+    graph operator (pairs / components / triangles) builds on; callers
+    select what they need and column pruning drops the rest.  The
+    J >= 1/2 gate rides the block join as one whole-stage-codegen
+    conjunct list, length band first."""
     docs = load(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "lang", "source",
         F.array_distinct(F.split("text", " ")).alias("tok"),
-    ).withColumn("sz", F.size("tok")).repartition(
-        spark.sparkContext.defaultParallelism, "lang", "source"
-    )
-    a, b = t.alias("a"), t.alias("b")
-    sa, sb = F.col("a.sz"), F.col("b.sz")
-    inter = F.size(F.array_intersect(F.col("a.tok"), F.col("b.tok")))
-    pairs = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.source") == F.col("b.source"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & (2 * sa >= sb) & (2 * sb >= sa),
-    ).where(3 * inter >= sa + sb)
-    cols = [F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")]
-    if with_block:
-        cols += [F.col("a.lang").alias("lang"), F.col("a.source").alias("source")]
-    if with_jaccard:
-        cols.append(
-            F.round(inter.cast("double") / (sa + sb - inter), 6).alias("jaccard")
-        )
-    return pairs.select(*cols)
+    ).withColumn("sz", F.size("tok"))
+    gate, jac = _half_jaccard(
+        F.col("a.sz"), F.col("b.sz"),
+        F.size(F.array_intersect(F.col("a.tok"), F.col("b.tok"))))
+    return block_pairs(spark, sf_dir, t, gate).select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
+        F.col("a.lang").alias("lang"), F.col("a.source").alias("source"),
+        jac.alias("jaccard"))
 
 
 @query("q_llm_exact_dedup", oracle=r"""
@@ -274,7 +307,7 @@ def q_llm_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     — ground truth for the MinHash/LSH path.  Blocking key (lang, source)
     keeps the pair count O(sum of squared group sizes), not O(n²); the
     length-band edge build is shared (`jaccard_half_edges`)."""
-    return jaccard_half_edges(spark, sf_dir, with_jaccard=True)
+    return jaccard_half_edges(spark, sf_dir).select("doc_a", "doc_b", "jaccard")
 
 
 N_MINHASH = 64          # default permutations (production scale)
@@ -412,47 +445,7 @@ def q_llm_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(F.expr(pair_expr)).alias("p"))
         .select("p.doc_a", "p.doc_b")
     )
-    # Dedup the ~5x band-duplicated pairs and establish the verify stage's
-    # compute parallelism with ONE exchange (r13, guide §2.4 "two
-    # operations keyed the same way share one exchange"): the explicit
-    # repartition on the full pair key is AQE-non-coalescible and already
-    # satisfies dropDuplicates' required distribution, so the dedup plans
-    # as a single complete HashAggregate on n_par partitions and the
-    # broadcast-join + intersect stage runs right on top of it.  The r12
-    # form paid two exchanges here — `.distinct()` (whose post-shuffle
-    # partitions AQE coalesced by BYTES, blind to the per-pair intersect
-    # compute) and then `repartition(n_par, "doc_b")` to win the
-    # parallelism back, re-shuffling candidate rows already widened by
-    # tok_a.  Interleaved A/B of the phase at sf0.1 (probe in
-    # OPTIMIZATION_r13.md): 0.66-0.74 s -> 0.41-0.45 s warm, identical
-    # 106,237 output rows; one full-width exchange of the tok_a-widened
-    # candidate set removed from the plan.
-    n_par = spark.sparkContext.defaultParallelism
-    cand = expanded.repartition(n_par, "doc_a", "doc_b").dropDuplicates()
-    tok = tok_full.select("doc_id", "tok")
-    # Token-attach joins stay UNPINNED: at bench scale the planner
-    # broadcasts the token table itself (r13 physical plan); at 100 TB
-    # a corpus-sized build side must be free to plan as SMJ, so a
-    # broadcast hint here would be a posture bug, not an optimization.
-    with_tok = (
-        cand.join(tok.withColumnRenamed("doc_id", "doc_a")
-                  .withColumnRenamed("tok", "tok_a"), "doc_a")
-        .join(tok.withColumnRenamed("doc_id", "doc_b")
-              .withColumnRenamed("tok", "tok_b"), "doc_b")
-    )
-    # Same exact pruning as jaccard_half_edges, cheapest conjunct first:
-    # the integer length band (J >= 1/2 forces 2·min >= max) skips the
-    # per-pair intersect for size-mismatched candidates, and the integer
-    # threshold (3·|A∩B| >= |A|+|B|) keeps float division out of the hot
-    # filter; the rounded float J is computed only for survivors.
-    sa, sb = F.size("tok_a"), F.size("tok_b")
-    inter = F.size(F.array_intersect("tok_a", "tok_b"))
-    jac = inter.cast("double") / (sa + sb - inter)
-    return (
-        with_tok.where((2 * sa >= sb) & (2 * sb >= sa)
-                       & (3 * inter >= sa + sb))
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return verify_pairs(expanded, tok_full.select("doc_id", "tok"))
 
 
 @query("q_llm_near_dedup_incremental")
@@ -487,13 +480,9 @@ def q_llm_near_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the exact blocked batch×corpus ground truth
     (tests/test_llm.py::test_near_dedup_incremental_sound_and_recall)."""
     n_perm, n_bands, rows_per_band = minhash_params()
-    # Tokenize ONCE into a materialized (doc_id, lang, source, tok) table
-    # (r12 — the q_llm_near_dedup tokenize-once discipline): previously
-    # each side's minhash_signatures re-tokenized its documents and the
-    # verification join tokenized a third time (4 parquet scans); both
-    # sides' signatures and the exact-Jaccard verification now read one
-    # token table.  Same expressions over the same rows — identical
-    # signatures, buckets and pairs.
+    # Tokenize ONCE (the q_llm_near_dedup discipline): both sides'
+    # signatures and the exact-Jaccard verification read one materialized
+    # (doc_id, lang, source, tok) table.
     keep = ("lang", "source")
     tokd = (
         spread(load(spark, sf_dir, "documents"))
@@ -512,35 +501,9 @@ def q_llm_near_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "corpus_id")
     bb = band_rows(tokd.filter(side == 1)).withColumnRenamed(
         "doc_id", "batch_id")
-    # One exchange for dedup + verify parallelism (r13, same restructure
-    # as q_llm_near_dedup): the explicit full-pair-key repartition is
-    # AQE-non-coalescible and satisfies dropDuplicates' distribution, so
-    # the band-duplicate dedup and the exact-verify stage share it; the
-    # r12 form paid a `.distinct()` exchange AND a `repartition(n_par,
-    # "corpus_id")` re-shuffle of tok_a-widened rows.  Token-attach joins
-    # unpinned (broadcast at bench scale, SMJ-free at 100 TB).
-    n_par = spark.sparkContext.defaultParallelism
-    cand = (
-        bb.join(bc, ["band", "bucket", "lang", "source"])
-        .select("batch_id", "corpus_id")
-        .repartition(n_par, "batch_id", "corpus_id")
-        .dropDuplicates()
-    )
-    tok = tokd.select("doc_id", "tok")
-    with_tok = (
-        cand.join(tok.withColumnRenamed("doc_id", "batch_id")
-                  .withColumnRenamed("tok", "tok_a"), "batch_id")
-        .join(tok.withColumnRenamed("doc_id", "corpus_id")
-              .withColumnRenamed("tok", "tok_b"), "corpus_id")
-    )
-    sa, sb = F.size("tok_a"), F.size("tok_b")
-    inter = F.size(F.array_intersect("tok_a", "tok_b"))
-    jac = inter.cast("double") / (sa + sb - inter)
-    return (
-        with_tok.where((2 * sa >= sb) & (2 * sb >= sa)
-                       & (3 * inter >= sa + sb))
-        .select("batch_id", "corpus_id", F.round(jac, 6).alias("jaccard"))
-    )
+    cand = bb.join(bc, ["band", "bucket", "lang", "source"])
+    return verify_pairs(cand, tokd.select("doc_id", "tok"),
+                        "batch_id", "corpus_id")
 
 
 SIMHASH_BITS = 32       # default width (demo scale; production uses 64)
@@ -593,26 +556,16 @@ def q_llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup signatures (row 75 family): signature per doc plus
     hamming distance pairs <= 6 within the (lang, source) blocking group.
     Rows-only (xxhash64); tests assert exact-duplicate texts collide and
-    hamming correlates with Jaccard.  Signature width follows the
-    session conf knob (default 32; 64 for production realism — the
-    hamming threshold stays 6, so wider signatures emit fewer, more
-    precise pairs)."""
+    hamming correlates with Jaccard.  Signature width is SIMHASH_BITS
+    (default 32; 64 for production realism — the hamming threshold stays
+    6, so wider signatures emit fewer, more precise pairs).  Every pair
+    of a block is compared, so the quadratic admission guard applies."""
     docs = spread(load(spark, sf_dir, "documents"))
-    sh = simhash(docs, keep=("lang", "source"),
-                 n_bits=simhash_bits()).repartition(
-        spark.sparkContext.defaultParallelism, "lang", "source"
-    )
-    a, b = sh.alias("a"), sh.alias("b")
+    sh = simhash(docs, keep=("lang", "source"), n_bits=simhash_bits())
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(b, (F.col("a.lang") == F.col("b.lang"))
-               & (F.col("a.source") == F.col("b.source"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .where(ham <= 6)
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                ham.alias("hamming"))
-    )
+    return block_pairs(spark, sf_dir, sh, ham <= 6).select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
+        ham.alias("hamming"))
 
 
 _EVAL_GATE = "doc_id % 50 = 7"  # stand-in for the benchmark/eval corpus
@@ -677,30 +630,26 @@ def q_llm_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure): catches a document whose token set is swallowed by a larger
     one — quotes, excerpts, supersets — which symmetric Jaccard dilutes
     below threshold.  Same (lang, source) blocking as the Jaccard
-    baseline; the smaller-side convention (|A| <= |B|, id tiebreak on
-    equal size) emits each pair once with a deterministic orientation.
-    Quadratic per block like the Jaccard baseline → same admission guard
-    (oracle-scale ground truth only; production containment goes through
-    the prefix-filter path)."""
-    _guard_quadratic_block(spark, sf_dir)
+    baseline; each a < b pair is oriented small-side first (the side with
+    the smaller (|A|, doc_id)), so it is emitted once.  Quadratic per block
+    like the Jaccard baseline → same admission guard (oracle-scale ground
+    truth only; production containment goes through the prefix-filter
+    path)."""
     docs = load(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "lang", "source",
         F.array_distinct(F.split("text", " ")).alias("tok"),
-    ).repartition(spark.sparkContext.defaultParallelism, "lang", "source")
-    a, b = t.alias("a"), t.alias("b")
+    )
     sa, sb = F.size(F.col("a.tok")), F.size(F.col("b.tok"))
     inter = F.size(F.array_intersect(F.col("a.tok"), F.col("b.tok")))
-    cont = inter.cast("double") / sa
+    cont = inter.cast("double") / F.least(sa, sb)
+    a_small = sa <= sb  # equal sizes: a has the smaller doc_id
     return (
-        a.join(b, (F.col("a.lang") == F.col("b.lang"))
-               & (F.col("a.source") == F.col("b.source"))
-               & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .where((sa <= sb)
-               & ~((sa == sb) & (F.col("a.doc_id") > F.col("b.doc_id")))
-               & (cont >= 0.9))
-        .select(F.col("a.doc_id").alias("doc_small"),
-                F.col("b.doc_id").alias("doc_big"),
+        block_pairs(spark, sf_dir, t, cont >= 0.9)
+        .select(F.when(a_small, F.col("a.doc_id")).otherwise(F.col("b.doc_id"))
+                .alias("doc_small"),
+                F.when(a_small, F.col("b.doc_id")).otherwise(F.col("a.doc_id"))
+                .alias("doc_big"),
                 F.round(cont, 6).alias("containment"))
     )
 
@@ -1017,12 +966,12 @@ def q_llm_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(block²) baseline.
 
     Physically: explode only the prefix (half the tokens), equi join on
-    (token, block) with the length-band conjunct inline, distinct the
-    candidate pairs, then the pinned-parallelism verify join (same
-    single-pin shape as near-dedup).  The token explode carries ~|A|/2
-    rows per doc — linear, not quadratic; candidate multiplicity is
-    bounded by prefix-token document frequency, which the blocking key
-    caps.
+    (token, block) with the length-band conjunct inline, then the
+    near-dedup verify (`verify_pairs`): one pinned exchange on the pair
+    key dedups the candidates a shared prefix token repeats and sets the
+    verify parallelism.  The token explode carries ~|A|/2 rows per doc —
+    linear, not quadratic; candidate multiplicity is bounded by
+    prefix-token document frequency, which the blocking key caps.
 
     Measured honestly (sf0.1): 2.1 s vs 1.0 s for the blocked quadratic
     baseline — on THIS corpus the vocabulary is tiny, so lexicographic
@@ -1032,10 +981,10 @@ def q_llm_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabularies, rare-token prefixes under frequency order) — which is
     exactly the 100 TB regime; the baseline's O(block²) is the one that
     cannot survive there."""
-    return prefix_filter_pairs(spark, load(spark, sf_dir, "documents"))
+    return prefix_filter_pairs(load(spark, sf_dir, "documents"))
 
 
-def prefix_filter_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
+def prefix_filter_pairs(docs: DataFrame) -> DataFrame:
     """Prefix-filtered exact J >= 1/2 pairs over any documents-shaped
     frame (doc_id, lang, source, text) — the q_llm_prefix_filter_join
     core, separated so the randomized completeness test can drive it
@@ -1051,35 +1000,15 @@ def prefix_filter_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
     a, b = pre.alias("a"), pre.alias("b")
     sa, sb = F.col("a.sz"), F.col("b.sz")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.ptok") == F.col("b.ptok"))
-            & (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (2 * sa >= sb) & (2 * sb >= sa),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    tok = t.select("doc_id", "tok")
-    n_par = spark.sparkContext.defaultParallelism
-    with_tok = (
-        cand.join(tok.withColumnRenamed("doc_id", "doc_a")
-                  .withColumnRenamed("tok", "tok_a"), "doc_a")
-        .repartition(n_par, "doc_b")
-        .join(tok.withColumnRenamed("doc_id", "doc_b")
-              .withColumnRenamed("tok", "tok_b"), "doc_b")
-    )
-    inter = F.size(F.array_intersect("tok_a", "tok_b"))
-    union = F.size("tok_a") + F.size("tok_b") - inter
-    jac = inter.cast("double") / union
-    return (
-        with_tok.where(jac >= 0.5)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    cand = a.join(
+        b,
+        (F.col("a.ptok") == F.col("b.ptok"))
+        & (F.col("a.lang") == F.col("b.lang"))
+        & (F.col("a.source") == F.col("b.source"))
+        & (F.col("a.doc_id") < F.col("b.doc_id"))
+        & (2 * sa >= sb) & (2 * sb >= sa),
+    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+    return verify_pairs(cand, t.select("doc_id", "tok"))
 
 
 _REP_N = 5  # repeated-span window (tokens); Lee et al. use 50 BPE tokens

@@ -226,6 +226,9 @@ def test_quadratic_baseline_quarantined(spark, sf_dir):
             dedup.jaccard_half_edges(spark, sf_dir)
         with pytest.raises(ValueError, match="O\\(block"):
             QUERIES["q_llm_containment"](spark, sf_dir)
+        # SimHash compares every pair of a block too (block_pairs)
+        with pytest.raises(ValueError, match="O\\(block"):
+            QUERIES["q_llm_simhash"](spark, sf_dir)
         # edit_dedup's (lang, source, length-bucket) blocks are equi-join
         # blocks too — a length bucket does not bound block size at scale,
         # so it must share the refusal (r7 verdict task 2).
@@ -442,7 +445,7 @@ def test_near_dedup_incremental_sound_and_recall(spark, sf_dir, monkeypatch,
     rows = inc.collect()
     assert all(r.jaccard >= 0.5 for r in rows)
     got = {(r.batch_id, r.corpus_id) for r in rows}
-    exact = dedup.jaccard_half_edges(spark, sf_dir, with_jaccard=True)
+    exact = dedup.jaccard_half_edges(spark, sf_dir)
 
     def side(d):          # 20-doc id block, mirrors the query's split
         return (d // 20) % 2

@@ -504,7 +504,7 @@ def test_prefix_filter_join_complete_on_random_corpus(spark):
     df = spark.createDataFrame(docs, "doc_id long, lang string, "
                                      "source string, text string")
     got = {(r.doc_a, r.doc_b)
-           for r in prefix_filter_pairs(spark, df).collect()}
+           for r in prefix_filter_pairs(df).collect()}
     assert got == expected, (
         f"missed={sorted(expected - got)[:5]} extra={sorted(got - expected)[:5]}")
     assert expected, "degenerate fixture: no qualifying pairs planted"

@@ -40,6 +40,22 @@ def test_no_unhashable_output_dtypes(spark, sf_dir):
         + "\n  ".join(violations))
 
 
+def _package_nodes():
+    """(module path, enclosing function name, node) for every AST node of
+    the package's modules; the function is None at module level."""
+    root = pathlib.Path(pkg.__file__).parent
+
+    def visit(node, func, rel):
+        for child in ast.iter_child_nodes(node):
+            yield rel, func, child
+            yield from visit(child, child.name if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)) else func, rel)
+
+    for path in sorted(root.rglob("*.py")):
+        yield from visit(ast.parse(path.read_text()), None,
+                         path.relative_to(root).as_posix())
+
+
 def test_no_custom_session_conf_or_fixed_name_views():
     """Structural lock: a query result depends on its inputs only.  No
     string literal in the package names a custom ``spark.mu_swarm*``
@@ -48,37 +64,38 @@ def test_no_custom_session_conf_or_fixed_name_views():
     DataFrames to ``spark.sql`` as parameters instead of registering a
     fixed name two concurrent queries would share.  Session conf is
     written (``conf.set``/``conf.unset``) only by the stream runner."""
-    root = pathlib.Path(pkg.__file__).parent
     keys, views, conf_writes = [], set(), set()
-
-    def visit(node, func, rel):
-        for child in ast.iter_child_nodes(node):
-            f = (child.name if isinstance(
-                child, (ast.FunctionDef, ast.AsyncFunctionDef)) else func)
-            if (isinstance(child, ast.Constant)
-                    and isinstance(child.value, str)
-                    and child.value.startswith("spark.mu_swarm")):
-                keys.append(f"{rel}:{child.lineno} {child.value}")
-            if (isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == "createOrReplaceTempView"):
-                views.add((rel, func))
-            if (isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr in ("set", "unset")
-                    and isinstance(child.func.value, ast.Attribute)
-                    and child.func.value.attr == "conf"):
-                conf_writes.add((rel, func))
-            visit(child, f, rel)
-
-    for path in root.rglob("*.py"):
-        rel = str(path.relative_to(root))
-        visit(ast.parse(path.read_text()), None, rel)
+    for rel, func, node in _package_nodes():
+        if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                and node.value.startswith("spark.mu_swarm")):
+            keys.append(f"{rel}:{node.lineno} {node.value}")
+        if not (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)):
+            continue
+        if node.func.attr == "createOrReplaceTempView":
+            views.add((rel, func))
+        if (node.func.attr in ("set", "unset")
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"):
+            conf_writes.add((rel, func))
     assert not keys, keys
     assert views == {("core/tables.py", "register_views")}, views
     assert conf_writes <= {("streaming/queries.py", "_run_available_now")}, \
         conf_writes
 
+
+def test_default_parallelism_read_only_by_the_pinning_helpers():
+    """Structural lock: a partition count taken from ``defaultParallelism``
+    is chosen in four places only — the dedup family's blocked self-join
+    and candidate verify (``block_pairs``, ``verify_pairs``), ``spread``
+    and the stream runner's state-store sizing — never per query."""
+    reads = {(rel, func) for rel, func, node in _package_nodes()
+             if isinstance(node, ast.Attribute)
+             and node.attr == "defaultParallelism"}
+    assert reads <= {("llm/dedup.py", "block_pairs"),
+                     ("llm/dedup.py", "verify_pairs"),
+                     ("core/tables.py", "spread"),
+                     ("streaming/queries.py", "_state_partitions")}, reads
 
 _ZERO_SEEDS = {"0.0d", "0.0", "cast(0.0asdouble)", "0d", "cast(0asdouble)"}
 
