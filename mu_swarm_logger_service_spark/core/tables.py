@@ -3,12 +3,19 @@
 At 100 TB these reads become partitioned-directory scans; the loader keeps a
 single entry point so partition-pruning columns / bucketing specs can be
 added without touching query code.
+
+It also owns the files a query writes: ``layout`` for files derived once
+per source generation, ``round_trip`` for files written fresh per call.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
 import tempfile
+import uuid
 import weakref
 import zipfile
 
@@ -17,31 +24,87 @@ from pyspark.sql import functions as F
 
 _PYFILES_SHIPPED: set[int] = set()
 
-# Per-session ANALYZED-PLAN cache for the base table loaders (r13).
+# Per-session values that depend on one source table, each kept for the
+# table's latest generation only: the base loaders' ANALYZED PLANS (r13:
 # ``spark.read.parquet`` pays a py4j round-trip plus a schema/footer
-# analysis on EVERY call — measured ~95 ms warm, on every load() of every
-# query (the single widest fixed cost in the registry).  A DataFrame is
-# an immutable PLAN, not data: each action re-reads the parquet files, so
-# reusing the plan caches no results.  Freshness: the key carries
-# stat_sig (mtime_ns, size) — regenerating a fixture in place is a cache
-# miss (the round-9 stale-derived-layout discipline; the plan's file
-# index would otherwise pin stale splits).  Keyed weakly per
-# SparkSession so a stopped session's plans die with it.
-_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+# analysis on every call, ~95 ms warm; a DataFrame is a plan, not data, so
+# each action still re-reads the files) and the admission guards' size
+# measurements.  The key carries no stat_sig, the entry does: regenerating
+# a fixture in place is a miss that replaces the entry (a plan's file index
+# would otherwise pin stale splits, a guard would admit on a stale size).
+# Keyed weakly per SparkSession so a stopped session's entries die with it.
+_PER_GENERATION: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary())
 
 
-def _plan_cached(spark: SparkSession, kind: str, sf_dir: str, name: str,
-                 build):
-    sig = stat_sig(sf_dir, name)
-    per = _PLAN_CACHE.setdefault(spark, {})
-    key = (kind, sf_dir, name)
+def per_generation(spark: SparkSession, kind, sf_dir: str, table: str,
+                   build):
+    """``build()``, memoized per (session, ``kind``, sf_dir, ``table``)
+    for the current generation (stat_sig) of ``table``."""
+    sig = stat_sig(sf_dir, table)
+    per = _PER_GENERATION.setdefault(spark, {})
+    key = (kind, sf_dir, table)
     hit = per.get(key)
     if hit is not None and hit[0] == sig:
         return hit[1]
-    df = build()
-    per[key] = (sig, df)
-    return df
+    value = build()
+    per[key] = (sig, value)
+    return value
+
+
+def generation(sf_dir: str, name: str, sources) -> str:
+    """Digest naming one generation of a layout derived from ``sources``:
+    ``<home>_<sigs>``, where home digests ``name`` (a mint version rides
+    it) with the absolute ``sf_dir`` and sigs digests each source's
+    stat_sig, so a source regenerated in place gets a new name."""
+    sigs = tuple(stat_sig(sf_dir, t) for t in sources)
+    return "_".join(hashlib.sha256(repr(part).encode()).hexdigest()[:12]
+                    for part in ((name, os.path.abspath(sf_dir)), sigs))
+
+
+def layout(sf_dir: str, name: str, sources, write) -> str:
+    """The directory holding the current generation of a layout derived
+    from the ``sources`` tables of ``sf_dir`` (a partitioned copy, a minted
+    text stream): the one place a query keeps files across calls.
+
+    A published generation is complete and never rewritten, so it is
+    served as is.  Otherwise ``write(d)`` fills a private temp directory
+    and one ``os.rename`` publishes it: readers see no partial layout.  A
+    rename that finds the target taken lost a race to an identical
+    builder, whose copy is served; the winner removes the older
+    generations of the same (name, sf_dir)."""
+    root = tempfile.gettempdir()
+    target = os.path.join(root, f"spark_graft_{name}_"
+                          + generation(sf_dir, name, sources))
+    if os.path.isdir(target):
+        return target
+    tmp = tempfile.mkdtemp(prefix=f".{os.path.basename(target)}.", dir=root)
+    try:
+        write(tmp)
+        os.rename(tmp, target)
+    except OSError:
+        if not os.path.isdir(target):
+            raise
+        return target  # an identical builder published first
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    for old in glob.glob(target.rsplit("_", 1)[0] + "_*"):
+        if old != target:
+            shutil.rmtree(old, ignore_errors=True)
+    return target
+
+
+def round_trip(name: str, write, read) -> DataFrame:
+    """Files written fresh by one call: ``write(d)`` fills a new temp
+    directory and ``read(d)`` is checkpointed eagerly, so the returned
+    frame holds its rows and no later call can pull its files away; the
+    directory is removed in ``finally``, also when a step raises."""
+    d = tempfile.mkdtemp(prefix=f"spark_graft_{name}_")
+    try:
+        write(d)
+        return read(d).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -90,10 +153,6 @@ def stat_sig(sf_dir: str, table: str) -> tuple[int, int]:
     q_source_docker_events caches red both oracles with stale bytes."""
     st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
     return (st.st_mtime_ns, st.st_size)
-
-
-def stat_sig_str(sf_dir: str, table: str) -> str:
-    return "_".join(map(str, stat_sig(sf_dir, table)))
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -208,10 +267,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _ship_package(spark)
     if name == "events":
-        return _plan_cached(
+        return per_generation(
             spark, "load", sf_dir, name,
             lambda: _normalize_events_ts(_read_events(spark, sf_dir)))
-    return _plan_cached(
+    return per_generation(
         spark, "load", sf_dir, name,
         lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
@@ -228,7 +287,7 @@ def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(path)
 
-    return _plan_cached(spark, "raw", sf_dir, "events", build)
+    return per_generation(spark, "raw", sf_dir, "events", build)
 
 
 def _nanos_ts_schema(path: str):
@@ -264,6 +323,36 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     if isinstance(dt, TimestampNTZType):
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def bucketed_table(spark: SparkSession, sf_dir: str, table: str,
+                   key: str) -> str:
+    """Name of a session-catalog copy of ``table`` bucketed 8 ways on
+    ``key`` and sorted in-bucket: the co-located layout that lets an
+    equi-join on the bucket key skip both shuffles.  The files are a
+    layout of the table's current generation and the name carries the
+    same digest, so a table regenerated in place gets a new table.  The
+    catalog entry is external (its files outlive the session, away from
+    the cwd-dependent warehouse dir) and is created on first use per
+    session: Spark cannot write buckets to a bare path, so the layout
+    writes them through a throwaway table name."""
+    name = f"bucketed_{table}_{key}"
+    t = f"{table}_by_{key}_{generation(sf_dir, name, (table,))}"
+    if spark.catalog.tableExists(t):
+        return t
+    df = load(spark, sf_dir, table)
+
+    def write(d: str) -> None:
+        tmp = f"tmp_{uuid.uuid4().hex[:12]}"
+        (df.write.mode("overwrite").format("parquet")
+         .bucketBy(8, key).sortBy(key).option("path", d).saveAsTable(tmp))
+        spark.sql(f"DROP TABLE {tmp}")  # external: the files stay
+
+    path = layout(sf_dir, name, (table,), write)
+    spark.sql(f"CREATE TABLE IF NOT EXISTS {t} ({df.schema.toDDL()}) "
+              f"USING parquet CLUSTERED BY ({key}) SORTED BY ({key}) "
+              f"INTO 8 BUCKETS LOCATION '{path}'")
+    return t
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 from ..core.folds import cosine
 from ..core.numeric import dsum
 from ..core.registry import query
-from ..core.tables import iterate, load, spread, stat_sig, unpersist_cp
+from ..core.tables import (iterate, load, per_generation, spread,
+                           unpersist_cp)
 from .similarity import _PQ_CB_SQL, _PQ_CODED_SQL, load_vec
 
 # IVF coarse codebook: a FIXED-K id-gated centroid set (the PQ family's
@@ -64,17 +65,15 @@ CENT_MOD = 71       # semdedup cells = vectors with vec_id % 71 == 3
 # 50k vectors ≈ 35M assignment cosines — generous for audits (the 8×
 # fixture is 16k), refused long before a production corpus.
 MAX_SEMDEDUP_CORPUS = 50_000
-_semdedup_size: dict[tuple[str, tuple[int, int]], int] = {}
 
 
 def _guard_semdedup_corpus(spark: SparkSession, sf_dir: str) -> None:
     """Admission check: one COUNT before the corpus × corpus/CENT_MOD
-    assignment.  The count is cached per (sf_dir, embeddings file
-    signature); the ceiling is compared on every call."""
-    key = (sf_dir, stat_sig(sf_dir, "embeddings"))
-    if key not in _semdedup_size:
-        _semdedup_size[key] = load_vec(spark, sf_dir).count()
-    n = _semdedup_size[key]
+    assignment.  The count is cached per (session, sf_dir) for the current
+    embeddings generation (core.tables.per_generation); the ceiling is
+    compared on every call."""
+    n = per_generation(spark, "semdedup_size", sf_dir, "embeddings",
+                       lambda: load_vec(spark, sf_dir).count())
     if n > MAX_SEMDEDUP_CORPUS:
         raise ValueError(
             f"semdedup exact baseline refused: corpus has {n} vectors "

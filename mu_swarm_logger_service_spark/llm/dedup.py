@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core.registry import query
-from ..core.tables import load, spread, stat_sig
+from ..core.tables import load, per_generation, spread
 
 
 # Oracle twin of normalized_text() below — interpolate into every oracle
@@ -58,10 +58,6 @@ def normalized_text(col: str = "text") -> Column:
 # candidate generation.  A one-off ground-truth audit on a mid-size block
 # raises this constant explicitly.
 MAX_QUADRATIC_BLOCK = 5_000
-# Largest measured block per (sf_dir, documents stat_sig, bucket_width):
-# the file signature makes an in-place regeneration a miss, and the
-# ceiling is compared on every call, so it stays out of the key.
-_block_max: dict[tuple[str, tuple[int, int], int | None], int] = {}
 
 
 def _guard_quadratic_block(spark: SparkSession, sf_dir: str,
@@ -69,9 +65,11 @@ def _guard_quadratic_block(spark: SparkSession, sf_dir: str,
                            label: str = "blocked pairwise baseline",
                            ) -> None:
     """Admission check: one tiny 2-column aggregate before a potentially
-    O(n²) self-join.  The measured block size is cached per (sf_dir,
-    documents file signature, bucket_width): repeated calls (bench reps,
-    shared edge builds) pay the aggregate once per fixture version.
+    O(n²) self-join.  The measured block size is cached per (session,
+    sf_dir, bucket_width) for the current documents generation
+    (core.tables.per_generation): repeated calls (bench reps, shared edge
+    builds) pay the aggregate once per fixture version; the ceiling is
+    compared on every call, so it stays out of the key.
 
     ``bucket_width`` refines the block key with a length bucket
     ``floor(n_chars / bucket_width)`` — the admission key used by
@@ -87,8 +85,8 @@ def _guard_quadratic_block(spark: SparkSession, sf_dir: str,
     else:
         block_cols = ["lang", "source", "_bkt"]
         block_desc = f"(lang, source, n_chars/{bucket_width} bucket)"
-    key = (sf_dir, stat_sig(sf_dir, "documents"), bucket_width)
-    if key not in _block_max:
+
+    def measure() -> int:
         docs = load(spark, sf_dir, "documents")
         if bucket_width is not None:
             docs = docs.withColumn(
@@ -97,11 +95,14 @@ def _guard_quadratic_block(spark: SparkSession, sf_dir: str,
             docs.groupBy(*block_cols).count()
             .orderBy(F.desc("count")).first()
         )
-        _block_max[key] = 0 if top is None else top["count"]
-    if _block_max[key] > MAX_QUADRATIC_BLOCK:
+        return 0 if top is None else top["count"]
+
+    n = per_generation(spark, ("block_max", bucket_width), sf_dir,
+                       "documents", measure)
+    if n > MAX_QUADRATIC_BLOCK:
         raise ValueError(
             f"{label} refused: largest {block_desc} "
-            f"block has {_block_max[key]} documents "
+            f"block has {n} documents "
             f"(> {MAX_QUADRATIC_BLOCK}); this path is "
             f"O(block²) ground truth for oracle-scale audits only. Use "
             f"q_llm_near_dedup (MinHash/LSH) or q_llm_prefix_filter_join "

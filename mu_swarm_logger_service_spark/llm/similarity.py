@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..core.folds import cosine, cosine0, fsum, norm, operand
 from ..core.registry import query
-from ..core.tables import load, spread, stat_sig
+from ..core.tables import load, per_generation, spread
 
 
 # ---------------------------------------------------------------------------
@@ -66,9 +66,7 @@ def load_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     data).  Plan-cached per session like load() itself (r13): the
     validity predicate alone is ~35 ms of py4j lambda construction on
     every call of every vector query."""
-    from ..core.tables import _plan_cached
-
-    return _plan_cached(
+    return per_generation(
         spark, "load_vec", sf_dir, "embeddings",
         lambda: load(spark, sf_dir, "embeddings").filter(
             vec_valid(F.col("embedding"))))
@@ -534,19 +532,16 @@ def q_llm_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly like the quadratic-Jaccard family (llm/dedup._guard_quadratic_block).
 MAX_PAIRWISE_SUBSET = 5_000
 _NEAR_DUP_FILTER = "vec_id % 10 = 0"
-_subset_size: dict[tuple[str, tuple[int, int]], int] = {}
 
 
 def _guard_pairwise_subset(spark: SparkSession, sf_dir: str) -> None:
     """Admission check: one COUNT before the all-pairs cosine self-join.
-    The count is cached per (sf_dir, embeddings file signature) — bench
-    reps pay it once per fixture version; the ceiling is compared on
-    every call."""
-    key = (sf_dir, stat_sig(sf_dir, "embeddings"))
-    if key not in _subset_size:
-        _subset_size[key] = (load_vec(spark, sf_dir)
-                             .filter(F.expr(_NEAR_DUP_FILTER)).count())
-    n = _subset_size[key]
+    The count is cached per (session, sf_dir) for the current embeddings
+    generation (core.tables.per_generation) — bench reps pay it once per
+    fixture version; the ceiling is compared on every call."""
+    n = per_generation(spark, "subset_size", sf_dir, "embeddings",
+                       lambda: load_vec(spark, sf_dir)
+                       .filter(F.expr(_NEAR_DUP_FILTER)).count())
     if n > MAX_PAIRWISE_SUBSET:
         raise ValueError(
             f"embedding near-dup exact baseline refused: the id-gated "

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..core.numeric import dsum, dsum_sql, epoch_s
 from ..core.registry import query
-from ..core.tables import load, observed_time
+from ..core.tables import bucketed_table, load, observed_time
 
 
 @query("q_join_inner_hash", oracle="""
@@ -314,35 +314,6 @@ def q_join_self(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Create session-catalog bucketed copies of lineitem/orders (8 buckets
-    on the join key, sorted in-bucket), data under /tmp — the co-located
-    layout that makes repeated large-large joins shuffle-free.
-
-    At 100 TB this is the difference between shuffling both fact tables on
-    every join and shuffling them once at ingest: bucket-pruned, co-located
-    joins are the standard warehouse layout for the hottest join key.
-    """
-    import os
-    import tempfile
-
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    li_name, o_name = f"lineitem_b_{tag}", f"orders_b_{tag}"
-    if not spark.catalog.tableExists(li_name):
-        root = os.path.join(tempfile.gettempdir(), "spark_graft_bucketed", tag)
-        (load(spark, sf_dir, "lineitem")
-         .write.mode("overwrite").format("parquet")
-         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-         .option("path", os.path.join(root, "lineitem"))
-         .saveAsTable(li_name))
-        (load(spark, sf_dir, "orders")
-         .write.mode("overwrite").format("parquet")
-         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-         .option("path", os.path.join(root, "orders"))
-         .saveAsTable(o_name))
-    return li_name, o_name
-
-
 @query("q_join_bucketed", oracle=f"""
 SELECT o.o_orderstatus, COUNT(*) AS n, {dsum_sql('l.l_extendedprice')} AS revenue
 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -354,11 +325,13 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-bucketed on the join key → SortMergeJoin with ZERO Exchange (the
     plan test asserts it).  Result is identical to the shuffled join, so
     the plain-SQL oracle still applies."""
-    li_name, o_name = _ensure_bucketed_tables(spark, sf_dir)
     # hint pins SMJ (at oracle scale AQE would broadcast the filtered side,
     # hiding exactly the no-shuffle property this operator demonstrates)
-    li = spark.table(li_name).hint("merge")
-    orders = spark.table(o_name).filter(F.col("o_totalprice") > 150000.0)
+    li = spark.table(
+        bucketed_table(spark, sf_dir, "lineitem", "l_orderkey")).hint("merge")
+    orders = spark.table(
+        bucketed_table(spark, sf_dir, "orders", "o_orderkey")).filter(
+        F.col("o_totalprice") > 150000.0)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_orderstatus")

@@ -10,28 +10,14 @@ the triple/log sink uses: partition by day so downstream queries prune.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core.numeric import dsum, dsum_sql, measure, measure_sql
 from ..core.registry import query
-from ..core.tables import load, observed_time, stat_sig, stat_sig_str
-
-SINK_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_sinks")
-
-# Session-scoped fixture fingerprints for the compaction debris marker
-# (see q_layout_compaction), keyed on (sf_dir, source stat signature) so a
-# MID-SESSION fixture regeneration invalidates the cached fingerprint too —
-# a plain sf_dir key only detected regeneration across sessions (round-6
-# advice).  The stat signature (mtime_ns, size) is one os.stat, far cheaper
-# than the fingerprint aggregate it guards.
-_COMPACT_FP_CACHE: dict[tuple[str, tuple[int, int]], tuple[str, int]] = {}
-
-
-def _events_stat_sig(sf_dir: str) -> tuple[int, int]:
-    return stat_sig(sf_dir, "events")
+from ..core.tables import (bucketed_table, layout, load, observed_time,
+                           round_trip)
 
 
 @query("q_scan_parquet", oracle="SELECT * FROM supplier")
@@ -74,43 +60,29 @@ def q_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory per day → partition pruning for time-ranged queries), then
     proves round-trip fidelity by re-aggregating from the sink.
     """
-    out = os.path.join(SINK_ROOT, "events_by_date")
     ev = load(spark, sf_dir, "events").withColumn(
         "event_date", F.date_format("ts", "yyyy-MM-dd")
     )
-    # Static overwrite pinned at the write: the sink path is fixed, and a
-    # session leaked into dynamic partition-overwrite mode would make an
-    # empty-source overwrite keep a previous run's partitions.
-    (ev.write.mode("overwrite")
-     .option("partitionOverwriteMode", "static")
-     .partitionBy("event_date").parquet(out))
     # class K: read back with the writer's schema (an empty source writes
     # a layout with no part files — inference fails).  This also keeps
     # event_date a STRING on read-back instead of the inferred DATE.
-    back = spark.read.schema(ev.schema).parquet(out)
-    return back.groupBy(F.col("event_date").cast("string").alias("event_date")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    return round_trip(
+        "events_by_date",
+        lambda d: ev.write.mode("overwrite").partitionBy("event_date")
+        .parquet(d),
+        lambda d: spark.read.schema(ev.schema).parquet(d)
+        .groupBy(F.col("event_date").cast("string").alias("event_date"))
+        .agg(F.count(F.lit(1)).alias("n")))
 
 
 def _ensure_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Date-partitioned events layout (the 100 TB fact layout; see
-    q_sink_partitioned).  Written once per sf_dir."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    out = os.path.join(SINK_ROOT, f"events_dpp_{tag}")
-    # Freshness marker carries the SOURCE stat signature, not just
-    # existence: a regenerated-in-place events.parquet must be a cache
-    # miss (see core.tables.stat_sig).
-    sig = stat_sig_str(sf_dir, "events")
-    marker = os.path.join(out, f"_SUCCESS_SRC_{sig}")
+    q_sink_partitioned), written once per events generation."""
     ev = load(spark, sf_dir, "events").withColumn(
         "event_date", F.date_format("ts", "yyyy-MM-dd")
     )
-    if not os.path.exists(marker):
-        (ev.write.mode("overwrite")
-         .option("partitionOverwriteMode", "static")
-         .partitionBy("event_date").parquet(out))
-        open(marker, "w").close()
+    out = layout(sf_dir, "events_dpp", ("events",), lambda d: ev.write.mode(
+        "overwrite").partitionBy("event_date").parquet(d))
     # class K: hand the writer's schema to readers — an empty source
     # writes a layout schema inference cannot read.
     return out, ev.schema
@@ -173,41 +145,41 @@ def q_source_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     columnar in the first micro-batch.
     """
     base = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    tag = sf_dir.strip("/").replace("/", "_")
 
     # The three format writes are INDEPENDENT jobs over the same narrow
     # projection — submit them from a small thread pool so each job's
     # tail back-fills the others' idle cores (guide §2.6 "overlap
     # independent jobs"; r13, measured ~×0.7 on the construction wall).
-    # Same writes, same bytes, same sinks — only the submission overlaps.
-    def _write(fmt: str) -> str:
-        out = os.path.join(SINK_ROOT, f"events_fmt_{tag}_{fmt}")
-        writer = base.write.mode("overwrite")
-        if fmt == "csv":
-            writer.option("header", True).csv(out)
-        elif fmt == "json":
-            writer.json(out)
-        else:
-            writer.orc(out)
-        return out
+    # Same writes, same bytes — only the submission overlaps.
+    def write(d: str) -> None:
+        def one(fmt: str) -> None:
+            out = os.path.join(d, fmt)
+            if fmt == "csv":
+                base.write.option("header", True).csv(out)
+            elif fmt == "json":
+                base.write.json(out)
+            else:
+                base.write.orc(out)
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        outs = dict(zip(("csv", "json", "orc"),
-                        pool.map(_write, ("csv", "json", "orc"))))
+        from concurrent.futures import ThreadPoolExecutor
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            list(pool.map(one, ("csv", "json", "orc")))
 
-    parts = [
-        (spark.read.schema(_FMT_SCHEMA).option("header", True)
-         .csv(outs["csv"]).withColumn("fmt", F.lit("csv"))),
-        (spark.read.schema(_FMT_SCHEMA).json(outs["json"])
-         .withColumn("fmt", F.lit("json"))),
-        spark.read.orc(outs["orc"]).withColumn("fmt", F.lit("orc")),
-    ]
-    allf = parts[0].unionByName(parts[1]).unionByName(parts[2])
-    return (
-        allf.groupBy("fmt", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum(F.col("value")).alias("sum_value"))
-    )
+    def read(d: str) -> DataFrame:
+        parts = [
+            (spark.read.schema(_FMT_SCHEMA).option("header", True)
+             .csv(os.path.join(d, "csv")).withColumn("fmt", F.lit("csv"))),
+            (spark.read.schema(_FMT_SCHEMA).json(os.path.join(d, "json"))
+             .withColumn("fmt", F.lit("json"))),
+            spark.read.orc(os.path.join(d, "orc"))
+            .withColumn("fmt", F.lit("orc")),
+        ]
+        allf = parts[0].unionByName(parts[1]).unionByName(parts[2])
+        return allf.groupBy("fmt", "event_type").agg(
+            F.count(F.lit(1)).alias("n"),
+            dsum(F.col("value")).alias("sum_value"))
+
+    return round_trip("formats", write, read)
 
 
 @query("q_sql_surface", oracle=f"""
@@ -274,22 +246,17 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     files is not an option at that size).  The audit counts rows with
     and without the evolved column and decimal-sums both measures; the
     oracle replays the same union semantics relationally."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join(SINK_ROOT, f"evolve_{tag}")
     li = load(spark, sf_dir, "lineitem")
-    # Same freshness discipline as _ensure_partitioned_events: the marker
-    # carries the source lineitem's stat signature, so regenerating the
-    # fixture in place invalidates the derived two-generation layout.
-    sig = stat_sig_str(sf_dir, "lineitem")
-    marker = os.path.join(root, f"_SUCCESS_BOTH_SRC_{sig}")
-    if not os.path.exists(marker):
+
+    def write(d: str) -> None:
         (li.filter(F.col("l_orderkey") % 2 == 0)
          .select("l_orderkey", "l_quantity")
-         .write.mode("overwrite").parquet(os.path.join(root, "gen=0")))
+         .write.parquet(os.path.join(d, "gen=0")))
         (li.filter(F.col("l_orderkey") % 2 == 1)
          .select("l_orderkey", "l_quantity", "l_tax")
-         .write.mode("overwrite").parquet(os.path.join(root, "gen=1")))
-        open(marker, "w").close()
+         .write.parquet(os.path.join(d, "gen=1")))
+
+    root = layout(sf_dir, "evolve", ("lineitem",), write)
     merged = (
         spark.read.option("mergeSchema", "true")
         .parquet(os.path.join(root, "gen=0"), os.path.join(root, "gen=1"))
@@ -729,54 +696,25 @@ def q_layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each day maps to one task → one file per directory, the "after"
     invariant).  Both counts are AUDITED from the filesystem via
     input_file_name(), not assumed: the query proves the fragmented dirs
-    became single-file dirs with zero row loss."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    debris = os.path.join(SINK_ROOT, f"compact_debris_{tag}")
-    packed = os.path.join(SINK_ROOT, f"compact_packed_{tag}")
+    became single-file dirs with zero row loss.
+
+    The debris is a layout, written once per events generation; the
+    compacted output is written fresh by every call (round_trip)."""
     # class I: ts is the PARTITION key here — a row with no timestamp
     # has no day directory (hive-default-partition round-trips diverge)
     ev = observed_time(load(spark, sf_dir, "events")).select(
         "event_id", F.date_format("ts", "yyyy-MM-dd").alias("day"))
-    # Marker keyed on a CONTENT fingerprint, not just the path: if the
-    # parquet fixtures are regenerated, or a prior run died between the
-    # s==0 overwrite and the marker write, the fingerprint mismatch forces
-    # a full rewrite (the s==0 overwrite clears all stale debris AND any
-    # stale marker, since Spark's static overwrite removes the whole sink
-    # directory).  A plain row COUNT is NOT a fingerprint here — fixture
-    # row counts are a pure function of sf, so a reseeded regeneration
-    # keeps the count while changing every row (round-6 review); the
-    # order-independent hash-sum over (event_id, day) changes with any
-    # content change.  Cached per (session, sf_dir, source stat signature):
-    # the fingerprint job runs once per fixture generation, not on every
-    # warm call, and a mid-session regeneration (new mtime/size) misses the
-    # cache and recomputes.  Underscore-prefixed name keeps Spark's reader
-    # from treating the marker as data (r5 advice).
-    cache_key = (sf_dir, _events_stat_sig(sf_dir))
-    cached = _COMPACT_FP_CACHE.get(cache_key)
-    if cached is None:
-        # n_days rides the SAME aggregate (r13, guide §1.2): it sizes the
-        # compactor's repartition below, and as a separate
-        # ev.select("day").distinct().count() it re-scanned events on
-        # EVERY warm invocation — same freshness key as the fingerprint,
-        # so it caches with it.
-        row = ev.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.pmod(F.xxhash64("event_id", "day"),
-                         F.lit(1_000_000_007))).alias("h"),
-            F.countDistinct("day").alias("nd"),
-        ).first()
-        cached = (f"{row['n']}_{row['h']}", int(row["nd"]))
-        _COMPACT_FP_CACHE[cache_key] = cached
-    fp, n_days = cached
-    marker = os.path.join(debris, f"_SUCCESS_ALL_SHARDS_{fp}")
-    if not os.path.exists(marker):
+
+    def shatter(d: str) -> None:
         for s in range(8):
             (ev.filter(F.pmod(F.col("event_id"), F.lit(8)) == s)
              .coalesce(1)
-             .write.mode("overwrite" if s == 0 else "append")
-             .option("partitionOverwriteMode", "static")
-             .partitionBy("day").parquet(debris))
-        open(marker, "w").close()
+             .write.mode("append").partitionBy("day").parquet(d))
+
+    debris = layout(sf_dir, "compact_debris", ("events",), shatter)
+    # One day= directory per distinct observed day: it sizes the
+    # compactor's repartition below with no job.
+    n_days = sum(e.startswith("day=") for e in os.listdir(debris))
     # class K: both layouts read back under the writer's schema (an
     # empty source leaves no part files for inference), and the
     # compactor's task count clamps at 1 — repartition(0) is an error.
@@ -787,24 +725,28 @@ def q_layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day")
         .agg(F.countDistinct("f").alias("files_before"))
     )
-    (spark.read.schema(layout_schema).parquet(debris)
-     .repartition(max(n_days, 1), "day")
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "static")
-     .partitionBy("day").parquet(packed))
-    after = (
-        spark.read.schema(layout_schema).parquet(packed)
-        .select("day", "event_id", F.input_file_name().alias("f"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("n_rows"),
-             F.countDistinct("f").alias("files_after"))
-    )
-    # Partition-column read-back infers DATE; the repo rule is dates as
-    # STRINGS in output columns (a typed-date-aware driver hash would
-    # diverge from the oracle's VARCHAR day — r5 advice).
-    return after.join(before, "day").select(
-        F.col("day").cast("string").alias("day"),
-        "n_rows", "files_before", "files_after")
+
+    def pack(d: str) -> None:
+        (spark.read.schema(layout_schema).parquet(debris)
+         .repartition(max(n_days, 1), "day")
+         .write.mode("overwrite").partitionBy("day").parquet(d))
+
+    def audit(d: str) -> DataFrame:
+        after = (
+            spark.read.schema(layout_schema).parquet(d)
+            .select("day", "event_id", F.input_file_name().alias("f"))
+            .groupBy("day")
+            .agg(F.count(F.lit(1)).alias("n_rows"),
+                 F.countDistinct("f").alias("files_after"))
+        )
+        # Partition-column read-back infers DATE; the repo rule is dates
+        # as STRINGS in output columns (a typed-date-aware result hash
+        # would diverge from the oracle's VARCHAR day — r5 advice).
+        return after.join(before, "day").select(
+            F.col("day").cast("string").alias("day"),
+            "n_rows", "files_before", "files_after")
+
+    return round_trip("compact_packed", pack, audit)
 
 
 @query("q_sink_bucketed", oracle=f"""
@@ -827,37 +769,13 @@ def q_sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     disabled; under default confs Catalyst may still elect a broadcast
     for a small side, which also avoids the shuffle).
 
-    EXTERNAL-path tables under /tmp (the joins._ensure_bucketed_tables
-    pattern, proven across fresh driver sessions): an explicit
-    ``option("path", ...)`` keeps the data out of the cwd-dependent
-    spark.sql.warehouse.dir, external-table overwrite needs no
-    managed-location hygiene, and the tableExists cache skips the rewrite
-    on warm calls within a session.  Bucket count 8 is the demo scale;
-    production sizes buckets so one bucket ≈ one executor-core's working
-    set."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    t_orders, t_cust = f"bkt_orders_{tag}", f"bkt_customer_{tag}"
-    # Guard on BOTH tables: keying the skip on t_orders alone meant a
-    # session that died between the two saveAsTable calls (orders created,
-    # customer not) would skip creation forever after and fail at
-    # spark.table(t_cust).  mode("overwrite") makes the re-run safe for
-    # whichever half did land (round-6 advice).
-    if not (spark.catalog.tableExists(t_orders)
-            and spark.catalog.tableExists(t_cust)):
-        root = os.path.join(SINK_ROOT, "bucketed_custkey", tag)
-        (load(spark, sf_dir, "orders")
-         .select("o_orderkey", "o_custkey", "o_totalprice")
-         .write.mode("overwrite").format("parquet")
-         .bucketBy(8, "o_custkey").sortBy("o_custkey")
-         .option("path", os.path.join(root, "orders"))
-         .saveAsTable(t_orders))
-        (load(spark, sf_dir, "customer")
-         .select("c_custkey", "c_nationkey")
-         .write.mode("overwrite").format("parquet")
-         .bucketBy(8, "c_custkey").sortBy("c_custkey")
-         .option("path", os.path.join(root, "customer"))
-         .saveAsTable(t_cust))
-    o, c = spark.table(t_orders), spark.table(t_cust)
+    Each side is a core.tables.bucketed_table: external catalog tables
+    over layouts of the source's current generation, so a table
+    regenerated in place gets new tables, and each side is recreated on
+    its own when missing.  Bucket count 8 is the demo scale; production
+    sizes buckets so one bucket ≈ one executor-core's working set."""
+    o = spark.table(bucketed_table(spark, sf_dir, "orders", "o_custkey"))
+    c = spark.table(bucketed_table(spark, sf_dir, "customer", "c_custkey"))
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_nationkey").alias("nationkey"))

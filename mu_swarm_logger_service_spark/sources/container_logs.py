@@ -13,59 +13,43 @@ Line format (Docker's timestamped multiplexed log stream):
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core.registry import query
-from ..core.tables import load, stat_sig_str
+from ..core.tables import layout, load
 
 _LINE_RE = r"^(\S+) (stdout|stderr) (.*)$"
 
 
 def container_logs_text_dir(spark: SparkSession, sf_dir: str) -> str:
     """Synthesize the raw log stream from the events table (deterministic:
-    error events → stderr, everything else → stdout)."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_container_logs_" + sf_dir.strip("/").replace("/", "_"),
-    )
-    # Marker carries the source stat signature: regenerating the
-    # fixture in place must be a cache MISS (core.tables.stat_sig).
-    # v4 (class I: a NULL ts renders as the '-' missing marker — the CLF
-    # convention; concat_ws used to DROP the null timestamp token, which
-    # shifted 'stdout' into the timestamp slot and crashed the ANSI
-    # re-parse).  Mint-logic version rides the marker, so a CHANGE to the
-    # line-synthesis code (e.g. the r9 null-safe value rendering)
-    # invalidates dirs built by older logic, not just older data.
-    marker = os.path.join(
-        out, "_DONE_V4_SRC_" + stat_sig_str(sf_dir, "events"))
-    if os.path.exists(marker):
-        return out
-    # no marker → any existing dir is a partial write from a crashed run
-    import shutil
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(out + ".tmp", ignore_errors=True)
-    ev = load(spark, sf_dir, "events")
-    line = F.concat_ws(
-        " ",
-        F.coalesce(F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"),
-                   F.lit("-")),
-        F.when(F.col("event_type") == "error", "stderr").otherwise("stdout"),
-        F.concat(F.lit("evt="), F.col("event_id").cast("string"),
-                 F.lit(" type="),
-                 F.coalesce(F.col("event_type"), F.lit("null")),
-                 F.lit(" value="),
-                 F.coalesce(F.col("value").cast("string"), F.lit("null"))),
-    )
-    ev.select(line.alias("value")).coalesce(4).write.mode("overwrite").text(
-        out + ".tmp"
-    )
-    os.rename(out + ".tmp", out)
-    open(marker, "w").close()
-    return out
+    error events → stderr, everything else → stdout): a core.tables.layout,
+    minted once per events generation.  The mint-logic version rides the
+    layout name (v4, class I: a NULL ts renders as the '-' missing marker
+    — the CLF convention; concat_ws used to DROP the null timestamp
+    token, which shifted 'stdout' into the timestamp slot and crashed the
+    ANSI re-parse), so a change to the line-synthesis code invalidates
+    dirs built by older logic, not just older data."""
+
+    def write(d: str) -> None:
+        ev = load(spark, sf_dir, "events")
+        stamp = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
+        line = F.concat_ws(
+            " ",
+            F.coalesce(stamp, F.lit("-")),
+            F.when(F.col("event_type") == "error", "stderr")
+            .otherwise("stdout"),
+            F.concat(F.lit("evt="), F.col("event_id").cast("string"),
+                     F.lit(" type="),
+                     F.coalesce(F.col("event_type"), F.lit("null")),
+                     F.lit(" value="),
+                     F.coalesce(F.col("value").cast("string"), F.lit("null"))),
+        )
+        ev.select(line.alias("value")).coalesce(4).write.mode(
+            "overwrite").text(d)
+
+    return layout(sf_dir, "container_logs_v4", ("events",), write)
 
 
 def parse_log_lines(raw: DataFrame, value_col: str = "value") -> DataFrame:

@@ -19,16 +19,13 @@ reproduces the same mapping relationally.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core.numeric import epoch_s
 from ..core.registry import query
-from ..core.tables import load, stat_sig_str
+from ..core.tables import layout, load
 
 # [spec:Docker Engine API /events] — MapType because label keys are open.
 EVENT_SCHEMA = T.StructType([
@@ -54,49 +51,36 @@ _ACTION_SQL = ("CASE event_type "
 
 def docker_events_json_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the synthetic Docker event stream as JSONL (the engine's
-    stand-in for the daemon socket).  Idempotent per sf_dir."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_docker_events_" + sf_dir.strip("/").replace("/", "_"),
-    )
-    # Marker carries the source stat signature: regenerating the
-    # fixture in place must be a cache MISS (core.tables.stat_sig).
-    # v3 (sign-safe epoch_s mint): mint-logic version rides the marker, so a CHANGE to the
-    # line-synthesis code (e.g. the r9 null-safe value rendering)
-    # invalidates dirs built by older logic, not just older data.
-    marker = os.path.join(
-        out, "_DONE_V3_SRC_" + stat_sig_str(sf_dir, "events"))
-    if os.path.exists(marker):
-        return out
-    # no marker → any existing dir is a partial write from a crashed run
-    import shutil
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(out + ".tmp", ignore_errors=True)
-    ev = load(spark, sf_dir, "events")
-    action = F.coalesce(
-        *[F.when(F.col("event_type") == k, F.lit(v)) for k, v in _ACTION.items()]
-    )
-    docker_shaped = ev.select(F.to_json(F.struct(
-        F.lit("container").alias("Type"),
-        action.alias("Action"),
-        F.struct(
-            F.concat(F.lit("c"), F.col("user_id").cast("string")).alias("ID"),
-            F.create_map(
-                F.lit("name"), F.concat(F.lit("svc-"), F.col("user_id").cast("string")),
-                F.lit("event_id"), F.col("event_id").cast("string"),
-            ).alias("Attributes"),
-        ).alias("Actor"),
-        # sign-safe floor pair (core.numeric epoch_s): the Docker API
-        # emits unix seconds; a pre-epoch clock-garbage stamp must land
-        # on the same second in the mint and in the oracle's
-        # floor(epoch) (class H: unix_timestamp truncates, -1us -> 0).
-        epoch_s("ts").alias("time"),
-        (epoch_s("ts") * F.lit(1_000_000_000)).alias("timeNano"),
-    )).alias("value"))
-    docker_shaped.coalesce(4).write.mode("overwrite").text(out + ".tmp")
-    os.rename(out + ".tmp", out)
-    open(marker, "w").close()
-    return out
+    stand-in for the daemon socket): a core.tables.layout, minted once per
+    events generation.  The mint-logic version rides the layout name (v3:
+    sign-safe epoch_s), so a change to the line-synthesis code invalidates
+    dirs built by older logic, not just older data."""
+
+    def write(d: str) -> None:
+        ev = load(spark, sf_dir, "events")
+        action = F.coalesce(*[F.when(F.col("event_type") == k, F.lit(v))
+                              for k, v in _ACTION.items()])
+        user = F.col("user_id").cast("string")
+        docker_shaped = ev.select(F.to_json(F.struct(
+            F.lit("container").alias("Type"),
+            action.alias("Action"),
+            F.struct(
+                F.concat(F.lit("c"), user).alias("ID"),
+                F.create_map(
+                    F.lit("name"), F.concat(F.lit("svc-"), user),
+                    F.lit("event_id"), F.col("event_id").cast("string"),
+                ).alias("Attributes"),
+            ).alias("Actor"),
+            # sign-safe floor pair (core.numeric epoch_s): the Docker API
+            # emits unix seconds; a pre-epoch clock-garbage stamp must land
+            # on the same second in the mint and in the oracle's
+            # floor(epoch) (class H: unix_timestamp truncates, -1us -> 0).
+            epoch_s("ts").alias("time"),
+            (epoch_s("ts") * F.lit(1_000_000_000)).alias("timeNano"),
+        )).alias("value"))
+        docker_shaped.coalesce(4).write.mode("overwrite").text(d)
+
+    return layout(sf_dir, "docker_events_v3", ("events",), write)
 
 
 def read_docker_events(spark: SparkSession, sf_dir: str,

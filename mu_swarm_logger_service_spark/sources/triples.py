@@ -15,14 +15,11 @@ Vocabulary (mu.semte.ch conventions the reference uses [spec:mu.semte.ch]):
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.registry import query
-from ..core.tables import load
+from ..core.tables import load, round_trip
 
 GRAPH = "http://mu.semte.ch/application"
 SWARMUI = "http://swarmui.semte.ch/vocabularies/core/"
@@ -87,30 +84,22 @@ def q_sink_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back → per-predicate audit.  The oracle rebuilds the triples
     relationally, value-checking IRI minting, literal formatting, and sink
     round-trip fidelity."""
-    sink = os.path.join(tempfile.gettempdir(), "spark_graft_triple_sink")
     triples = events_to_triples(load(spark, sf_dir, "events"))
     # predicate-partitioned layout: queries touching one predicate (the
     # SPARQL access pattern) prune 3/4 of the data at the directory level.
     part = triples.withColumn(
         "p_part", F.regexp_replace("p", "[^a-zA-Z]", "_"))
-    # Pin static overwrite AT THE WRITE (overrides session conf): the sink
-    # path is fixed, so a session left in dynamic partition-overwrite mode
-    # (e.g. by a rollup upsert) must not turn an empty-source overwrite
-    # into a no-op that serves a previous run's partitions.
-    (part.write.mode("overwrite")
-     .option("partitionOverwriteMode", "static")
-     .partitionBy("p_part").parquet(sink))
     # class K: read back with the WRITER's schema — a zero-row source
     # writes a layout with no part files, which schema inference cannot
     # read (UNABLE_TO_INFER_SCHEMA).  Every sink→read-back pair carries
     # its schema explicitly.
-    back = spark.read.schema(part.schema).parquet(sink)
-    return (
-        back.groupBy("p")
+    return round_trip(
+        "triple_sink",
+        lambda d: part.write.mode("overwrite").partitionBy("p_part").parquet(d),
+        lambda d: spark.read.schema(part.schema).parquet(d).groupBy("p")
         .agg(F.count(F.lit(1)).alias("n"),
              F.countDistinct("s").alias("n_subjects"),
-             F.min("o").alias("min_o"), F.max("o").alias("max_o"))
-    )
+             F.min("o").alias("min_o"), F.max("o").alias("max_o")))
 
 
 @query("q_triples_bgp", oracle=f"""

@@ -26,8 +26,6 @@ per-key state; swap APIs when the dependency is available.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..core.numeric import dsum_sql, measure
 from ..core.registry import query
-from ..core.tables import load, unpersist_cp
+from ..core.tables import layout, load, round_trip, unpersist_cp
 from . import transforms as X
 
 _TUMBLING_SQL = f"""
@@ -274,9 +272,9 @@ def _run_available_now(stream: DataFrame, backlog: str | None, *,
     data now).  Otherwise ``write_batch(bdf, batch_id, sink)`` is the
     ``foreachBatch`` body, ``sink`` an empty temp directory, and the
     result is ``read_back(sink)``.  The checkpoint and sink live under one
-    temp dir named after ``name`` (a state-schema version rides it, see
-    stateful.BURST_STATE_VERSION) and are removed in ``finally`` — a
-    failed stream leaks nothing.
+    core.tables.round_trip directory named after ``name`` (a state-schema
+    version rides it, see stateful.BURST_STATE_VERSION), removed in
+    ``finally`` — a failed stream leaks nothing.
 
     State partitions (r12/r13, guide §2.2): streaming stages have no AQE
     (Spark disables it for stateful workloads), so a stateful stream
@@ -309,33 +307,33 @@ def _run_available_now(stream: DataFrame, backlog: str | None, *,
     parent's runtime SQL conf, and the parent's listeners and catalog
     never see its streams."""
     spark = stream.sparkSession
-    root = tempfile.mkdtemp(prefix=f"spark_graft_{name}_")
-    sink = os.path.join(root, "sink")
-    os.makedirs(sink)
-    writer = (stream.writeStream.outputMode(output_mode)
-              .option("checkpointLocation", os.path.join(root, "ckpt")))
-    table = None
-    if write_batch is None:
-        table = f"t_{uuid.uuid4().hex[:12]}"
-        writer = writer.format("memory").queryName(table)
-    else:
-        writer = writer.foreachBatch(
-            lambda bdf, batch_id: write_batch(bdf, batch_id, sink))
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    try:
+    table = None if write_batch is not None else f"t_{uuid.uuid4().hex[:12]}"
+
+    def drain(root: str) -> None:
+        sink = os.path.join(root, "sink")
+        os.makedirs(sink)
+        writer = (stream.writeStream.outputMode(output_mode)
+                  .option("checkpointLocation", os.path.join(root, "ckpt")))
+        if table is not None:
+            writer = writer.format("memory").queryName(table)
+        else:
+            writer = writer.foreachBatch(
+                lambda bdf, batch_id: write_batch(bdf, batch_id, sink))
+        key = "spark.sql.shuffle.partitions"
+        prev = spark.conf.get(key)
         spark.conf.set(key, str(_state_partitions(
             spark, None if backlog is None else _backlog_bytes(backlog))))
         try:
             writer.trigger(availableNow=True).start().awaitTermination()
         finally:
             spark.conf.set(key, prev)
-        out = spark.table(table) if table else read_back(sink)
-        return out.localCheckpoint(eager=True)
+
+    try:
+        return round_trip(name, drain, lambda root: spark.table(table)
+                          if table else read_back(os.path.join(root, "sink")))
     finally:
         if table is not None:
             spark.catalog.dropTempView(table)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _run_snapshots(stream: DataFrame, backlog: str, key: str, finish,
@@ -511,36 +509,32 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stage the source as TWO file groups so the rollup genuinely
     # increments across micro-batches (maxFilesPerTrigger=1 → ≥2
     # triggers).  ONE pass (r13, guide §1.2 "don't compute things
-    # twice"): partitionBy(half) writes both halves from a single scan —
-    # the previous two filtered writes each re-scanned events.  The
-    # written files carry exactly ev's columns (the half partition
+    # twice"): partitionBy(half) writes both halves from a single scan.
+    # The written files carry exactly ev's columns (the half partition
     # column stays in the directory name), and the stream reads the
-    # half=* glob with ev's schema, so batch contents are unchanged.
+    # half=* glob with ev's schema, so batch contents are unchanged.  The
+    # staged source is a core.tables.layout: written once per events
+    # generation, not per call.
     from ..core.tables import observed_time
     ev = observed_time(load(spark, sf_dir, "events"))  # class I: the
     # store is day-partitioned — an unstamped row has no partition
-    src = tempfile.mkdtemp(prefix="spark_graft_rollup_src_")
-    try:
-        (ev.withColumn("half", F.col("event_id") % 2)
-         .write.mode("overwrite")  # mkdtemp pre-created (empty) src
-         .option("partitionOverwriteMode", "static")
-         .partitionBy("half").parquet(src))
-        stream = (spark.readStream.schema(ev.schema)
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(os.path.join(src, "half=*")))
-        # The store is the runner's (empty) sink dir, so it exists even
-        # when every micro-batch is empty and the upsert never writes
-        # (class K); every read carries ROLLUP_STORE_SCHEMA.
-        return _run_available_now(
-            stream, src, name="rollup",
-            write_batch=lambda bdf, batch_id, store:
-                rollup_upsert(spark, store)(bdf, batch_id),
-            read_back=lambda store: (
-                spark.read.schema(ROLLUP_STORE_SCHEMA).parquet(store)
-                .groupBy("event_date", "hour", "event_type")
-                .agg(F.sum("n").cast("long").alias("n"))))
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    src = layout(sf_dir, "rollup_src", ("events",), lambda d: ev.withColumn(
+        "half", F.col("event_id") % 2).write.mode("overwrite")
+        .partitionBy("half").parquet(d))
+    stream = (spark.readStream.schema(ev.schema)
+              .option("maxFilesPerTrigger", 1)
+              .parquet(os.path.join(src, "half=*")))
+    # The store is the runner's (empty) sink dir, so it exists even when
+    # every micro-batch is empty and the upsert never writes (class K);
+    # every read carries ROLLUP_STORE_SCHEMA.
+    return _run_available_now(
+        stream, src, name="rollup",
+        write_batch=lambda bdf, batch_id, store:
+            rollup_upsert(spark, store)(bdf, batch_id),
+        read_back=lambda store: (
+            spark.read.schema(ROLLUP_STORE_SCHEMA).parquet(store)
+            .groupBy("event_date", "hour", "event_type")
+            .agg(F.sum("n").cast("long").alias("n"))))
 
 
 from ..operators.analytics import EVENT_FINGERPRINT_ORACLE_SQL

@@ -10,7 +10,6 @@ what lets the DuckDB oracle validate streaming semantics (SURVEY.md §5.2.4).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,7 +40,7 @@ def stream_events(spark: SparkSession, sf_dir: str,
     this None there; it exists for compute-dense, few-file micro-batches.
     """
     from ..core.tables import (_normalize_events_ts, _read_events,
-                               _ship_package)
+                               _ship_package, layout)
 
     # Stateful streaming queries pickle module functions into executors the
     # same way pandas-UDF batch queries do, but a streaming query can be the
@@ -51,21 +50,16 @@ def stream_events(spark: SparkSession, sf_dir: str,
     _ship_package(spark)
     schema = _read_events(spark, sf_dir).schema
     # File stream sources need a DIRECTORY.  A directory-shaped
-    # events.parquet streams as is; a single file is staged in a directory
-    # holding a symlink to the (read-only) testdata file.  Never symlink a
+    # events.parquet streams as is; a single file is staged in a layout
+    # holding a symlink to the (read-only) testdata file, by absolute path
+    # so a relative sf_dir cannot leave it dangling.  Never symlink a
     # directory: the file source does not descend into the link and
     # streams 0 rows.
     src = f"{sf_dir}/events.parquet"
     if not os.path.isdir(src):
-        staged = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_stream_src_" + sf_dir.strip("/").replace("/", "_"),
-        )
-        os.makedirs(staged, exist_ok=True)
-        link = os.path.join(staged, "events.parquet")
-        if not os.path.exists(link):
-            os.symlink(src, link)
-        src = staged
+        events = os.path.abspath(src)
+        src = layout(sf_dir, "stream_src", ("events",), lambda d: os.symlink(
+            events, os.path.join(d, "events.parquet")))
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

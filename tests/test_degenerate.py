@@ -90,16 +90,16 @@ def test_empty_facts_parity(spark, empty_dir, duck_empty, key):
 
 def test_sink_overwrite_immune_to_dynamic_mode_leak(spark, empty_dir):
     """A session leaked into partitionOverwriteMode=dynamic (e.g. by a
-    rollup upsert) must not let a fixed-path partitioned sink keep a
-    previous run's partitions when the source is empty: the write pins
-    static mode per-writer.  (r12 find: flaky q_sink_triples empty-facts
-    parity — spark=4 stale rows vs oracle=0.)"""
+    rollup upsert) must not let a partitioned sink keep a previous run's
+    partitions when the source is empty: every call writes its sink to a
+    fresh directory (core.tables.round_trip).  (r12 find: flaky
+    q_sink_triples empty-facts parity — spark=4 stale rows vs oracle=0.)"""
     import __spark_entry__ as em
 
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, "static")
     try:
-        # Populate the fixed sink path with REAL data first...
+        # Run on REAL data first...
         em.queries()["q_sink_triples"](spark, BASE).collect()
         # ...then leak dynamic mode and re-run on the empty fixture.
         spark.conf.set(key, "dynamic")

@@ -9,10 +9,18 @@ from pyspark.sql import functions as F
 
 import mu_swarm_logger_service_spark  # noqa: F401  (registers queries)
 from mu_swarm_logger_service_spark.core.registry import QUERIES
-from mu_swarm_logger_service_spark.core.tables import load, stat_sig
+from mu_swarm_logger_service_spark.core.tables import (
+    _PER_GENERATION, load, stat_sig)
 from mu_swarm_logger_service_spark.llm import (
     clustering, dedup, multimodal, similarity)
 from mu_swarm_logger_service_spark.llm.dedup import simhash
+
+
+def _cached(spark, kind, sf_dir, table) -> bool:
+    """An admission guard's measurement is held by the shared
+    per-generation memo for the table's current generation."""
+    hit = _PER_GENERATION[spark].get((kind, sf_dir, table))
+    return hit is not None and hit[0] == stat_sig(sf_dir, table)
 
 
 @pytest.mark.parametrize("n_perm,n_bands", [(16, 4), (64, 16)])
@@ -237,7 +245,7 @@ def test_quadratic_baseline_quarantined(spark, sf_dir):
     # At the default ceiling the oracle-scale corpus is admitted (the
     # measured block size is cached per (sf_dir, file signature, bucket)).
     dedup.jaccard_half_edges(spark, sf_dir)
-    assert (sf_dir, stat_sig(sf_dir, "documents"), None) in dedup._block_max
+    assert _cached(spark, ("block_max", None), sf_dir, "documents")
 
 
 def _largest_block(spark, d):
@@ -294,7 +302,7 @@ def test_embed_near_dup_subset_guarded(spark, sf_dir):
             QUERIES["q_llm_embed_near_dup"](spark, sf_dir)
     # Default ceiling admits the oracle-scale corpus (and caches the count).
     assert QUERIES["q_llm_embed_near_dup"](spark, sf_dir).count() > 0
-    assert (sf_dir, stat_sig(sf_dir, "embeddings")) in similarity._subset_size
+    assert _cached(spark, "subset_size", sf_dir, "embeddings")
 
 
 def test_lsh_build_params_conf(spark, sf_dir, monkeypatch):
@@ -387,7 +395,7 @@ def test_semdedup_corpus_guarded(spark, sf_dir):
         with pytest.raises(ValueError, match="ANN-assisted"):
             QUERIES["q_llm_semdedup"](spark, sf_dir)
     assert QUERIES["q_llm_semdedup"](spark, sf_dir).count() > 0
-    assert (sf_dir, stat_sig(sf_dir, "embeddings")) in clustering._semdedup_size
+    assert _cached(spark, "semdedup_size", sf_dir, "embeddings")
 
 
 def test_ann_ivf_pq_recall_vs_exact(spark, sf_dir):

@@ -10,6 +10,7 @@ import re
 import pytest
 
 import __spark_entry__ as entrymod
+from mu_swarm_logger_service_spark.core.tables import bucketed_table
 
 QUERIES = entrymod.queries()
 
@@ -628,8 +629,7 @@ def test_bucketed_sink_recreates_missing_half(spark, sf_dir):
     Simulate exactly that state — drop the customer table while leaving
     orders — and assert the query transparently recreates it."""
     QUERIES["q_sink_bucketed"](spark, sf_dir).count()   # ensure both exist
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    t_cust = f"bkt_customer_{tag}"
+    t_cust = bucketed_table(spark, sf_dir, "customer", "c_custkey")
     spark.sql(f"DROP TABLE {t_cust}")
     assert not spark.catalog.tableExists(t_cust)
     assert QUERIES["q_sink_bucketed"](spark, sf_dir).count() > 0

@@ -63,7 +63,8 @@ def test_no_custom_session_conf_or_fixed_name_views():
     views are the table views of the SQL entry point — query bodies pass
     DataFrames to ``spark.sql`` as parameters instead of registering a
     fixed name two concurrent queries would share.  Session conf is
-    written (``conf.set``/``conf.unset``) only by the stream runner."""
+    written (``conf.set``/``conf.unset``) only by the stream runner, in
+    ``drain``, the write step it hands to ``core.tables.round_trip``."""
     keys, views, conf_writes = [], set(), set()
     for rel, func, node in _package_nodes():
         if (isinstance(node, ast.Constant) and isinstance(node.value, str)
@@ -80,8 +81,32 @@ def test_no_custom_session_conf_or_fixed_name_views():
             conf_writes.add((rel, func))
     assert not keys, keys
     assert views == {("core/tables.py", "register_views")}, views
-    assert conf_writes <= {("streaming/queries.py", "_run_available_now")}, \
-        conf_writes
+    assert conf_writes <= {("streaming/queries.py", "drain")}, conf_writes
+
+
+_FILE_CALLS = {("tempfile", "gettempdir"), ("tempfile", "mkdtemp"),
+               ("os", "rename")}
+
+
+def test_query_files_only_through_layout_and_round_trip():
+    """Structural lock: a query's files live where core/tables puts them.
+    Temp directories are named (``tempfile.gettempdir``/``mkdtemp``) and
+    published (``os.rename``) only by ``layout`` (files derived once per
+    source generation), ``round_trip`` (files written fresh per call) and
+    ``_ship_package`` — never by a query body with its own fixed path,
+    marker file or rename."""
+    sites = set()
+    for rel, func, node in _package_nodes():
+        if isinstance(node, ast.ImportFrom) and node.module == "tempfile":
+            sites.add((rel, func))
+        if (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and isinstance(node.func.value, ast.Name)
+                and (node.func.value.id, node.func.attr) in _FILE_CALLS):
+            sites.add((rel, func))
+    assert sites <= {("core/tables.py", "layout"),
+                     ("core/tables.py", "round_trip"),
+                     ("core/tables.py", "_ship_package")}, sites
 
 
 def test_default_parallelism_read_only_by_the_pinning_helpers():
